@@ -16,10 +16,11 @@ import graft.snapshots.SnapshotStore
   */
 object Bench {
 
-  private def session(cores: Int): SparkSession = {
+  /** The measurement session; BenchExtra shares it under its own app name. */
+  private[graft] def session(cores: Int, app: String = "graft-bench"): SparkSession = {
     val b = SparkSession.builder()
       .master(s"local[$cores]")
-      .appName(s"graft-bench-$cores")
+      .appName(s"$app-$cores")
       // FIXED at 32 for every level (not = cores): shuffle.partitions is
       // sized to the DATA, and a real N->4N scale-up does not change it.
       // It also keeps the candidate pipeline's groupBy(canon) output

@@ -1,10 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Optimization-round measurement harness (guide §1): times SELECTED catalog
-  * queries with the noop sink under the SAME session config as the official
-  * bench (local[$SPARK_GRAFT_CPUS], shuffle.partitions=32, AQE on), with
+  * queries with the noop sink under the official bench's own session
+  * (`Bench.session`: local[$SPARK_GRAFT_CPUS], shuffle.partitions=32, AQE on), with
   * optional repetitions, and dumps `.explain("formatted")` per query.
   *
   * This is a SEPARATE main from graft.Bench — the official harness is frozen.
@@ -12,22 +10,6 @@ import org.apache.spark.sql.SparkSession
   * Usage: runMain graft.BenchExtra [--reps N] [--plans DIR] <query>... | all
   */
 object BenchExtra {
-
-  private def session(cores: Int): SparkSession = {
-    val b = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-benchextra-$cores")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-    if (new java.io.File("/dev/shm").isDirectory)
-      b.config("spark.local.dir", "/dev/shm/graft-spark-local")
-    val s = b.getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
 
   def main(args: Array[String]): Unit = {
     var reps = 1
@@ -49,7 +31,7 @@ object BenchExtra {
         SparkEntry.queries.toSeq.sortBy(_._1).filterNot(q => skip(q._1))
       else names.map(n => n -> SparkEntry.queries(n))
 
-    val spark = session(cpus)
+    val spark = Bench.session(cpus, "graft-benchextra")
     try {
       // same warmup as the official query phase
       (1 to 2).foreach { _ =>

@@ -71,8 +71,8 @@ object Queries {
     "j1_zip_join" -> ((s, dir) => {
       // positional zip join (reference J1, writeiFile:270-288): pair the
       // i-th lineitem per order by shipdate with the i-th by price.
-      // KEPT as two codegen'd windows + join after an A/B (ProbeJ1 + r6
-      // BenchExtra): the "one exchange" groupBy(collect_list+array_sort+
+      // KEPT as two codegen'd windows + join after an A/B (OPTIMIZATION_r06.md,
+      // j1_zip_join): the "one exchange" groupBy(collect_list+array_sort+
       // zip_with) form is row-identical but ~2x SLOWER here — groups
       // average ~4 rows, so the narrow-row window shuffles are cheap while
       // ObjectHashAggregate list building + the interpreted zip_with lambda

@@ -3,6 +3,7 @@ package graft.frontier
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
@@ -20,11 +21,7 @@ case class EngineConfig(
     perHostBudget: Int = 4,      // max fetches per host per round (politeness)
     seenShards: Int = 32,        // seen-set bucket/bloom-shard count (≫ executors at scale)
     bloomCapacity: Long = 1L << 22, // TOTAL bloom capacity (items) across shards
-    bloomFpp: Double = 0.01,
-    hostShards: Int = 8,         // host_next partition count (hash on host)
     compactEvery: Int = 16,      // rewrite the full pending frontier every K rounds
-    useHeapScheduler: Boolean = false,
-    useJoinGate: Boolean = false, // robots via broadcast rules TABLE (vs native expr)
     // pending rows above this ⇒ the fetch join degrades from broadcast to
     // the storage-partitioned bucketed-graph join. Kept LOW: the broadcast
     // path collects the schedule through the driver three times per round
@@ -132,6 +129,16 @@ case class EngineConfig(
   *     as one concurrent wave.
   */
 object FrontierEngine {
+  /** Target false-positive rate of every per-shard bloom sidecar. */
+  private val BloomFpp = 0.01
+  /** host_next partition count (hash on host). */
+  private val HostShards = 8
+
+  private def scoped[T](body: RoundScope => T): T = {
+    val scope = new RoundScope
+    try body(scope) finally scope.close()
+  }
+
   // one listener per SparkContext (a level fork builds a fresh session per
   // run; a JVM-global guard would silently skip every session after the first)
   private val stageListenerOn =
@@ -182,12 +189,13 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
   private val obsToken = java.lang.Integer.toHexString(store.root.hashCode)
 
   // ---- bloom plumbing ------------------------------------------------------
-  // numBits for a per-shard capacity at cfg.bloomFpp, clamped to the same
+  // numBits for a per-shard capacity at BloomFpp, clamped to the same
   // caps BloomFilterAggregate applies from SQLConf defaults (4M items,
   // 67108864 bits) so driver-side expectations and the aggregate agree.
   private def bitsFor(capPerShard: Long): Long = {
     val n = math.min(capPerShard, 4000000L)
-    val bits = math.ceil(-n * math.log(cfg.bloomFpp) / (math.log(2) * math.log(2))).toLong
+    val bits = math.ceil(-n * math.log(FrontierEngine.BloomFpp) /
+      (math.log(2) * math.log(2))).toLong
     math.min(math.max(bits, 64L), 67108864L)
   }
   private def bloomBlobName(k: Int): String = s"seen.bloom.$k"
@@ -374,7 +382,9 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
   }
 
   /** Snapshot v0: canonical, deduped, robots-gated seed frontier. */
-  def init(seeds: Seq[String]): Unit = timed("init") {
+  def init(seeds: Seq[String]): Unit = timed("init")(FrontierEngine.scoped(initIn(_, seeds)))
+
+  private def initIn(scope: RoundScope, seeds: Seq[String]): Unit = {
     val canonSeeds = seeds.map(UrlCanon.canonicalize).distinct
       .filter(u => DocSynth.robotsAllows(UrlCanon.hostOf(u), UrlCanon.pathOf(u)))
       .sorted
@@ -389,11 +399,11 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
     // them serially cost ~8 s of fixed init latency at every level
     implicit val ec: ExecutionContext = ExecutionContext.global
     val seedBuckets = canonSeeds.toDF("canon")
-      .repartition(cfg.seenShards, $"canon").cache()
-    val manifestFut = Future(store.writeTables(0,
+      .repartition(cfg.seenShards, $"canon").transform(scope.cache)
+    val manifestFut = scope.track(Future(store.writeTables(0,
       Map("frontier" -> frontier, "host_next" -> hostNext,
           "crawl_log" -> spark.emptyDataset[graft.model.CrawlLogEntry].toDF(),
-          "lineage" -> emptyLineage)))
+          "lineage" -> emptyLineage))))
     // materialize the shared seed cache ONCE before its two consumers: the
     // cache's parent is a driver-local relation, and the seen-append and
     // seed-bloom jobs racing to parallelize it (while the link-graph build
@@ -401,13 +411,13 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
     // web (init+linkgraph 38.7 -> 18.3-19.8 s with this head job). The
     // per-round commit wave deliberately does NOT do this — see runRound.
     val seedMat = Future(seedBuckets.count())
-    val seenFut = seedMat.map(_ => seen.append(seedBuckets, 0, prePartitioned = true))
-    val bloomFut = seedMat.map(_ => writeBucketBlooms(seedBuckets, capPerShard, 0,
-      Array.fill(cfg.seenShards)(-1)))
+    val seenFut = scope.track(
+      seedMat.map(_ => seen.append(seedBuckets, 0, prePartitioned = true)))
+    val bloomFut = scope.track(seedMat.map(_ => writeBucketBlooms(seedBuckets,
+      capPerShard, 0, Array.fill(cfg.seenShards)(-1))))
     val manifest = Await.result(manifestFut, Duration.Inf)
     Await.result(seenFut, Duration.Inf)
     val written = Await.result(bloomFut, Duration.Inf)
-    seedBuckets.unpersist()
     val vers0 = Array.tabulate(cfg.seenShards)(k => if (written(k)) 0 else -1)
     store.publish(0, manifest,
       Map("seq_base" -> canonSeeds.size.toLong,
@@ -483,8 +493,13 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
       Seq("canon"), "left_anti")
   }
 
-  /** Run one round r (requires snapshot r-1 committed). Returns #scheduled. */
-  def runRound(docs: DataFrame, r: Int): Long = {
+  /** Run one round r (requires snapshot r-1 committed). Returns #scheduled.
+    * A round that fails releases what it holds before the error surfaces
+    * (see RoundScope), so a resume in the same session starts clean. */
+  def runRound(docs: DataFrame, r: Int): Long =
+    FrontierEngine.scoped(runRoundIn(_, docs, r))
+
+  private def runRoundIn(scope: RoundScope, docs: DataFrame, r: Int): Long = {
     val metrics = store.readMetrics(r - 1)
     val seqBase = metrics("seq_base")
     val seenTotal = metrics("seen_total")
@@ -513,10 +528,10 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
     val isCompaction = cfg.compactEvery > 0 && r % cfg.compactEvery == 0
     val compactFut: Option[Future[Map[String, String]]] =
       if (!isCompaction) None
-      else Some(Future {
+      else Some(scope.track(Future {
         store.writeTables(r, Map("frontier_compact" ->
           frontier.coalesce(writeWidth(pendingCount))))
-      }(ExecutionContext.global))
+      }(ExecutionContext.global)))
     val hostNext = store.read(spark, "host_next", Some(r - 1))
     val priorVer = blobVersions(r - 1)
     // one TINY broadcast per round — the per-shard blob-version manifest,
@@ -524,23 +539,20 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
     // storage into the bounded BloomRegistry cache; untouched shards keep
     // their version, so their filters stay warm across rounds. No filter
     // bytes ever cross the driver (see BloomRegistry scaladoc).
-    val descBc = spark.sparkContext.broadcast(
-      graft.functions.BloomDesc(store, priorVer))
+    val descBc = scope.keep(spark.sparkContext.broadcast(
+      graft.functions.BloomDesc(store, priorVer)))
     // shard routing = the seen-table BUCKET id (murmur3), key = xxhash64:
     // bloom shards align 1:1 with the bucketed seen table
     def mightContain(shard: Column, key: Column): Column =
       graft.functions.bloomfns.bloom_probe(shard, key, descBc)
 
     // ---- politeness schedule: per-host top-B by (depth, seq) --------------
-    // Two interchangeable, equality-tested implementations (ScheduleSpec):
-    // the declarative local-prune + exact window (default), and an explicit
-    // bounded per-host heap (the north star's "min-heap on next-fetch-time")
-    // via flatMapGroups, O(B) memory per host. The host_next join is
+    // Shuffle-free local prune + exact window (Schedulers.windowTopB): a hot
+    // host keeps at most B rows per partition, so its memory stays O(B) per
+    // partition however deep its backlog. The host_next join is
     // adaptive on the committed host count — at 10^8 hosts an unconditional
     // broadcast would build a multi-GB table on the driver every round.
-    val topB =
-      if (cfg.useHeapScheduler) Schedulers.heapTopB(frontier, cfg.perHostBudget)
-      else Schedulers.windowTopB(frontier, cfg.perHostBudget)
+    val topB = Schedulers.windowTopB(frontier, cfg.perHostBudget)
     def maybeBcHosts(df: DataFrame): DataFrame =
       if (hostsTotal <= cfg.broadcastHostLimit) broadcast(df) else df
     val schedObs = Observation(s"sched_${obsToken}_r$r")
@@ -550,7 +562,7 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
       .withColumn("delay", crawl_delay($"host").cast("long"))
       .withColumn("fetchTime", $"next_time" + ($"rank" - 1) * $"delay")
       .observe(schedObs, count(lit(1)).as("n"))
-      .cache()
+      .transform(scope.cache)
 
     // ---- "fetch": join the schedule against the link graph.
     // The 100 TB doc table is scanned EXACTLY ONCE PER CRAWL — the
@@ -611,7 +623,7 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
           .select($"canon", $"host", $"depth", $"seq", $"fetchTime",
                   $"doc_id".isNotNull.as("hit"))
       }
-    ).cache()
+    ).transform(scope.cache)
     val crawlLogRound = fetched
       .select(lit(r).as("round"), $"fetchTime", $"host", $"canon",
               $"depth", $"seq",
@@ -630,7 +642,7 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
       .groupBy($"canon2".as("canon"))
       .agg((min($"depth") + 1).as("depth"))
       .observe(linksObs, count(lit(1)).as("n"))
-      .cache()
+      .transform(scope.cache)
 
     // ---- dedup: per-shard bloom fast path + exact anti-join vs the
     // BUCKETED seen table. Bloom has no false negatives ⇒ !might_contain
@@ -648,29 +660,12 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
       .unionByName(withKey.filter(!mightContain($"bshard", $"key")))
 
     // ---- robots gate (blocked URLs enter seen, never the frontier) --------
-    // Two equality-tested implementations:
-    //   default — native codegen'd `robots_allows` expression (rule source
-    //   pluggable behind GateExprHelper);
-    //   useJoinGate — robots rules as DATA: a per-host rules table
-    //   (host → disallow_prefix) broadcast-joined to the candidates, the
-    //   shape a production robots store needs (rules fetched/refreshed
-    //   independently, joined by host; the gate predicate itself stays
-    //   codegen'd column ops). Rules here derive from the candidates' own
-    //   distinct hosts; a real deployment reads the robots store table.
-    val gatedBase = freshRaw
+    // The native codegen'd `robots_allows` expression; its rule source is
+    // pluggable behind GateExprHelper.
+    val gated = freshRaw
       .withColumn("host", url_host($"canon"))
       .withColumn("path", url_path($"canon"))
-    val gated =
-      if (!cfg.useJoinGate) gatedBase.withColumn("allowed", robots_allows($"host", $"path"))
-      else {
-        val rules = gatedBase.select($"host").distinct().as[String]
-          .map(h => (h, DocSynth.disallowPrefix(h)))
-          .toDF("host", "disallow_prefix")
-        gatedBase.join(broadcast(rules), Seq("host"), "left")
-          .withColumn("allowed",
-            $"disallow_prefix".isNull || !$"path".startsWith($"disallow_prefix"))
-          .drop("disallow_prefix")
-      }
+      .withColumn("allowed", robots_allows($"host", $"path"))
     // fresh = the round's genuinely-new canons (allowed AND blocked — both
     // enter the seen set), tagged with their seq shard. Cached slim: it
     // feeds the metrics agg, the seen append, the bloom delta, and the
@@ -678,7 +673,7 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
     val fresh = gated
       .withColumn("seqshard", pmod(xxhash64($"canon"), lit(UrlCanon.SeqShards.toLong)))
       .select($"canon", $"host", $"depth", $"allowed", $"seqshard")
-      .cache()
+      .transform(scope.cache)
 
     // ---- ONE metrics action for the whole round ---------------------------
     // The 64-row per-seqshard aggregation is the round's only collect: it
@@ -731,7 +726,7 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
         }
       }
     val newEntries = newRdd.toDF("canon", "host", "depth", "seq", "discovered_round")
-      .cache()
+      .transform(scope.cache)
 
     // ---- state updates -----------------------------------------------------
     // frontier DELTA: this round's discoveries only, every round — a
@@ -748,7 +743,8 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
       .observe(hostsObs, count(lit(1)).as("n"))
       // partitioned rewrite — never a coalesce(1) single-task table write
       // (at 10^8 hosts a one-task rewrite is a per-round serial choke)
-      .repartition(cfg.hostShards, pmod(xxhash64($"host"), lit(cfg.hostShards)))
+      .repartition(FrontierEngine.HostShards,
+        pmod(xxhash64($"host"), lit(FrontierEngine.HostShards)))
 
     // per-host lineage for this round (north rule: per-partition lineage);
     // written with its natural (AQE-coalesced) partitioning — no
@@ -792,13 +788,13 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
     // both consume this bucket-partitioned cache (partition id == bucket id
     // == bloom shard id), so the bloom update costs no shuffle of its own
     val freshBuckets = fresh.select($"canon")
-      .repartition(cfg.seenShards, $"canon").cache()
+      .repartition(cfg.seenShards, $"canon").transform(scope.cache)
     // each branch returns (capacity, per-shard blob versions to publish):
     // delta writes advance only the touched shards to r, rebuilds advance
     // every shard — the manifest is what the NEXT round's probe reads
     def deltaVers(written: Set[Int]): Array[Int] =
       Array.tabulate(cfg.seenShards)(k => if (written(k)) r else priorVer(k))
-    val bloomFut: Future[(Long, Array[Int])] = Future {
+    val bloomFut: Future[(Long, Array[Int])] = scope.track(Future {
       timed("bloom") {
         if (nNew + blockedCount == 0) (capPerShard, priorVer)
         else if (capPerShard >= 4000000L) {
@@ -832,10 +828,10 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
           (capPerShard, deltaVers(writeBucketBlooms(freshBuckets, capPerShard, r, priorVer)))
         }
       }
-    }
-    val seenFut: Future[Unit] = Future {
+    })
+    val seenFut: Future[Unit] = scope.track(Future {
       timed("seen")(seen.append(freshBuckets, r, prePartitioned = true))
-    }
+    })
     val manifest = timed("commit") {
       store.writeTables(r,
         Map("frontier" -> frontierOut.coalesce(writeWidth(nNew)),
@@ -859,10 +855,6 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
           "frontier_base" -> newBase,
           "hosts_total" -> hostsTotalNew),
       bloomVersProp(versOut)))
-    scheduled.unpersist(); fetched.unpersist()
-    links.unpersist(); fresh.unpersist(); freshBuckets.unpersist()
-    newEntries.unpersist()
-    descBc.destroy()
     nScheduled
   }
 
@@ -887,5 +879,28 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
       if (n > 0) { last = r; r += 1 } else continue = false
     }
     last
+  }
+}
+
+/** What one round (or init) holds until it ends: the frames it cached, the
+  * broadcasts it made and the background jobs it started. `close` runs in
+  * a `finally`: it first waits for every tracked job — after a failure the
+  * round's other commit-wave writes may still be appending to the store,
+  * and a resume in the same session must not race them — then unpersists
+  * and destroys. Registration happens on the round's own thread only.
+  */
+private[frontier] final class RoundScope {
+  private val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+  private val broadcasts = scala.collection.mutable.ArrayBuffer.empty[Broadcast[_]]
+  private val jobs = scala.collection.mutable.ArrayBuffer.empty[Future[_]]
+
+  def cache(df: DataFrame): DataFrame = { frames += df; df.cache() }
+  def keep[T](b: Broadcast[T]): Broadcast[T] = { broadcasts += b; b }
+  def track[T](f: Future[T]): Future[T] = { jobs += f; f }
+
+  def close(): Unit = {
+    jobs.foreach(Await.ready(_, Duration.Inf))
+    frames.foreach(_.unpersist())
+    broadcasts.foreach(_.destroy())
   }
 }

@@ -4,10 +4,10 @@ import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-/** Two independent implementations of the politeness selection — per-host
-  * top-B pending URLs by (depth, seq) with the rank that positions each
-  * fetch on the host's logical clock. Both must produce identical output
-  * (ScheduleSpec); the engine picks via EngineConfig.useHeapScheduler.
+/** The politeness selection — per-host top-B pending URLs by (depth, seq)
+  * with the rank that positions each fetch on the host's logical clock.
+  * ScheduleSpec checks it against a plain-Scala group/sort/take reference
+  * on a skewed frontier.
   *
   * input:  frontier (canon, host, depth, seq, discovered_round)
   * output: (canon, host, depth, seq, discovered_round, rank) with rank 1..B
@@ -44,41 +44,7 @@ object Schedulers {
       .toDF()
       .withColumn("rank", row_number().over(w2)).filter(col("rank") <= budget)
   }
-
-  /** Imperative form: an explicit bounded selection heap per host
-    * (flatMapGroups). Keeps only the best B entries in a size-B MAX-heap
-    * (evict the worst on overflow), so memory is O(B) per host no matter
-    * how deep a hot host's backlog is — the property a real frontier needs
-    * when one host has 10^7 pending URLs. Output is identical to the
-    * window form (ranks 1..B in (depth, seq) order per host).
-    */
-  def heapTopB(frontier: DataFrame, budget: Int): DataFrame = {
-    implicit val inEnc = Encoders.product[SchedIn]
-    implicit val outEnc = Encoders.product[SchedOut]
-    implicit val strEnc = Encoders.STRING
-    val ds = frontier
-      .select(col("canon"), col("host"), col("depth"), col("seq"),
-        col("discovered_round"))
-      .as[SchedIn]
-    // worst-first ordering for the eviction heap: LARGEST (depth, seq) on top
-    val worstFirst: Ordering[SchedIn] = Ordering.by(e => (e.depth, e.seq))
-    ds.groupByKey(_.host)
-      .flatMapGroups { (_: String, it: Iterator[SchedIn]) =>
-        val heap = scala.collection.mutable.PriorityQueue.empty[SchedIn](worstFirst)
-        it.foreach { e =>
-          if (heap.size < budget) heap.enqueue(e)
-          else if (worstFirst.lt(e, heap.head)) { heap.dequeue(); heap.enqueue(e) }
-        }
-        val best: Seq[SchedIn] = heap.dequeueAll.reverse.toSeq
-        best.iterator.zipWithIndex.map { case (e: SchedIn, i: Int) =>
-          SchedOut(e.canon, e.host, e.depth, e.seq, e.discovered_round, i + 1)
-        }
-      }
-      .toDF()
-  }
 }
 
 private[frontier] case class SchedIn(canon: String, host: String, depth: Int,
                                      seq: Long, discovered_round: Int)
-private[frontier] case class SchedOut(canon: String, host: String, depth: Int,
-                                      seq: Long, discovered_round: Int, rank: Int)

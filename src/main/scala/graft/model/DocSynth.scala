@@ -125,9 +125,8 @@ object DocSynth extends Serializable {
   /** Robots rules: hosts h % 4 == 1 disallow the /private/ subtree.
     * (Reference analog: blacklist gating, Util.getFilteredList:144-150 +
     * robots-flag parsing, CDXRecordExtractorOutput.parseRobotInstructions:474-494.)
-    * Exposed BOTH as a predicate (native-expression gate) and as per-host
-    * rule DATA (`disallowPrefix`, the broadcast-rules-table gate) — the two
-    * engine gate modes must agree by construction.
+    * The predicate is defined over per-host rule DATA (`disallowPrefix`), so
+    * the engine's `robots_allows` gate and the oracle share one rule source.
     */
   def robotsAllows(host: String, path: String): Boolean = {
     val p = disallowPrefix(host)

@@ -102,7 +102,10 @@ class SnapshotStore(val root: String,
         name -> p
       }
     }
-    futs.map(Await.result(_, Duration.Inf)).toMap
+    // every write settles before the first failure surfaces: a caller that
+    // resumes after the error must not race a sibling write still running
+    futs.foreach(Await.ready(_, Duration.Inf))
+    futs.map(_.value.get.get).toMap
   }
 
   /** Atomically publish snapshot `v` (metadata rename LAST — readers see

@@ -1,11 +1,13 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.frontier.{EngineConfig, FrontierEngine}
 import graft.model.DocSynth
 import graft.oracle.OracleCrawler
-import graft.snapshots.SnapshotStore
+import graft.snapshots.{HadoopStorage, SnapshotStore}
+import org.apache.spark.graft.ListenerDrain
 
 /** The north-rule equality gate: the Spark BSP frontier must produce the
   * EXACT crawl order and URL-seen set of the single-threaded oracle under
@@ -148,19 +150,38 @@ class FrontierEqualitySpec extends SparkSuite {
     docs.unpersist()
   }
 
-  test("broadcast-rules-table robots gate (useJoinGate) ≡ oracle") {
-    val store = freshStore()
-    val engine = new FrontierEngine(spark, store,
-      EngineConfig(perHostBudget = budget, useJoinGate = true))
+  test("a round that fails in its commit wave leaks no caches or jobs; resume ≡ oracle") {
+    // round 1 fails twice before it succeeds: first its bloom sidecar writes
+    // fail (one attempt, no retry) after the table writes, then its table
+    // writes fail while the seen append and bloom update are still running
+    val root = Files.createTempDirectory("graft-fail").toString
     val docs = DocSynth.docs(spark, cfg).toDF().cache()
-    engine.run(docs, DocSynth.seeds(cfg), 5)
-    val sparkLog = engine.crawlLog()
+    docs.count() // the test's own cache, materialized before the baseline
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.size
+    val healthy = new SnapshotStore(root)
+    def failRoundOne(store: SnapshotStore): Unit = {
+      val engine = new FrontierEngine(spark, store, EngineConfig(perHostBudget = budget))
+      intercept[Exception] { engine.run(docs, DocSynth.seeds(cfg), rounds) }
+      assert(healthy.currentVersion === Some(0), "the failed round must not publish")
+      ListenerDrain(spark.sparkContext)
+      assert(spark.sparkContext.getPersistentRDDs.size <= cachedBefore,
+        "the failed round left cached frames behind")
+      assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty,
+        "the failed round left jobs running")
+    }
+    failRoundOne(new SnapshotStore(root, retryAttempts = 1, storage = new RoundOneBlobFailure))
+    failRoundOne(new RoundOneTableFailure(root))
+
+    val resumed = new FrontierEngine(spark, healthy, EngineConfig(perHostBudget = budget))
+    resumed.run(docs, DocSynth.seeds(cfg), rounds)
+    val sparkLog = resumed.crawlLog()
       .select($"round", $"fetchTime", $"host", $"canon", $"depth", $"seq", $"status")
       .as[(Int, Long, String, String, Int, Long, Int)].collect().toVector
-    val o = OracleCrawler.crawl(DocSynth.localDocs(cfg), DocSynth.seeds(cfg), budget, 5)
+    val o = OracleCrawler.crawl(DocSynth.localDocs(cfg), DocSynth.seeds(cfg), budget, rounds)
     assert(sparkLog === o.log.map(e =>
-      (e.round, e.fetchTime, e.host, e.canon, e.depth, e.seq, e.status)))
-    assert(engine.seenSet().select($"canon").as[String].collect().toSet === o.seen)
+      (e.round, e.fetchTime, e.host, e.canon, e.depth, e.seq, e.status)),
+      "crawl resumed after a failed round diverges from oracle")
+    assert(resumed.seenSet().select($"canon").as[String].collect().toSet === o.seen)
     docs.unpersist()
   }
 
@@ -198,4 +219,18 @@ class FrontierEqualitySpec extends SparkSuite {
     assert(sample.nonEmpty)
     sample.foreach { d => assert(d.spans === local(d.doc_id).spans, d.doc_id) }
   }
+}
+
+/** Healthy storage except that every sidecar blob write of round 1 fails. */
+class RoundOneBlobFailure extends HadoopStorage {
+  override def writeBytes(path: String, bytes: Array[Byte]): Unit =
+    if (path.contains("/blobs/v1/")) throw new java.io.IOException(s"injected: $path")
+    else super.writeBytes(path, bytes)
+}
+
+/** Healthy store except that round 1's table writes fail at once. */
+class RoundOneTableFailure(root: String) extends SnapshotStore(root) {
+  override def writeTables(v: Int, tables: Map[String, DataFrame]): Map[String, String] =
+    if (v == 1) throw new java.io.IOException("injected: table writes of v1")
+    else super.writeTables(v, tables)
 }
