@@ -35,8 +35,7 @@ case class EngineConfig(
   *
   * Each round is TWO Spark job waves:
   *   wave 1 — ONE metrics action: read snapshot r-1 → schedule (per-host
-  *   top-B by (depth,seq), shuffle-free local prune + exact window) →
-  *   "fetch" (join the
+  *   top-B by (depth,seq), one window) → "fetch" (join the
   *   small schedule against the once-per-crawl link graph) → extract +
   *   resolve + canonicalize links (native Catalyst expressions) →
   *   bloom-prune (per-shard `bloom_probe`) → EXACT LEFT-ANTI join vs the
@@ -103,10 +102,10 @@ case class EngineConfig(
   *     a crawl's lifetime — until the per-shard clamp (4M items, matching
   *     BloomFilterAggregate's SQLConf cap) binds, at which point rebuilds
   *     stop and the fix is more shards (warned).
-  *   - per-host skew (hot hosts with 10^7 pending URLs) is broken by a
-  *     shuffle-free local prune: each existing partition sorts in place and
-  *     keeps at most B rows per host, so a hot host contributes
-  *     ≤ partitions×B rows to the exact per-host top-B window in phase 2
+  *   - per-host skew (hot hosts with 10^7 pending URLs) is broken by
+  *     Spark's partial WindowGroupLimit: before the host exchange each
+  *     partition keeps at most B rows per host, so a hot host contributes
+  *     ≤ partitions×B rows to the exact per-host top-B window
   *     (Schedulers.windowTopB).
   *   - the corpus is projected ONCE PER CRAWL to a (doc_id, links) link
   *     graph, written as a BUCKETED table CLUSTERED BY doc_id; per-round
@@ -123,16 +122,34 @@ case class EngineConfig(
   *     round runs exactly ONE collect-style action (the 64-row per-shard
   *     metrics agg; schedule/candidate/host counts ride the same job as
   *     `observe` metrics), discovery seqs are assigned with NO extra jobs
-  *     (per-shard offsets from that same agg + an identity-partitioned
-  *     local sort, replacing range-sample + zipWithIndex's two jobs), and
-  *     the entire commit (5 table writes, seen append, bloom update) runs
-  *     as one concurrent wave.
+  *     (per-shard offsets from that same agg + a shard-partitioned local
+  *     sort, replacing range-sample + zipWithIndex's two jobs), and the entire
+  *     commit (5 table writes, seen append, bloom update) runs as one
+  *     concurrent wave. The round's own partitionings follow its rows
+  *     (`writeWidth`; one aggregation each for host_next and lineage).
   */
 object FrontierEngine {
   /** Target false-positive rate of every per-shard bloom sidecar. */
   private val BloomFpp = 0.01
-  /** host_next partition count (hash on host). */
-  private val HostShards = 8
+
+  // DDL of the snapshot tables a round reads back: a read that names its
+  // schema runs no parquet schema-inference job (one 1-task job per read)
+  private val FrontierSchema =
+    "canon STRING, host STRING, depth INT, seq BIGINT, discovered_round INT"
+  private val HostNextSchema = "host STRING, next_time BIGINT"
+  private val CrawlLogSchema = "round INT, fetchTime BIGINT, host STRING, " +
+    "canon STRING, depth INT, seq BIGINT, status INT"
+
+  /** The schedule's skew bound (Schedulers.windowTopB) exists only while
+    * the budget is within the group-limit threshold (-1 turns it off);
+    * past it a hot host's whole backlog would shuffle to one task. */
+  private def requireScheduleLimit(spark: SparkSession, budget: Int): Unit = {
+    val key = "spark.sql.optimizer.windowGroupLimitThreshold"
+    val threshold = spark.conf.get(key).toInt
+    require(threshold >= 0 && budget <= threshold,
+      s"perHostBudget=$budget needs $key >= $budget (it is $threshold): the " +
+      "per-host top-B relies on Spark's partial WindowGroupLimit to bound skew")
+  }
 
   private def scoped[T](body: RoundScope => T): T = {
     val scope = new RoundScope
@@ -170,6 +187,8 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
   import spark.implicits._
 
   def storeRoot: String = store.root
+
+  FrontierEngine.requireScheduleLimit(spark, cfg.perHostBudget)
 
   private val phaseLog = sys.env.contains("SPARK_GRAFT_PHASE_LOG")
   private def timed[T](name: String)(f: => T): T = {
@@ -235,11 +254,11 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
     * 2M-rows/file divisor pinned a 4M-row crawl-log write to the 8-task
     * floor, and the stage log showed ~30 s of parquet-encode CPU forced
     * through those 8 tasks (a 7 s serial tail at local[32] — encode CPU,
-    * not file size, is what the width must parallelize). Floor 8 keeps
-    * tiny rounds at a handful of files; cap 64 bounds the per-round file
+    * not file size, is what the width must parallelize). A round under
+    * 250k rows lands one file in one task; cap 64 bounds the per-round file
     * count at any volume. */
   private def writeWidth(rows: Long): Int =
-    math.max(8, math.min(64, (rows / 250000L).toInt + 1))
+    math.min(64, (rows / 250000L).toInt + 1)
 
   /** Build + write the per-bucket bloom sidecars from a frame ALREADY
     * hash-partitioned by the seen-table bucket function (partition id ==
@@ -325,9 +344,11 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
     // rename into place atomically. A bare existence check trusted a
     // partial dir left by a crash mid-write — a resumed crawl would then
     // silently read an incomplete link graph (resume ≡ continue invariant).
+    // The staging name must not start with '.' or '_': Spark's file index
+    // ignores such paths, and the staged table would resolve empty.
     var built = false
     if (!store.storage.exists(s"$path/_SUCCESS")) timed("linkgraph") {
-      val tmp = s"${store.root}/.links.tmp"
+      val tmp = s"${store.root}/links.tmp"
       val stage = name + "_stage"
       store.storage.deleteRec(tmp)
       store.storage.deleteRec(path)
@@ -453,7 +474,7 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
     val paths = (1 to v).map(i => s"${store.root}/data/v$i/crawl_log")
       .filter(store.storage.exists)
     if (paths.isEmpty) spark.emptyDataset[graft.model.CrawlLogEntry].toDF()
-    else spark.read.parquet(paths: _*)
+    else spark.read.schema(FrontierEngine.CrawlLogSchema).parquet(paths: _*)
       .orderBy($"round", $"fetchTime", $"host", $"seq")
   }
 
@@ -479,18 +500,16 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
       "— store integrity violation (refusing to silently drop pending URLs)")
     val addPaths = (base to v).map(i => s"${store.root}/data/v$i/frontier")
       .filter(store.storage.exists)
-    val delta = spark.read.parquet(addPaths: _*)
-    val adds =
-      if (hasCompact) spark.read.parquet(compactPath).unionByName(delta)
-      else delta
+    val adds = spark.read.schema(FrontierEngine.FrontierSchema)
+      .parquet((if (hasCompact) compactPath +: addPaths else addPaths): _*)
     // the compact artifact predates round `base`'s own consumption, so the
     // anti set starts at base (legacy full-set artifacts already exclude it)
     val consumedFrom = if (hasCompact) base else base + 1
     val consumedPaths = (consumedFrom to v).map(i => s"${store.root}/data/v$i/crawl_log")
       .filter(store.storage.exists)
     if (consumedPaths.isEmpty) adds
-    else adds.join(spark.read.parquet(consumedPaths: _*).select($"canon"),
-      Seq("canon"), "left_anti")
+    else adds.join(spark.read.schema(FrontierEngine.CrawlLogSchema)
+      .parquet(consumedPaths: _*).select($"canon"), Seq("canon"), "left_anti")
   }
 
   /** Run one round r (requires snapshot r-1 committed). Returns #scheduled.
@@ -532,7 +551,8 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
         store.writeTables(r, Map("frontier_compact" ->
           frontier.coalesce(writeWidth(pendingCount))))
       }(ExecutionContext.global)))
-    val hostNext = store.read(spark, "host_next", Some(r - 1))
+    val hostNext = spark.read.schema(FrontierEngine.HostNextSchema)
+      .parquet(s"${store.root}/data/v${r - 1}/host_next")
     val priorVer = blobVersions(r - 1)
     // one TINY broadcast per round — the per-shard blob-version manifest,
     // O(shards) ints. The filters load lazily executor-side from shared
@@ -547,9 +567,9 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
       graft.functions.bloomfns.bloom_probe(shard, key, descBc)
 
     // ---- politeness schedule: per-host top-B by (depth, seq) --------------
-    // Shuffle-free local prune + exact window (Schedulers.windowTopB): a hot
-    // host keeps at most B rows per partition, so its memory stays O(B) per
-    // partition however deep its backlog. The host_next join is
+    // One exact window whose partial group limit runs before the host
+    // exchange (Schedulers.windowTopB): a hot host ships at most B rows per
+    // partition, however deep its backlog. The host_next join is
     // adaptive on the committed host count — at 10^8 hosts an unconditional
     // broadcast would build a multi-GB table on the driver every round.
     val topB = Schedulers.windowTopB(frontier, cfg.perHostBudget)
@@ -606,17 +626,16 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
     // 404s): the previous hit-join + 404-anti-join shape shuffled the
     // schedule twice more per round. Under the bound the preserved side
     // cannot be the broadcast side (BHJ builds only the non-preserved
-    // side), so the cheap two-broadcast shape stays.
+    // side), so the hit canons are broadcast back into ONE left-outer join
+    // that keeps the schedule's partitioning (a hit ∪ 404 union doubles it).
     val fetched = (
       if (small) {
         val hits = docsLinks.join(broadcast(sched),
             docsLinks("doc_id") === sched("canon"))
+          .select($"doc_id".as("canon"), lit(true).as("hit"))
+        sched.join(broadcast(hits), Seq("canon"), "left_outer")
           .select($"canon", $"host", $"depth", $"seq", $"fetchTime",
-                  lit(true).as("hit"))
-        sched.join(broadcast(hits.select($"canon")), Seq("canon"), "left_anti")
-          .select($"canon", $"host", $"depth", $"seq", $"fetchTime",
-                  lit(false).as("hit"))
-          .unionByName(hits)
+                  coalesce($"hit", lit(false)).as("hit"))
       } else {
         docsLinks.join(sched.hint("shuffle_hash"),
             docsLinks("doc_id") === sched("canon"), "right_outer")
@@ -701,12 +720,14 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
     // ---- deterministic seq assignment with NO extra jobs ------------------
     // Global order = (seqShard(canon), canon) — a FIXED 64-way hash spec
     // shared with the oracle (UrlCanon.SeqShards). Shard offsets come from
-    // the metrics agg above; an identity partitioner routes each shard to
-    // its own partition, which sorts locally (one round's slice of one of
-    // 64 shards — bounded) and numbers contiguously from its offset.
-    // (The one RDD use in the engine — FORCED: contiguous global numbering
-    // has no Dataset equivalent that avoids a one-task window or extra
-    // jobs; zipWithIndex's constructor alone costs a full pass.)
+    // the metrics agg above. The shards route to `writeWidth(nNew)`
+    // partitions (a whole shard per partition); each partition sorts
+    // locally by (shard, canon) — one round's slice of its shards, bounded —
+    // and numbers every shard contiguously from its offset.
+    // (An RDD, not a window: the cache is then built from an RDD whose plan
+    // does not reference the seen table, so the seen append's cache refresh
+    // — it recaches every plan that reads the table it wrote — cannot drop
+    // it while its commit-wave consumers still run.)
     val offsets = new Array[Long](UrlCanon.SeqShards)
     var acc = seqBase
     (0 until UrlCanon.SeqShards).foreach { k => offsets(k) = acc; acc += newPerShard(k) }
@@ -714,15 +735,17 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
       .select($"seqshard", $"canon", $"host", $"depth")
       .as[(Long, String, String, Int)].rdd
       .map { case (s, c, h, d) => (s.toInt, (c, h, d)) }
-      .partitionBy(new org.apache.spark.Partitioner {
-        override def numPartitions: Int = UrlCanon.SeqShards
-        override def getPartition(key: Any): Int = key.asInstanceOf[Int]
-      })
-      .mapPartitionsWithIndex { case (pid, it) =>
-        val arr = it.map(_._2).toArray
-        scala.util.Sorting.quickSort(arr)(Ordering.by((t: (String, String, Int)) => t._1))
-        arr.iterator.zipWithIndex.map { case ((c, h, d), i) =>
-          (c, h, d, offsets(pid) + i, r)
+      .partitionBy(new org.apache.spark.HashPartitioner(writeWidth(nNew)))
+      .mapPartitions { it =>
+        val arr = it.toArray
+        scala.util.Sorting.quickSort(arr)(
+          Ordering.by((t: (Int, (String, String, Int))) => (t._1, t._2._1)))
+        var shard = -1
+        var seq = 0L
+        arr.iterator.map { case (k, (c, h, d)) =>
+          if (k != shard) { shard = k; seq = offsets(k) }
+          seq += 1
+          (c, h, d, seq - 1, r)
         }
       }
     val newEntries = newRdd.toDF("canon", "host", "depth", "seq", "discovered_round")
@@ -732,36 +755,32 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
     // frontier DELTA: this round's discoveries only, every round — a
     // compaction round additionally lands the frontier_compact artifact
     // (started at round open, see compactFut) and moves the read base.
-    val frontierOut = newEntries
     val newBase = if (isCompaction) r.toLong else base.toLong
-    val hostAdvance = scheduled.groupBy($"host")
-      .agg((max($"rank") * max($"delay")).as("advance"))
+    // host_next: ONE aggregation over the prior clocks ∪ the schedule (whose
+    // rows carry the host's prior clock, joined in above) advances each
+    // scheduled host by rank×delay; AQE sizes the write to the host count.
     val hostsObs = Observation(s"hosts_${obsToken}_r$r")
-    val hostNextNew = hostNext.join(hostAdvance, Seq("host"), "full_outer")
-      .select($"host",
-        (coalesce($"next_time", lit(0L)) + coalesce($"advance", lit(0L))).as("next_time"))
+    val hostNextNew = scheduled.select($"host", $"next_time", $"rank", $"delay")
+      .unionByName(hostNext, allowMissingColumns = true)
+      .groupBy($"host")
+      .agg((max($"next_time") + coalesce(max($"rank") * max($"delay"), lit(0L)))
+        .as("next_time"))
       .observe(hostsObs, count(lit(1)).as("n"))
-      // partitioned rewrite — never a coalesce(1) single-task table write
-      // (at 10^8 hosts a one-task rewrite is a per-round serial choke)
-      .repartition(FrontierEngine.HostShards,
-        pmod(xxhash64($"host"), lit(FrontierEngine.HostShards)))
 
-    // per-host lineage for this round (north rule: per-partition lineage);
-    // written with its natural (AQE-coalesced) partitioning — no
-    // single-task coalesce anywhere in the commit. Aggregates read the
-    // slim `fetched` cache directly (not crawlLogRound, whose projection
-    // would re-scan the same cache in a second commit-wave job).
-    val lineage = fetched.groupBy($"host").agg(
-        count(lit(1)).as("scheduled"),
-        sum(when($"hit", 1L).otherwise(0L)).as("fetched_200"),
-        sum(when(!$"hit", 1L).otherwise(0L)).as("fetched_404"))
-      .join(newEntries.groupBy($"host").agg(count(lit(1)).as("discovered_new")),
-            Seq("host"), "full_outer")
-      .select(lit(r).as("round"), $"host",
-        coalesce($"scheduled", lit(0L)).as("scheduled"),
-        coalesce($"fetched_200", lit(0L)).as("fetched_200"),
-        coalesce($"fetched_404", lit(0L)).as("fetched_404"),
-        coalesce($"discovered_new", lit(0L)).as("discovered"),
+    // per-host lineage for this round (north rule: per-partition lineage):
+    // ONE aggregation over the slim `fetched` cache ∪ the round's new
+    // entries, written with its natural (AQE-coalesced) partitioning — no
+    // single-task coalesce anywhere in the commit.
+    val lineage = fetched.select($"host", $"hit")
+      .unionByName(newEntries.select($"host", lit(true).as("new")),
+        allowMissingColumns = true)
+      .groupBy($"host").agg(
+        count($"hit").as("scheduled"),
+        count(when($"hit", 1)).as("fetched_200"),
+        count(when(!$"hit", 1)).as("fetched_404"),
+        count($"new").as("discovered"))
+      .select(lit(r).as("round"), $"host", $"scheduled", $"fetched_200",
+        $"fetched_404", $"discovered",
         lit(nDiscovered - nNew - blockedCount).as("deduped"),
         lit(blockedCount).as("blocked"))
 
@@ -834,7 +853,7 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
     })
     val manifest = timed("commit") {
       store.writeTables(r,
-        Map("frontier" -> frontierOut.coalesce(writeWidth(nNew)),
+        Map("frontier" -> newEntries,
             "host_next" -> hostNextNew,
             "crawl_log" -> crawlLogRound.coalesce(writeWidth(nScheduled)),
             "lineage" -> lineage))

@@ -1,6 +1,6 @@
 package graft.frontier
 
-import org.apache.spark.sql.{DataFrame, Encoders}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -14,37 +14,20 @@ import org.apache.spark.sql.expressions.Window
   */
 object Schedulers {
 
-  /** Declarative form: SHUFFLE-FREE local prune, then one exact window.
-    * Phase 1 sorts each existing partition in place ((host, depth, seq) —
-    * no exchange) and streams out at most B rows per host per partition:
-    * a hot host with 10^7 pending URLs contributes ≤ partitions×B rows to
-    * the window, with O(1) memory — the skew breaker, strictly stronger
-    * than the round-2 salted pre-window and one full-frontier shuffle
-    * cheaper. Any host's global top-B by (depth, seq) survives the prune
-    * (each partition keeps its local best B), so phase 2's exact per-host
-    * row_number is unchanged.
+  /** One exact per-host `row_number` window, filtered to rank ≤ B.
+    * Spark's InferWindowGroupLimit turns the filter into a two-phase
+    * WindowGroupLimit: the Partial phase keeps each partition's local
+    * top-B per host BEFORE the host exchange, so a hot host with 10^7
+    * pending URLs ships ≤ partitions×B rows to the window — the skew
+    * breaker. The rule fires only while B ≤
+    * `spark.sql.optimizer.windowGroupLimitThreshold`, which the engine
+    * checks at construction (`FrontierEngine.requireScheduleLimit`).
     */
   def windowTopB(frontier: DataFrame, budget: Int): DataFrame = {
-    implicit val inEnc = Encoders.product[SchedIn]
-    val w2 = Window.partitionBy(col("host")).orderBy(col("depth"), col("seq"))
+    val w = Window.partitionBy(col("host")).orderBy(col("depth"), col("seq"))
     frontier
       .select(col("canon"), col("host"), col("depth"), col("seq"),
         col("discovered_round"))
-      .sortWithinPartitions(col("host"), col("depth"), col("seq"))
-      .as[SchedIn]
-      .mapPartitions { it =>
-        var curHost: String = null
-        var kept = 0
-        it.filter { e =>
-          if (e.host != curHost) { curHost = e.host; kept = 0 }
-          kept += 1
-          kept <= budget
-        }
-      }
-      .toDF()
-      .withColumn("rank", row_number().over(w2)).filter(col("rank") <= budget)
+      .withColumn("rank", row_number().over(w)).filter(col("rank") <= budget)
   }
 }
-
-private[frontier] case class SchedIn(canon: String, host: String, depth: Int,
-                                     seq: Long, discovered_round: Int)

@@ -12,22 +12,9 @@ case class Span(kind: String, text: String, media_ref: String, offset: Int)
 
 case class Doc(doc_id: String, spans: Seq[Span])
 
-/** A frontier entry: a discovered, not-yet-fetched canonical URL.
-  * `seq` is the global discovery sequence number — assigned deterministically
-  * (sorted canon order within each round) so crawl order is reproducible
-  * across engines and parallelism levels (SURVEY.md §7.5 risk #1).
-  */
-case class FrontierEntry(canon: String, host: String, depth: Int, seq: Long,
-                         discoveredRound: Int)
-
 /** One crawl-log line — the engine's primary ordered output. Order key is
   * (round, fetchTime, host, seq): fetchTime is LOGICAL (i-th fetch from a
   * host in a round starts at i*crawlDelay(host)), never wall clock.
   */
 case class CrawlLogEntry(round: Int, fetchTime: Long, host: String, canon: String,
                          depth: Int, seq: Long, status: Int)
-
-case class SeenEntry(key: Long, canon: String)
-
-/** Per-host politeness state: logical next-available fetch tick + delay. */
-case class HostState(host: String, crawlDelay: Int, fetchedTotal: Long)

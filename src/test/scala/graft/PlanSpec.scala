@@ -123,6 +123,34 @@ class PlanSpec extends SparkSuite {
     assert(!p.contains("Sort "), "link-graph side re-sorted every round:\n" + p)
   }
 
+  test("schedule: partial WindowGroupLimit prunes each host to B before the host exchange") {
+    // the skew bound of Schedulers.windowTopB: Spark's InferWindowGroupLimit
+    // must plan a Partial per-partition top-B BELOW the hashpartitioning(host)
+    // exchange, so a hot host ships at most partitions×B rows
+    import graft.frontier.Schedulers
+    import spark.implicits._
+    val frontier = (0 until 4000)
+      .map(i => (s"http://h${i % 5}.org/p/$i", s"h${i % 5}.org", i % 3, i.toLong, 1))
+      .toDF("canon", "host", "depth", "seq", "discovered_round").repartition(8)
+    val df = Schedulers.windowTopB(frontier, 4)
+    assert(df.count() === 5 * 4)
+    df.collect()
+    val lines = df.queryExecution.executedPlan.toString
+      .split("== Initial Plan ==")(0).split("\n").toSeq
+    def lineOf(what: String, p: String => Boolean): Int = {
+      val i = lines.indexWhere(p)
+      assert(i >= 0, s"no $what in the final plan:\n${lines.mkString("\n")}")
+      i
+    }
+    val exchange = lineOf("host exchange", _.contains("Exchange hashpartitioning(host"))
+    val partial = lineOf("partial group limit",
+      l => l.contains("WindowGroupLimit") && l.contains("Partial"))
+    val fin = lineOf("final group limit",
+      l => l.contains("WindowGroupLimit") && l.contains("Final"))
+    // a tree string prints a node's children below it
+    assert(fin < exchange && exchange < partial, lines.mkString("\n"))
+  }
+
   test("frontier gate expressions stay codegen'd (no ScalaUDF in the plan)") {
     import graft.functions.gatefns._
     import graft.functions.urlfns._

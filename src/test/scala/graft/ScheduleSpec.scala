@@ -2,7 +2,7 @@ package graft
 
 import graft.frontier.Schedulers
 
-/** The politeness scheduler's local prune must not change the selection:
+/** The politeness scheduler's partial group limit must not change the selection:
   * under heavy skew `windowTopB` equals a plain-Scala per-host top-B.
   */
 class ScheduleSpec extends SparkSuite {
@@ -14,7 +14,7 @@ class ScheduleSpec extends SparkSuite {
       (s"http://h0.org/p/$i", "h0.org", i % 7, i.toLong, 1)) ++
       (for (h <- 1 to 50; p <- 0 until (h % 5 + 1))
         yield (s"http://h$h.org/p/$p", s"h$h.org", p % 3, (10000 + h * 10 + p).toLong, 1))
-    // 16 partitions spread the hot host, so the local prune runs per partition
+    // 16 partitions spread the hot host, so the partial limit runs per partition
     val frontier = rows.toDF("canon", "host", "depth", "seq", "discovered_round")
       .repartition(16)
     val budget = 6
@@ -30,5 +30,21 @@ class ScheduleSpec extends SparkSuite {
     assert(got.toSeq === want)
     // the hot host is cut to exactly B
     assert(got.count(_._2 == "h0.org") === budget)
+  }
+
+  test("a budget past spark.sql.optimizer.windowGroupLimitThreshold is refused") {
+    // without the partial group limit a hot host's whole backlog would
+    // shuffle to one task, so the engine fails at construction instead
+    import graft.frontier.{EngineConfig, FrontierEngine}
+    import graft.snapshots.SnapshotStore
+    val store = new SnapshotStore(
+      java.nio.file.Files.createTempDirectory("graft-limit").toString)
+    val key = "spark.sql.optimizer.windowGroupLimitThreshold"
+    val threshold = spark.conf.get(key).toInt
+    new FrontierEngine(spark, store, EngineConfig(perHostBudget = threshold))
+    val e = intercept[IllegalArgumentException] {
+      new FrontierEngine(spark, store, EngineConfig(perHostBudget = threshold + 1))
+    }
+    assert(e.getMessage.contains(key), e.getMessage)
   }
 }
