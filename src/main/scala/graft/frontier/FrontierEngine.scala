@@ -4,8 +4,9 @@ import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.sketch.BloomFilter
 
 import graft.canon.UrlCanon
@@ -132,13 +133,12 @@ object FrontierEngine {
   /** Target false-positive rate of every per-shard bloom sidecar. */
   private val BloomFpp = 0.01
 
-  // DDL of the snapshot tables a round reads back: a read that names its
+  // schemas of the snapshot tables a round reads back: a read that names its
   // schema runs no parquet schema-inference job (one 1-task job per read)
-  private val FrontierSchema =
-    "canon STRING, host STRING, depth INT, seq BIGINT, discovered_round INT"
-  private val HostNextSchema = "host STRING, next_time BIGINT"
-  private val CrawlLogSchema = "round INT, fetchTime BIGINT, host STRING, " +
-    "canon STRING, depth INT, seq BIGINT, status INT"
+  private val FrontierSchema = StructType.fromDDL(
+    "canon STRING, host STRING, depth INT, seq BIGINT, discovered_round INT")
+  private val HostNextSchema = StructType.fromDDL("host STRING, next_time BIGINT")
+  private val CrawlLogSchema = Encoders.product[graft.model.CrawlLogEntry].schema
 
   /** The schedule's skew bound (Schedulers.windowTopB) exists only while
     * the budget is within the group-limit threshold (-1 turns it off);
@@ -250,15 +250,15 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
     * goes wide, a 10^4-row one lands a handful of files instead of a fixed
     * 64 — per-round commit file count is the crawl's biggest syscall
     * surface (64 frontier files/round × 10^4 rounds is also a real
-    * small-file problem on HDFS/S3). ~250k skinny rows per file: the old
-    * 2M-rows/file divisor pinned a 4M-row crawl-log write to the 8-task
-    * floor, and the stage log showed ~30 s of parquet-encode CPU forced
-    * through those 8 tasks (a 7 s serial tail at local[32] — encode CPU,
-    * not file size, is what the width must parallelize). A round under
-    * 250k rows lands one file in one task; cap 64 bounds the per-round file
-    * count at any volume. */
+    * small-file problem on HDFS/S3). Encode CPU, not file size, is what the
+    * width must parallelize: the stage log measured ~30 s of parquet-encode
+    * CPU for a 4M-row crawl-log write (~7.5 µs/row). So a task takes at most
+    * ~31k rows (~0.23 s of encode) until 8 tasks, 8 tasks hold up to 1.75M
+    * rows, then ~250k rows per file; cap 64 bounds the per-round file count
+    * at any volume. A round under 31k rows lands one file in one task. */
   private def writeWidth(rows: Long): Int =
-    math.min(64, (rows / 250000L).toInt + 1)
+    math.min(64L, math.max(math.min(8L, (rows + 31249L) / 31250L),
+      rows / 250000L + 1)).toInt
 
   /** Build + write the per-bucket bloom sidecars from a frame ALREADY
     * hash-partitioned by the seen-table bucket function (partition id ==
@@ -519,6 +519,8 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
     FrontierEngine.scoped(runRoundIn(_, docs, r))
 
   private def runRoundIn(scope: RoundScope, docs: DataFrame, r: Int): Long = {
+    // the session may have changed the threshold since construction
+    FrontierEngine.requireScheduleLimit(spark, cfg.perHostBudget)
     val metrics = store.readMetrics(r - 1)
     val seqBase = metrics("seq_base")
     val seenTotal = metrics("seen_total")
@@ -548,11 +550,13 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
     val compactFut: Option[Future[Map[String, String]]] =
       if (!isCompaction) None
       else Some(scope.track(Future {
+        // at least 8 tasks: the coalesce has no shuffle, so its tasks also
+        // run the whole pending scan and the consumed anti-join
         store.writeTables(r, Map("frontier_compact" ->
-          frontier.coalesce(writeWidth(pendingCount))))
+          frontier.coalesce(math.max(8, writeWidth(pendingCount)))))
       }(ExecutionContext.global)))
-    val hostNext = spark.read.schema(FrontierEngine.HostNextSchema)
-      .parquet(s"${store.root}/data/v${r - 1}/host_next")
+    val hostNext = store.read(spark, "host_next", Some(r - 1),
+      Some(FrontierEngine.HostNextSchema))
     val priorVer = blobVersions(r - 1)
     // one TINY broadcast per round — the per-shard blob-version manifest,
     // O(shards) ints. The filters load lazily executor-side from shared

@@ -21,7 +21,8 @@ object Schedulers {
     * pending URLs ships ≤ partitions×B rows to the window — the skew
     * breaker. The rule fires only while B ≤
     * `spark.sql.optimizer.windowGroupLimitThreshold`, which the engine
-    * checks at construction (`FrontierEngine.requireScheduleLimit`).
+    * checks at construction and at the start of every round
+    * (`FrontierEngine.requireScheduleLimit`).
     */
   def windowTopB(frontier: DataFrame, budget: Int): DataFrame = {
     val w = Window.partitionBy(col("host")).orderBy(col("depth"), col("seq"))

@@ -1,6 +1,7 @@
 package graft.snapshots
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Iceberg-semantics snapshot store over plain Parquet.
   *
@@ -143,11 +144,13 @@ class SnapshotStore(val root: String,
     publish(v, manifest, metrics, props)
   }
 
-  /** Read table `name` as of snapshot `v` (default: current). */
-  def read(spark: SparkSession, name: String, v: Option[Int] = None): DataFrame = {
+  /** Read table `name` as of snapshot `v` (default: current). A known
+    * `schema` skips parquet schema inference (a 1-task job per read). */
+  def read(spark: SparkSession, name: String, v: Option[Int] = None,
+           schema: Option[StructType] = None): DataFrame = {
     val ver = v.orElse(currentVersion).getOrElse(
       throw new IllegalStateException(s"no committed snapshot under $root"))
-    spark.read.parquet(dataDir(ver, name))
+    schema.fold(spark.read)(s => spark.read.schema(s)).parquet(dataDir(ver, name))
   }
 
   def readMetrics(v: Int): Map[String, Long] = {

@@ -34,7 +34,8 @@ class ScheduleSpec extends SparkSuite {
 
   test("a budget past spark.sql.optimizer.windowGroupLimitThreshold is refused") {
     // without the partial group limit a hot host's whole backlog would
-    // shuffle to one task, so the engine fails at construction instead
+    // shuffle to one task, so the engine fails at construction, and a round
+    // fails if the session lowers the threshold after construction
     import graft.frontier.{EngineConfig, FrontierEngine}
     import graft.snapshots.SnapshotStore
     val store = new SnapshotStore(
@@ -46,5 +47,14 @@ class ScheduleSpec extends SparkSuite {
       new FrontierEngine(spark, store, EngineConfig(perHostBudget = threshold + 1))
     }
     assert(e.getMessage.contains(key), e.getMessage)
+    val engine = new FrontierEngine(spark, store, EngineConfig(perHostBudget = 4))
+    for (lowered <- Seq("3", "-1")) {
+      spark.conf.set(key, lowered)
+      try {
+        val e = intercept[IllegalArgumentException](
+          engine.runRound(spark.emptyDataFrame, 1))
+        assert(e.getMessage.contains(key), e.getMessage)
+      } finally spark.conf.set(key, threshold.toString)
+    }
   }
 }
