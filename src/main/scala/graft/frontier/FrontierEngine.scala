@@ -3,38 +3,37 @@ package graft.frontier
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 
+import org.apache.spark.HashPartitioner
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.sketch.BloomFilter
 
 import graft.canon.UrlCanon
+import graft.functions.{BloomDesc, BloomRegistry}
 import graft.functions.urlfns._
 import graft.functions.gatefns._
 import graft.model.DocSynth
 import graft.snapshots.SnapshotStore
 
 /** Engine tuning knobs. All sizes chosen for local[32] tests; the scale
-  * story for each is in the Scaladoc of the step that uses it.
+  * story for each is in the Scaladoc of the step that uses it. Whether a
+  * join broadcasts is not a knob: the session's
+  * `spark.sql.autoBroadcastJoinThreshold` decides it (-1 broadcasts nothing).
   */
 case class EngineConfig(
     perHostBudget: Int = 4,      // max fetches per host per round (politeness)
     seenShards: Int = 32,        // seen-set bucket/bloom-shard count (≫ executors at scale)
     bloomCapacity: Long = 1L << 22, // TOTAL bloom capacity (items) across shards
-    compactEvery: Int = 16,      // rewrite the full pending frontier every K rounds
-    // pending rows above this ⇒ the fetch join degrades from broadcast to
-    // the storage-partitioned bucketed-graph join. Kept LOW: the broadcast
-    // path collects the schedule through the driver three times per round
-    // (fetch join ×2 + the 404 anti-join), a serial term that grew to
-    // ~100 MB×3 at the old 2M bound, while the shuffle path moves only
-    // O(schedule) rows executor-to-executor
-    broadcastScheduleLimit: Long = 200000,
-    broadcastHostLimit: Long = 2000000) // host_next rows above this ⇒ shuffled join
+    compactEvery: Int = 16)      // rewrite the full pending frontier every K rounds
 
 /** BSP URL-frontier + fetch scheduler over interleaved text+media docs.
   *
-  * Each round is TWO Spark job waves:
+  * A round is the reference workflow's chain of named stages — schedule,
+  * fetch, discover, dedup, gate, assignSeqs, updateBlooms, commit — each a
+  * frame transform of its own, run as TWO Spark job waves:
   *   wave 1 — ONE metrics action: read snapshot r-1 → schedule (per-host
   *   top-B by (depth,seq), one window) → "fetch" (join the
   *   small schedule against the once-per-crawl link graph) → extract +
@@ -111,9 +110,11 @@ case class EngineConfig(
   *   - the corpus is projected ONCE PER CRAWL to a (doc_id, links) link
   *     graph, written as a BUCKETED table CLUSTERED BY doc_id; per-round
   *     fetch joins touch that slim table — never the 100 TB doc table.
-  *     Both the schedule and the host_next joins are ADAPTIVE: they
-  *     broadcast only below a size bound known from the PREVIOUS round's
-  *     committed metrics (exact — no extra count job); past it the fetch
+  *     Whether the schedule and host_next joins broadcast is Spark's own
+  *     rule: plan-size estimate against `spark.sql.autoBroadcastJoinThreshold`
+  *     (driver-side statistics, no job). host_next carries no hint; the
+  *     fetch takes its broadcast branch only while the pending frontier's
+  *     estimate is within the threshold. Past it the fetch
   *     join is STORAGE-PARTITIONED — the bucketed graph side scans in
   *     place and only the skinny schedule shuffles (SHUFFLE_HASH build),
   *     so per-round fetch shuffle volume is O(schedule), never O(corpus),
@@ -132,6 +133,10 @@ case class EngineConfig(
 object FrontierEngine {
   /** Target false-positive rate of every per-shard bloom sidecar. */
   private val BloomFpp = 0.01
+  /** Per-shard bloom capacity clamp (items): the cap BloomFilterAggregate
+    * applies from its SQLConf default. Past it rebuilds stop; more shards
+    * are the fix. */
+  private val BloomClampItems = 4000000L
 
   // schemas of the snapshot tables a round reads back: a read that names its
   // schema runs no parquet schema-inference job (one 1-task job per read)
@@ -155,31 +160,6 @@ object FrontierEngine {
     val scope = new RoundScope
     try body(scope) finally scope.close()
   }
-
-  // one listener per SparkContext (a level fork builds a fresh session per
-  // run; a JVM-global guard would silently skip every session after the first)
-  private val stageListenerOn =
-    java.util.Collections.synchronizedSet(new java.util.HashSet[String]())
-  /** Diagnostic-only per-stage wall/CPU log (SPARK_GRAFT_STAGE_LOG): the
-    * phase timer names WHICH wave is slow; this names WHICH STAGE inside
-    * the wave, and comparing stage wall-clock across parallelism levels
-    * separates per-stage fixed latency from compute that scales. */
-  private def ensureStageListener(spark: SparkSession): Unit =
-    if (stageListenerOn.add(spark.sparkContext.applicationId))
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onStageCompleted(
-              e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-            val si = e.stageInfo
-            val wall = (for {s <- si.submissionTime; c <- si.completionTime}
-              yield (c - s) / 1000.0).getOrElse(-1.0)
-            val cpu = si.taskMetrics.executorRunTime / 1000.0
-            System.err.println(
-              f"[stage] id=${si.stageId} tasks=${si.numTasks} wall=$wall%.2fs " +
-              f"cpuSum=$cpu%.1fs name=${si.name.takeWhile(_ != '(').trim} " +
-              s"details=${si.name}")
-          }
-        })
 }
 
 class FrontierEngine(spark: SparkSession, store: SnapshotStore,
@@ -199,8 +179,6 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
       out
     }
   }
-  if (sys.env.contains("SPARK_GRAFT_STAGE_LOG"))
-    FrontierEngine.ensureStageListener(spark)
 
   private val seen = new SeenTable(spark, s"${store.root}/seen_bucketed",
     cfg.seenShards, store.storage)
@@ -212,12 +190,11 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
   // caps BloomFilterAggregate applies from SQLConf defaults (4M items,
   // 67108864 bits) so driver-side expectations and the aggregate agree.
   private def bitsFor(capPerShard: Long): Long = {
-    val n = math.min(capPerShard, 4000000L)
+    val n = math.min(capPerShard, FrontierEngine.BloomClampItems)
     val bits = math.ceil(-n * math.log(FrontierEngine.BloomFpp) /
       (math.log(2) * math.log(2))).toLong
     math.min(math.max(bits, 64L), 67108864L)
   }
-  private def bloomBlobName(k: Int): String = s"seen.bloom.$k"
 
   /** Per-shard latest committed blob version at snapshot v, from the
     * snapshot's own metadata (the `bloom_vers` prop written by `publish`).
@@ -274,12 +251,12 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
                                 priorVer: Array[Int]): Set[Int] = {
     val st = store
     val bits = bitsFor(capPerShard)
-    val cap = math.min(capPerShard, 4000000L)
+    val cap = math.min(capPerShard, FrontierEngine.BloomClampItems)
     byBucket.select(col("canon")).as[String]
       .rdd.mapPartitionsWithIndex { case (pid, it) =>
         if (!it.hasNext) Iterator.empty
         else {
-          val name = s"seen.bloom.$pid"
+          val name = BloomRegistry.blobName(pid)
           val pv = priorVer(pid)
           val bf =
             if (pv < 0) BloomFilter.create(cap, bits)
@@ -304,8 +281,8 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
     * full-corpus pass (~3% of corpus bytes thereafter).
     *
     * Written as a BUCKETED catalog table CLUSTERED BY doc_id (same move as
-    * SeenTable): once the pending set outgrows the schedule-broadcast
-    * bound, the per-round fetch join would otherwise shuffle the WHOLE
+    * SeenTable): once the pending set outgrows the broadcast threshold,
+    * the per-round fetch join would otherwise shuffle the WHOLE
     * link-graph table by doc_id — the crawl's largest table, re-shuffled
     * twice per round (the links scan and the crawl-log hit scan). With the
     * bucketing metadata the graph side scans in place and ONLY the skinny
@@ -412,8 +389,8 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
     val frontier = canonSeeds.zipWithIndex.map { case (c, i) =>
       (c, UrlCanon.hostOf(c), 0, i.toLong, 0)
     }.toDF("canon", "host", "depth", "seq", "discovered_round")
-    val hosts = canonSeeds.map(UrlCanon.hostOf).distinct
-    val hostNext = hosts.toDF("host").withColumn("next_time", lit(0L))
+    val hostNext = canonSeeds.map(UrlCanon.hostOf).distinct.toDF("host")
+      .withColumn("next_time", lit(0L))
     val capPerShard = math.max(16L, cfg.bloomCapacity / cfg.seenShards)
     // one concurrent wave, like the per-round commit: table writes, the
     // seed seen-append and the seed blooms are independent jobs — running
@@ -444,8 +421,7 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
       Map("seq_base" -> canonSeeds.size.toLong,
           "seen_total" -> canonSeeds.size.toLong,
           "bloom_capacity" -> capPerShard,
-          "frontier_base" -> 0L,
-          "hosts_total" -> hosts.size.toLong),
+          "frontier_base" -> 0L),
       bloomVersProp(vers0))
   }
 
@@ -521,14 +497,9 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
   private def runRoundIn(scope: RoundScope, docs: DataFrame, r: Int): Long = {
     // the session may have changed the threshold since construction
     FrontierEngine.requireScheduleLimit(spark, cfg.perHostBudget)
-    val metrics = store.readMetrics(r - 1)
-    val seqBase = metrics("seq_base")
-    val seenTotal = metrics("seen_total")
-    val capPerShard = metrics.getOrElse("bloom_capacity",
-      math.max(16L, cfg.bloomCapacity / cfg.seenShards))
-    val base = metrics.getOrElse("frontier_base", 0L).toInt
-    val consumedTotal = metrics.getOrElse("consumed_total", 0L)
-    val hostsTotal = metrics.getOrElse("hosts_total", 0L)
+    val prior = store.readMetrics(r - 1)
+    val seqBase = prior("seq_base")
+    val consumedTotal = prior.getOrElse("consumed_total", 0L)
     // EXACT pending size from committed metrics: every allowed URL ever
     // added (seq_base) minus every URL ever scheduled (consumed_total).
     // pending == 0 ⇔ drained (every pending host schedules ≥1), so the
@@ -536,25 +507,10 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
     // needs no post-count early exit.
     val pendingCount = seqBase - consumedTotal
     if (pendingCount <= 0) return 0
+    val base = prior.getOrElse("frontier_base", 0L).toInt
     val frontier = pendingFrontier(r - 1, base)
-    // ---- compaction rides the WHOLE round, not the commit wave ------------
-    // Every compactEvery rounds the full pending set is rewritten so the
-    // read union stays bounded (LSM shape). The artifact is a pure function
-    // of COMMITTED state (pending as of r-1), so its O(|frontier|) write
-    // starts here — overlapping wave 1 and the commit wave — and is awaited
-    // only at publish: the rewrite costs the round max(0, rewrite - round)
-    // extra wall-clock instead of the full rewrite. Discoveries of round r
-    // are disjoint from its schedule (both sides of the seen anti-join), so
-    // compact(r-1) ∪ delta(r) − consumed(r) ≡ the old synchronous artifact.
     val isCompaction = cfg.compactEvery > 0 && r % cfg.compactEvery == 0
-    val compactFut: Option[Future[Map[String, String]]] =
-      if (!isCompaction) None
-      else Some(scope.track(Future {
-        // at least 8 tasks: the coalesce has no shuffle, so its tasks also
-        // run the whole pending scan and the consumed anti-join
-        store.writeTables(r, Map("frontier_compact" ->
-          frontier.coalesce(math.max(8, writeWidth(pendingCount)))))
-      }(ExecutionContext.global)))
+    val compactFut = if (isCompaction) Some(compact(scope, frontier, r, pendingCount)) else None
     val hostNext = store.read(spark, "host_next", Some(r - 1),
       Some(FrontierEngine.HostNextSchema))
     val priorVer = blobVersions(r - 1)
@@ -563,183 +519,218 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
     // storage into the bounded BloomRegistry cache; untouched shards keep
     // their version, so their filters stay warm across rounds. No filter
     // bytes ever cross the driver (see BloomRegistry scaladoc).
-    val descBc = scope.keep(spark.sparkContext.broadcast(
-      graft.functions.BloomDesc(store, priorVer)))
-    // shard routing = the seen-table BUCKET id (murmur3), key = xxhash64:
-    // bloom shards align 1:1 with the bucketed seen table
-    def mightContain(shard: Column, key: Column): Column =
-      graft.functions.bloomfns.bloom_probe(shard, key, descBc)
+    val descBc = scope.keep(spark.sparkContext.broadcast(BloomDesc(store, priorVer)))
 
-    // ---- politeness schedule: per-host top-B by (depth, seq) --------------
-    // One exact window whose partial group limit runs before the host
-    // exchange (Schedulers.windowTopB): a hot host ships at most B rows per
-    // partition, however deep its backlog. The host_next join is
-    // adaptive on the committed host count — at 10^8 hosts an unconditional
-    // broadcast would build a multi-GB table on the driver every round.
-    val topB = Schedulers.windowTopB(frontier, cfg.perHostBudget)
-    def maybeBcHosts(df: DataFrame): DataFrame =
-      if (hostsTotal <= cfg.broadcastHostLimit) broadcast(df) else df
+    // ---- wave 1: the stages up to the round's ONE metrics action ----------
     val schedObs = Observation(s"sched_${obsToken}_r$r")
-    val scheduled = topB
-      .join(maybeBcHosts(hostNext), Seq("host"), "left")
+    val linksObs = Observation(s"links_${obsToken}_r$r")
+    val scheduled = schedule(scope, frontier, hostNext, schedObs)
+    val docsLinks = linkGraph(docs)
+    val smallSchedule = withinBroadcastThreshold(frontier)
+    val fetched = fetch(scope, scheduled, docsLinks, smallSchedule)
+    val links = discover(scope, scheduled, docsLinks, smallSchedule, linksObs)
+    val fresh = gate(scope, dedup(links, seen.upTo(r - 1), descBc))
+    val (newPerShard, nBlocked) = timed("metrics")(shardCounts(fresh))
+    val nNew = newPerShard.sum
+    val nScheduled = schedObs.get("n").asInstanceOf[Long]
+    val nDiscovered = linksObs.get("n").asInstanceOf[Long]
+    val nDeduped = nDiscovered - nNew - nBlocked
+
+    // ---- wave 2: seqs, blooms, the commit ----------------------------------
+    val newEntries = assignSeqs(scope, fresh, newPerShard, seqBase, r)
+    val newSeenTotal = prior("seen_total") + nNew + nBlocked
+    // ONE shuffle shared by the seen append and the bloom sidecar build:
+    // both consume this bucket-partitioned cache (partition id == bucket id
+    // == bloom shard id), so the bloom update costs no shuffle of its own
+    val freshBuckets = fresh.select($"canon")
+      .repartition(cfg.seenShards, $"canon").transform(scope.cache)
+    val capPerShard = prior.getOrElse("bloom_capacity",
+      math.max(16L, cfg.bloomCapacity / cfg.seenShards))
+    val bloomFut = updateBlooms(scope, r, fresh, freshBuckets, nNew + nBlocked,
+      newSeenTotal, capPerShard, priorVer)
+    commit(scope, r, freshBuckets, bloomFut, compactFut,
+      Map("frontier" -> newEntries,
+          "host_next" -> advanceClocks(scheduled, hostNext),
+          "crawl_log" -> crawlLogOf(r, fetched).coalesce(writeWidth(nScheduled)),
+          "lineage" -> lineageOf(r, fetched, newEntries, nDeduped, nBlocked)),
+      Map("seq_base" -> (seqBase + nNew),
+          "seen_total" -> newSeenTotal,
+          "consumed_total" -> (consumedTotal + nScheduled),
+          "scheduled" -> nScheduled, "discovered" -> nDiscovered,
+          "new_frontier" -> nNew, "blocked" -> nBlocked, "deduped" -> nDeduped,
+          // a compaction round's artifact moves the pending set's read base
+          "frontier_base" -> (if (isCompaction) r.toLong else base.toLong)))
+    nScheduled
+  }
+
+  /** Compaction rides the WHOLE round, not the commit wave. Every
+    * compactEvery rounds the full pending set is rewritten so the read
+    * union stays bounded (LSM shape). The artifact is a pure function of
+    * COMMITTED state (pending as of r-1), so its O(|frontier|) write starts
+    * at round open — overlapping wave 1 and the commit wave — and is awaited
+    * only at publish: the rewrite costs the round max(0, rewrite - round)
+    * extra wall-clock instead of the full rewrite. Discoveries of round r
+    * are disjoint from its schedule (both sides of the seen anti-join), so
+    * compact(r-1) ∪ delta(r) − consumed(r) ≡ the old synchronous artifact. */
+  private def compact(scope: RoundScope, frontier: DataFrame, r: Int,
+                      pendingCount: Long): Future[Map[String, String]] =
+    scope.track(Future {
+      // at least 8 tasks: the coalesce has no shuffle, so its tasks also
+      // run the whole pending scan and the consumed anti-join
+      store.writeTables(r, Map("frontier_compact" ->
+        frontier.coalesce(math.max(8, writeWidth(pendingCount)))))
+    }(ExecutionContext.global))
+
+  /** Spark's own broadcast rule, the one its join planner applies: a plan
+    * broadcasts while its size estimate is within
+    * `spark.sql.autoBroadcastJoinThreshold` (-1: never). The estimate is
+    * driver-side plan statistics — no job. */
+  private def withinBroadcastThreshold(df: DataFrame): Boolean = {
+    val size = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    size >= 0 && size <= bridge.broadcastThreshold(spark)
+  }
+
+  /** schedule — politeness: per-host top-B by (depth, seq), positioned on
+    * each host's logical clock. One exact window whose partial group limit
+    * runs before the host exchange (Schedulers.windowTopB): a hot host ships
+    * at most B rows per partition, however deep its backlog. The host_next
+    * join carries no hint: Spark broadcasts it while it is small, and at
+    * 10^8 hosts shuffles it instead of building a multi-GB table on the
+    * driver every round. */
+  private def schedule(scope: RoundScope, frontier: DataFrame, hostNext: DataFrame,
+                       obs: Observation): DataFrame =
+    Schedulers.windowTopB(frontier, cfg.perHostBudget)
+      .join(hostNext, Seq("host"), "left")
       .withColumn("next_time", coalesce($"next_time", lit(0L)))
       .withColumn("delay", crawl_delay($"host").cast("long"))
       .withColumn("fetchTime", $"next_time" + ($"rank" - 1) * $"delay")
-      .observe(schedObs, count(lit(1)).as("n"))
+      .observe(obs, count(lit(1)).as("n"))
       .transform(scope.cache)
 
-    // ---- "fetch": join the schedule against the link graph.
-    // The 100 TB doc table is scanned EXACTLY ONCE PER CRAWL — the
-    // `linkGraph` projection (see its scaladoc) — and each round joins the
-    // schedule against that slim (doc_id, links) table. The 200/404 split
-    // comes from ONE outer join (or, under the broadcast bound, one cheap
-    // anti-join against the broadcast hit set) — never a second scan of
-    // the graph. The broadcast is ADAPTIVE on the exact
-    // pending count (collecting a multi-million-row schedule through the
-    // driver is a serial Amdahl term); past broadcastScheduleLimit the
-    // join becomes a plain shuffled join, which parallelizes with the
-    // cluster.
-    val sched = scheduled.select($"canon", $"host", $"depth", $"seq",
-                                 $"fetchTime", $"rank", $"delay")
-    val small = pendingCount <= cfg.broadcastScheduleLimit
-    // past the broadcast bound the fetch join is storage-partitioned: the
-    // bucketed link-graph side scans in place and the schedule builds a
-    // hash table (SHUFFLE_HASH — the schedule is the bounded side; an SMJ
-    // would re-sort it every round), so only O(schedule) rows shuffle
-    def maybeBc(df: DataFrame): DataFrame =
-      if (small) broadcast(df) else df.hint("shuffle_hash")
-    val docsLinks = linkGraph(docs)
-    // fetched is cached SLIM — without the links arrays. The arrays are
-    // consumed exactly once (the explode below), so caching them bought
-    // nothing and cost everything: at the xl bench web the array-bearing
-    // cache overflowed storage memory and churned ~5 GB of spill through
-    // spark.local.dir per crawl (measured — the dominant source of the
-    // 32-thread tmpfs contention), and at 100 TB it would be the round's
-    // largest memory consumer. The one extra pass this costs is a
-    // column-pruned scan of the slim links projection + a re-broadcast
-    // join (explode+resolve+canon of 12M links measured 0.6 s at 32
-    // cores) — the links arrays now STREAM through the explode without
-    // ever being materialized in cache.
-    def fetchJoin = docsLinks.join(maybeBc(sched),
-      docsLinks("doc_id") === sched("canon"))
-    // `fetched` carries EVERY schedule row plus a hit flag — the 200/404
-    // split and the lineage counts both read this one cache. Past the
-    // broadcast bound it is ONE right-outer storage-partitioned join
-    // (graph side scans in place, schedule builds the hash table —
-    // SPARK-36612 build-on-preserved-side; sched rows with no doc are the
-    // 404s): the previous hit-join + 404-anti-join shape shuffled the
-    // schedule twice more per round. Under the bound the preserved side
-    // cannot be the broadcast side (BHJ builds only the non-preserved
-    // side), so the hit canons are broadcast back into ONE left-outer join
-    // that keeps the schedule's partitioning (a hit ∪ 404 union doubles it).
-    val fetched = (
-      if (small) {
-        val hits = docsLinks.join(broadcast(sched),
-            docsLinks("doc_id") === sched("canon"))
-          .select($"doc_id".as("canon"), lit(true).as("hit"))
-        sched.join(broadcast(hits), Seq("canon"), "left_outer")
-          .select($"canon", $"host", $"depth", $"seq", $"fetchTime",
-                  coalesce($"hit", lit(false)).as("hit"))
-      } else {
-        docsLinks.join(sched.hint("shuffle_hash"),
-            docsLinks("doc_id") === sched("canon"), "right_outer")
-          .select($"canon", $"host", $"depth", $"seq", $"fetchTime",
-                  $"doc_id".isNotNull.as("hit"))
-      }
-    ).transform(scope.cache)
-    val crawlLogRound = fetched
-      .select(lit(r).as("round"), $"fetchTime", $"host", $"canon",
-              $"depth", $"seq",
-              when($"hit", lit(200)).otherwise(lit(404)).as("status"))
+  /** fetch — the schedule against the once-per-crawl link graph. The 100 TB
+    * doc table is scanned EXACTLY ONCE PER CRAWL (`linkGraph`); each round
+    * joins the schedule against that slim (doc_id, links) table. The result
+    * carries EVERY schedule row plus a hit flag (null doc ⇒ 404), so the
+    * crawl log and the lineage counts read this one cache, never a second
+    * scan of the graph. It is cached SLIM, without the links arrays: they
+    * are consumed once (`discover`), and at the xl bench web the
+    * array-bearing cache overflowed storage memory and churned ~5 GB of
+    * spill per crawl (measured); `discover` re-joins the column-pruned
+    * graph instead (explode+resolve+canon of 12M links: 0.6 s at 32 cores).
+    *
+    * Past the broadcast threshold the fetch is ONE right-outer
+    * storage-partitioned join: the bucketed graph side scans in place and
+    * the schedule builds the hash table (SHUFFLE_HASH — SPARK-36612
+    * build-on-preserved-side), so only O(schedule) rows shuffle and the
+    * schedule never crosses the driver. Under the threshold the preserved
+    * side cannot be the broadcast side (BHJ builds only the non-preserved
+    * side), so the hit canons are broadcast back into ONE left-outer join that
+    * keeps the schedule's partitioning. */
+  private def fetch(scope: RoundScope, scheduled: DataFrame, docsLinks: DataFrame,
+                    small: Boolean): DataFrame = {
+    val sched = scheduled.select($"canon", $"host", $"depth", $"seq", $"fetchTime")
+    // kept on measurement: the right-outer path alone made frontier-wide's
+    // round ~0.5 s slower at local[4] (6 pairs: median 7.04 → 7.54 s)
+    (if (small) {
+      val hits = docsLinks.join(broadcast(sched), docsLinks("doc_id") === sched("canon"))
+        .select($"doc_id".as("canon"), lit(true).as("hit"))
+      sched.join(broadcast(hits), Seq("canon"), "left_outer")
+        .select($"canon", $"host", $"depth", $"seq", $"fetchTime",
+                coalesce($"hit", lit(false)).as("hit"))
+    } else {
+      docsLinks.join(sched.hint("shuffle_hash"),
+          docsLinks("doc_id") === sched("canon"), "right_outer")
+        .select($"canon", $"host", $"depth", $"seq", $"fetchTime",
+                $"doc_id".isNotNull.as("hit"))
+    }).transform(scope.cache)
+  }
 
-    // ---- link extraction → canon → min-depth per target -------------------
-    // cached: every downstream consumer re-derives its slice from this
-    // 2-column frame — caching the WIDE gated union instead cost 25 s of
-    // columnar build at the bench web, 7× the uncached recompute of the tail
-    val linksObs = Observation(s"links_${obsToken}_r$r")
-    val links = fetchJoin
+  /** discover — link extraction → resolve → canon → min depth per target,
+    * streamed from the link graph (see `fetch`). Cached: every downstream
+    * consumer re-derives its slice from this 2-column frame — caching the
+    * WIDE gated union instead cost 25 s of columnar build at the bench web,
+    * 7× the uncached recompute of the tail. */
+  private def discover(scope: RoundScope, scheduled: DataFrame, docsLinks: DataFrame,
+                       small: Boolean, obs: Observation): DataFrame = {
+    val sched = scheduled.select($"canon", $"depth")
+    docsLinks.join(if (small) broadcast(sched) else sched.hint("shuffle_hash"),
+        docsLinks("doc_id") === sched("canon"))
       .select($"canon".as("doc_id"), $"depth", explode($"links").as("ref"))
       .withColumn("target", resolve_url($"doc_id", $"ref"))
       .filter($"target".isNotNull)
       .withColumn("canon2", canonicalize_url($"target"))
       .groupBy($"canon2".as("canon"))
       .agg((min($"depth") + 1).as("depth"))
-      .observe(linksObs, count(lit(1)).as("n"))
+      .observe(obs, count(lit(1)).as("n"))
       .transform(scope.cache)
+  }
 
-    // ---- dedup: per-shard bloom fast path + exact anti-join vs the
-    // BUCKETED seen table. Bloom has no false negatives ⇒ !might_contain
-    // rows are PROVABLY new and skip the join entirely; might_contain rows
-    // get the exact decision via LEFT ANTI against the storage-partitioned
-    // seen side (only the candidate side shuffles; SHUFFLE_HASH build on
-    // the seen bucket — no per-round re-sort of the seen set). LEFT ANTI
-    // is also dup-safe: duplicate build rows (possible only after a
-    // crash-retry append) cannot duplicate probe rows.
+  /** dedup — per-shard bloom fast path + exact anti-join vs the BUCKETED
+    * seen table. Bloom has no false negatives ⇒ !might_contain rows are
+    * PROVABLY new and skip the join entirely; might_contain rows get the
+    * exact decision via LEFT ANTI against the storage-partitioned seen side
+    * (only the candidate side shuffles; SHUFFLE_HASH build on the seen
+    * bucket — no per-round re-sort of the seen set). LEFT ANTI is also
+    * dup-safe: duplicate build rows (possible only after a crash-retry
+    * append) cannot duplicate probe rows. Shard routing = the seen-table
+    * BUCKET id (murmur3), key = xxhash64: bloom shards align 1:1 with the
+    * buckets. */
+  private def dedup(links: DataFrame, seenPrev: DataFrame,
+                    descBc: Broadcast[BloomDesc]): DataFrame = {
     val withKey = links.withColumn("key", xxhash64($"canon"))
       .withColumn("bshard", pmod(hash($"canon"), lit(cfg.seenShards)))
-    val seenPrev = seen.upTo(r - 1).hint("shuffle_hash")
-    val freshRaw = withKey.filter(mightContain($"bshard", $"key"))
-      .join(seenPrev, Seq("canon"), "left_anti")
-      .unionByName(withKey.filter(!mightContain($"bshard", $"key")))
+    val maybeSeen = graft.functions.bloomfns.bloom_probe($"bshard", $"key", descBc)
+    withKey.filter(maybeSeen)
+      .join(seenPrev.hint("shuffle_hash"), Seq("canon"), "left_anti")
+      .unionByName(withKey.filter(!maybeSeen))
+  }
 
-    // ---- robots gate (blocked URLs enter seen, never the frontier) --------
-    // The native codegen'd `robots_allows` expression; its rule source is
-    // pluggable behind GateExprHelper.
-    val gated = freshRaw
-      .withColumn("host", url_host($"canon"))
-      .withColumn("path", url_path($"canon"))
-      .withColumn("allowed", robots_allows($"host", $"path"))
-    // fresh = the round's genuinely-new canons (allowed AND blocked — both
-    // enter the seen set), tagged with their seq shard. Cached slim: it
-    // feeds the metrics agg, the seen append, the bloom delta, and the
-    // frontier/lineage writes.
-    val fresh = gated
+  /** gate — robots (the codegen'd `robots_allows`; its rule source is
+    * pluggable behind GateExprHelper). Blocked URLs enter seen, never the
+    * frontier. The result is the round's genuinely-new canons (allowed AND
+    * blocked), tagged with their seq shard and cached slim: it feeds the
+    * metrics agg, the seen append, the bloom delta and the frontier write. */
+  private def gate(scope: RoundScope, fresh: DataFrame): DataFrame =
+    fresh.withColumn("host", url_host($"canon"))
+      .withColumn("allowed", robots_allows($"host", url_path($"canon")))
       .withColumn("seqshard", pmod(xxhash64($"canon"), lit(UrlCanon.SeqShards.toLong)))
       .select($"canon", $"host", $"depth", $"allowed", $"seqshard")
       .transform(scope.cache)
 
-    // ---- ONE metrics action for the whole round ---------------------------
-    // The 64-row per-seqshard aggregation is the round's only collect: it
-    // materializes the schedule/fetch/links/fresh caches, fires the
-    // schedule-count and candidate-count observations riding the same job,
-    // and its per-shard new counts are exactly the offsets the seq
-    // assignment needs — replacing round 2's separate count() action,
-    // range-sampling job and zipWithIndex constructor job.
-    val shardRows = timed("metrics") {
-      fresh.groupBy($"seqshard").agg(
-        sum(when($"allowed", 1L).otherwise(0L)).as("nnew"),
-        sum(when(!$"allowed", 1L).otherwise(0L)).as("blocked")).collect()
-    }
+  /** The round's ONE collect: the 64-row per-seqshard aggregation
+    * materializes the schedule/fetch/links/fresh caches, fires the
+    * schedule-count and candidate-count observations riding the same job,
+    * and its per-shard new counts are exactly the offsets `assignSeqs`
+    * needs — no separate count(), range-sampling or zipWithIndex job.
+    * Returns (new URLs per seq shard, blocked URLs). */
+  private def shardCounts(fresh: DataFrame): (Array[Long], Long) = {
+    val rows = fresh.groupBy($"seqshard").agg(
+      sum(when($"allowed", 1L).otherwise(0L)).as("nnew"),
+      sum(when(!$"allowed", 1L).otherwise(0L)).as("blocked")).collect()
     val newPerShard = new Array[Long](UrlCanon.SeqShards)
-    var blockedCount = 0L
-    shardRows.foreach { row =>
-      val k = row.getLong(0).toInt
-      newPerShard(k) = row.getLong(1)
-      blockedCount += row.getLong(2)
-    }
-    val nNew = newPerShard.sum
-    val nScheduled = schedObs.get("n").asInstanceOf[Long]
-    val nDiscovered = linksObs.get("n").asInstanceOf[Long]
+    rows.foreach(row => newPerShard(row.getLong(0).toInt) = row.getLong(1))
+    (newPerShard, rows.map(_.getLong(2)).sum)
+  }
 
-    // ---- deterministic seq assignment with NO extra jobs ------------------
-    // Global order = (seqShard(canon), canon) — a FIXED 64-way hash spec
-    // shared with the oracle (UrlCanon.SeqShards). Shard offsets come from
-    // the metrics agg above. The shards route to `writeWidth(nNew)`
-    // partitions (a whole shard per partition); each partition sorts
-    // locally by (shard, canon) — one round's slice of its shards, bounded —
-    // and numbers every shard contiguously from its offset.
-    // (An RDD, not a window: the cache is then built from an RDD whose plan
-    // does not reference the seen table, so the seen append's cache refresh
-    // — it recaches every plan that reads the table it wrote — cannot drop
-    // it while its commit-wave consumers still run.)
-    val offsets = new Array[Long](UrlCanon.SeqShards)
-    var acc = seqBase
-    (0 until UrlCanon.SeqShards).foreach { k => offsets(k) = acc; acc += newPerShard(k) }
-    val newRdd = fresh.filter($"allowed")
+  /** assignSeqs — deterministic discovery seqs with NO extra jobs. Global
+    * order = (seqShard(canon), canon), a FIXED 64-way hash spec shared with
+    * the oracle (UrlCanon.SeqShards); shard offsets come from
+    * `shardCounts`. The shards route to `writeWidth(nNew)` partitions (a
+    * whole shard per partition); each partition sorts locally by (shard,
+    * canon) — one round's slice of its shards, bounded — and numbers every
+    * shard contiguously from its offset. (An RDD, not a window: the cache
+    * is then built from an RDD whose plan does not reference the seen
+    * table, so the seen append's cache refresh — it recaches every plan
+    * that reads the table it wrote — cannot drop it while its commit-wave
+    * consumers still run.) The closures capture only `offsets` and `r`. */
+  private def assignSeqs(scope: RoundScope, fresh: DataFrame, newPerShard: Array[Long],
+                         seqBase: Long, r: Int): DataFrame = {
+    val offsets = newPerShard.scanLeft(seqBase)(_ + _)
+    fresh.filter($"allowed")
       .select($"seqshard", $"canon", $"host", $"depth")
       .as[(Long, String, String, Int)].rdd
       .map { case (s, c, h, d) => (s.toInt, (c, h, d)) }
-      .partitionBy(new org.apache.spark.HashPartitioner(writeWidth(nNew)))
+      .partitionBy(new HashPartitioner(writeWidth(newPerShard.sum)))
       .mapPartitions { it =>
         val arr = it.toArray
         scala.util.Sorting.quickSort(arr)(
@@ -752,30 +743,75 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
           (c, h, d, seq - 1, r)
         }
       }
-    val newEntries = newRdd.toDF("canon", "host", "depth", "seq", "discovered_round")
+      .toDF("canon", "host", "depth", "seq", "discovered_round")
       .transform(scope.cache)
+  }
 
-    // ---- state updates -----------------------------------------------------
-    // frontier DELTA: this round's discoveries only, every round — a
-    // compaction round additionally lands the frontier_compact artifact
-    // (started at round open, see compactFut) and moves the read base.
-    val newBase = if (isCompaction) r.toLong else base.toLong
-    // host_next: ONE aggregation over the prior clocks ∪ the schedule (whose
-    // rows carry the host's prior clock, joined in above) advances each
-    // scheduled host by rank×delay; AQE sizes the write to the host count.
-    val hostsObs = Observation(s"hosts_${obsToken}_r$r")
-    val hostNextNew = scheduled.select($"host", $"next_time", $"rank", $"delay")
+  /** updateBlooms — the per-shard sidecars for snapshot r, started in the
+    * background and awaited by `commit`. Returns the capacity and per-shard
+    * blob versions to publish: a delta advances only the touched shards to
+    * r, a rebuild advances every shard — the manifest is what the NEXT
+    * round's probe reads. When the seen count outgrows capacity/2 the
+    * shards are rebuilt at 4× capacity from the seen table (O(log n)
+    * rebuilds per crawl) until the per-shard clamp binds; from then on a
+    * rebuild would rescan the seen set for identically sized filters, so
+    * deltas keep merging and the warning says to add shards. */
+  private def updateBlooms(scope: RoundScope, r: Int, fresh: DataFrame,
+                           freshBuckets: DataFrame, nFresh: Long, newSeenTotal: Long,
+                           capPerShard: Long, priorVer: Array[Int]): Future[(Long, Array[Int])] =
+    scope.track(Future(timed("bloom") {
+      val over = newSeenTotal > capPerShard * cfg.seenShards / 2
+      if (nFresh == 0) (capPerShard, priorVer)
+      else if (over && capPerShard < FrontierEngine.BloomClampItems) {
+        var cap = capPerShard
+        while (newSeenTotal > cap * cfg.seenShards / 2 && cap < FrontierEngine.BloomClampItems)
+          cap *= 4
+        // the bucketed scan is already partition == bucket; the union with
+        // this round's delta needs one explicit repartition
+        val full = seenSet(Some(r - 1)).unionByName(fresh.select($"canon"))
+          .repartition(cfg.seenShards, $"canon")
+        val written = writeBucketBlooms(full, cap, r, Array.fill(cfg.seenShards)(-1))
+        // shards the rebuild didn't touch must still advance to the new
+        // sizing, or later delta merges see mismatched bit counts
+        (0 until cfg.seenShards).filterNot(written).foreach { k =>
+          val bos = new java.io.ByteArrayOutputStream()
+          BloomFilter.create(math.min(cap, FrontierEngine.BloomClampItems), bitsFor(cap))
+            .writeTo(bos)
+          store.writeBlob(r, BloomRegistry.blobName(k), bos.toByteArray)
+        }
+        (cap, Array.fill(cfg.seenShards)(r))
+      } else {
+        if (over)
+          System.err.println(s"[frontier] WARN seen_total=$newSeenTotal exceeds " +
+            s"clamped bloom capacity (${cfg.seenShards} shards x $capPerShard); " +
+            "fpp degrades — raise seenShards")
+        val written = writeBucketBlooms(freshBuckets, capPerShard, r, priorVer)
+        (capPerShard, Array.tabulate(cfg.seenShards)(k => if (written(k)) r else priorVer(k)))
+      }
+    })(ExecutionContext.global))
+
+  /** The round's crawl-log rows: one per scheduled URL, 200 or 404. */
+  private def crawlLogOf(r: Int, fetched: DataFrame): DataFrame =
+    fetched.select(lit(r).as("round"), $"fetchTime", $"host", $"canon",
+      $"depth", $"seq", when($"hit", lit(200)).otherwise(lit(404)).as("status"))
+
+  /** host_next: ONE aggregation over the prior clocks ∪ the schedule (whose
+    * rows carry the host's prior clock, joined in by `schedule`) advances
+    * each scheduled host by rank×delay; AQE sizes the write to the host
+    * count. */
+  private def advanceClocks(scheduled: DataFrame, hostNext: DataFrame): DataFrame =
+    scheduled.select($"host", $"next_time", $"rank", $"delay")
       .unionByName(hostNext, allowMissingColumns = true)
       .groupBy($"host")
       .agg((max($"next_time") + coalesce(max($"rank") * max($"delay"), lit(0L)))
         .as("next_time"))
-      .observe(hostsObs, count(lit(1)).as("n"))
 
-    // per-host lineage for this round (north rule: per-partition lineage):
-    // ONE aggregation over the slim `fetched` cache ∪ the round's new
-    // entries, written with its natural (AQE-coalesced) partitioning — no
-    // single-task coalesce anywhere in the commit.
-    val lineage = fetched.select($"host", $"hit")
+  /** Per-host lineage for round r (north rule: per-partition lineage): ONE
+    * aggregation over the slim `fetched` cache ∪ the round's new entries,
+    * written with its natural (AQE-coalesced) partitioning. */
+  private def lineageOf(r: Int, fetched: DataFrame, newEntries: DataFrame,
+                        deduped: Long, blocked: Long): DataFrame =
+    fetched.select($"host", $"hit")
       .unionByName(newEntries.select($"host", lit(true).as("new")),
         allowMissingColumns = true)
       .groupBy($"host").agg(
@@ -784,101 +820,41 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
         count(when(!$"hit", 1)).as("fetched_404"),
         count($"new").as("discovered"))
       .select(lit(r).as("round"), $"host", $"scheduled", $"fetched_200",
-        $"fetched_404", $"discovered",
-        lit(nDiscovered - nNew - blockedCount).as("deduped"),
-        lit(blockedCount).as("blocked"))
+        $"fetched_404", $"discovered", lit(deduped).as("deduped"),
+        lit(blocked).as("blocked"))
 
-    // ---- commit: ONE concurrent wave, then the atomic publish --------------
-    // Table writes, the seen-table append and the bloom sidecar update all
-    // run in parallel (independent jobs over the wave-1 caches); the
-    // metadata rename lands only after every one of them is durable.
-    //
-    // Deliberately NOT ordered around the shared caches (`fetched`,
-    // `newEntries`, `freshBuckets` are each consumed by two concurrent
-    // jobs): a round-6 A/B that materialized each cache once in head jobs
-    // and chained the consumers measured ~10% SLOWER at local[32] AND
-    // slower per-round at local[8] (xl, clean same-window pairs 58.1 vs
-    // 64.2 s @32) — in local mode the block manager's per-block write
-    // locks already serialize concurrent computation of the same cached
-    // partition (second job blocks, then reads), so the races cost little,
-    // while the head-job barrier + extra cache-read pass cost real wall
-    // clock. The INIT wave is the exception (see init): its seed cache
-    // parent is a driver-local relation racing the link-graph build, where
-    // the one-time materialization measured 19 s faster at local[8].
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val newSeenTotal = seenTotal + nNew + blockedCount
-    // ONE shuffle shared by the seen append and the bloom sidecar build:
-    // both consume this bucket-partitioned cache (partition id == bucket id
-    // == bloom shard id), so the bloom update costs no shuffle of its own
-    val freshBuckets = fresh.select($"canon")
-      .repartition(cfg.seenShards, $"canon").transform(scope.cache)
-    // each branch returns (capacity, per-shard blob versions to publish):
-    // delta writes advance only the touched shards to r, rebuilds advance
-    // every shard — the manifest is what the NEXT round's probe reads
-    def deltaVers(written: Set[Int]): Array[Int] =
-      Array.tabulate(cfg.seenShards)(k => if (written(k)) r else priorVer(k))
-    val bloomFut: Future[(Long, Array[Int])] = scope.track(Future {
-      timed("bloom") {
-        if (nNew + blockedCount == 0) (capPerShard, priorVer)
-        else if (capPerShard >= 4000000L) {
-          // the per-shard clamp binds: a rebuild would rescan the seen set
-          // for byte-identically sized filters. Keep merging deltas; the
-          // fix is more shards, not more capacity.
-          if (newSeenTotal > capPerShard * cfg.seenShards / 2)
-            System.err.println(s"[frontier] WARN seen_total=$newSeenTotal exceeds " +
-              s"clamped bloom capacity (${cfg.seenShards} shards x $capPerShard); " +
-              "fpp degrades — raise seenShards")
-          (capPerShard, deltaVers(writeBucketBlooms(freshBuckets, capPerShard, r, priorVer)))
-        } else if (newSeenTotal > capPerShard * cfg.seenShards / 2) {
-          var cap = capPerShard
-          while (newSeenTotal > cap * cfg.seenShards / 2 && cap < 4000000L) cap *= 4
-          // rebuild from the full seen set (the bucketed scan is already
-          // partition==bucket; the union with this round's delta needs one
-          // explicit repartition — rebuilds are O(log n) per crawl)
-          val full = seenSet(Some(r - 1)).unionByName(fresh.select($"canon"))
-            .repartition(cfg.seenShards, $"canon")
-          val written = writeBucketBlooms(full, cap, r, Array.fill(cfg.seenShards)(-1))
-          // shards the rebuild didn't touch must still advance to the new
-          // sizing, or later delta merges see mismatched bit counts
-          (0 until cfg.seenShards).filterNot(written).foreach { k =>
-            val bf = BloomFilter.create(math.min(cap, 4000000L), bitsFor(cap))
-            val bos = new java.io.ByteArrayOutputStream()
-            bf.writeTo(bos)
-            store.writeBlob(r, bloomBlobName(k), bos.toByteArray)
-          }
-          (cap, Array.fill(cfg.seenShards)(r))
-        } else {
-          (capPerShard, deltaVers(writeBucketBlooms(freshBuckets, capPerShard, r, priorVer)))
-        }
-      }
-    })
-    val seenFut: Future[Unit] = scope.track(Future {
+  /** commit — ONE concurrent wave, then the atomic publish. The table
+    * writes, the seen-table append and the bloom update (already running)
+    * are independent jobs over the wave-1 caches; the metadata rename lands
+    * only after every one of them — and a compaction round's artifact — is
+    * durable.
+    *
+    * Deliberately NOT ordered around the shared caches (`fetched`,
+    * `newEntries`, `freshBuckets` are each consumed by two concurrent
+    * jobs): a round-6 A/B that materialized each cache once in head jobs
+    * and chained the consumers measured ~10% SLOWER at local[32] AND
+    * slower per-round at local[8] (xl, clean same-window pairs 58.1 vs
+    * 64.2 s @32) — in local mode the block manager's per-block write
+    * locks already serialize concurrent computation of the same cached
+    * partition (second job blocks, then reads), so the races cost little,
+    * while the head-job barrier + extra cache-read pass cost real wall
+    * clock. The INIT wave is the exception (see init): its seed cache
+    * parent is a driver-local relation racing the link-graph build, where
+    * the one-time materialization measured 19 s faster at local[8]. */
+  private def commit(scope: RoundScope, r: Int, freshBuckets: DataFrame,
+                     bloomFut: Future[(Long, Array[Int])],
+                     compactFut: Option[Future[Map[String, String]]],
+                     tables: Map[String, DataFrame], metrics: Map[String, Long]): Unit = {
+    val seenFut = scope.track(Future {
       timed("seen")(seen.append(freshBuckets, r, prePartitioned = true))
-    })
-    val manifest = timed("commit") {
-      store.writeTables(r,
-        Map("frontier" -> newEntries,
-            "host_next" -> hostNextNew,
-            "crawl_log" -> crawlLogRound.coalesce(writeWidth(nScheduled)),
-            "lineage" -> lineage))
-    }
-    val (capOut, versOut) = timed("await-bloom")(Await.result(bloomFut, Duration.Inf))
+    }(ExecutionContext.global))
+    val manifest = timed("commit")(store.writeTables(r, tables))
+    val (cap, vers) = timed("await-bloom")(Await.result(bloomFut, Duration.Inf))
     timed("await-seen")(Await.result(seenFut, Duration.Inf))
     val compactManifest = compactFut.map(f =>
       timed("await-compact")(Await.result(f, Duration.Inf))).getOrElse(Map.empty)
-    val hostsTotalNew = hostsObs.get("n").asInstanceOf[Long]
     timed("publish")(store.publish(r, manifest ++ compactManifest,
-      Map("seq_base" -> (seqBase + nNew),
-          "seen_total" -> newSeenTotal,
-          "consumed_total" -> (consumedTotal + nScheduled),
-          "scheduled" -> nScheduled, "discovered" -> nDiscovered,
-          "new_frontier" -> nNew, "blocked" -> blockedCount,
-          "deduped" -> (nDiscovered - nNew - blockedCount),
-          "bloom_capacity" -> capOut,
-          "frontier_base" -> newBase,
-          "hosts_total" -> hostsTotalNew),
-      bloomVersProp(versOut)))
-    nScheduled
+      metrics + ("bloom_capacity" -> cap), bloomVersProp(vers)))
   }
 
   /** Run until the frontier drains or maxRounds — resuming from the last

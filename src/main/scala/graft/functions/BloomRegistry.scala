@@ -45,6 +45,10 @@ object BloomRegistry {
         size() > maxEntries
     }
 
+  /** The sidecar blob of one bloom shard: the engine writes it, `load`
+    * reads it, under this one name. */
+  def blobName(shard: Int): String = s"seen.bloom.$shard"
+
   private[graft] def cachedCount: Int = cache.synchronized(cache.size())
   private[graft] def clear(): Unit = cache.synchronized(cache.clear())
 
@@ -60,7 +64,7 @@ object BloomRegistry {
     }
     // storage read OUTSIDE the lock — a slow shared-storage fetch must not
     // serialize every other task's cache hits behind it
-    val bf = BloomFilter.readFrom(desc.store.readBlob(v, s"seen.bloom.$shard"))
+    val bf = BloomFilter.readFrom(desc.store.readBlob(v, blobName(shard)))
     cache.synchronized {
       val prior = cache.get(key) // another task may have won the race
       if (prior != null) prior else { cache.put(key, bf); bf }

@@ -13,6 +13,12 @@ object bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** The session's `spark.sql.autoBroadcastJoinThreshold` in bytes, as
+    * the planner reads it (-1: broadcast nothing). */
+  def broadcastThreshold(spark: org.apache.spark.sql.SparkSession): Long =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.conf.autoBroadcastJoinThreshold
+
   /** Register the graft SQL functions on an EXISTING session (the
     * SparkSessionExtensions route only applies at session build time). */
   def registerGraftFunctions(spark: org.apache.spark.sql.SparkSession): Unit = {

@@ -8,6 +8,7 @@ import graft.model.DocSynth
 import graft.oracle.OracleCrawler
 import graft.snapshots.{HadoopStorage, SnapshotStore}
 import org.apache.spark.graft.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 /** The north-rule equality gate: the Spark BSP frontier must produce the
   * EXACT crawl order and URL-seen set of the single-threaded oracle under
@@ -108,16 +109,33 @@ class FrontierEqualitySpec extends SparkSuite {
   }
 
   test("storage-partitioned fetch path (schedule past broadcast bound) ≡ oracle") {
-    // broadcastScheduleLimit=0 forces every round through the bucketed
-    // link-graph join (shuffle_hash schedule build) and broadcastHostLimit=0
-    // through the shuffled host_next join — the paths a 10^8-pending crawl
-    // runs, which the default config's tiny test webs never reach
+    // autoBroadcastJoinThreshold=-1 forces every round through the bucketed
+    // link-graph join (shuffle_hash schedule build) and the shuffled
+    // host_next join — the paths a 10^8-pending crawl runs, which the
+    // default threshold's tiny test webs never reach. The engine broadcasts
+    // only what Spark's own rule would, so no round runs a broadcast job.
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prior = spark.conf.get(key)
     val store = freshStore()
-    val engine = new FrontierEngine(spark, store,
-      EngineConfig(perHostBudget = budget,
-        broadcastScheduleLimit = 0, broadcastHostLimit = 0))
+    val engine = new FrontierEngine(spark, store, EngineConfig(perHostBudget = budget))
     val docs = DocSynth.docs(spark, cfg).toDF().cache()
-    engine.run(docs, DocSynth.seeds(cfg), 5)
+    val broadcastJobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(
+            _.getProperty("spark.job.tags", "").contains("broadcast exchange")))
+          broadcastJobs.incrementAndGet()
+    }
+    spark.conf.set(key, "-1")
+    spark.sparkContext.addSparkListener(listener)
+    try engine.run(docs, DocSynth.seeds(cfg), 5)
+    finally {
+      ListenerDrain(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(listener)
+      spark.conf.set(key, prior)
+    }
+    assert(broadcastJobs.get === 0,
+      s"${broadcastJobs.get} broadcast exchange jobs ran with broadcasting off")
     val sparkLog = engine.crawlLog()
       .select($"round", $"fetchTime", $"host", $"canon", $"depth", $"seq", $"status")
       .as[(Int, Long, String, String, Int, Long, Int)].collect().toVector

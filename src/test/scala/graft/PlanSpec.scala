@@ -91,7 +91,7 @@ class PlanSpec extends SparkSuite {
   }
 
   test("fetch join is storage-partitioned: bucketed link-graph side scans in place") {
-    // the 100 TB-corpus question: past the schedule-broadcast bound the
+    // the 100 TB-corpus question: past the broadcast threshold the
     // fetch join must shuffle ONLY the skinny schedule — the bucketed
     // link-graph scan carries HashPartitioning(doc_id, shards) and gets no
     // Exchange and no Sort (SHUFFLE_HASH build on the schedule side)
@@ -101,8 +101,7 @@ class PlanSpec extends SparkSuite {
     import org.apache.spark.sql.functions._
     val root = java.nio.file.Files.createTempDirectory("plan-links").toString
     val store = new SnapshotStore(root)
-    val engine = new FrontierEngine(spark, store,
-      EngineConfig(perHostBudget = 3, broadcastScheduleLimit = 0))
+    val engine = new FrontierEngine(spark, store, EngineConfig(perHostBudget = 3))
     val cfg = DocSynth.Config(nHosts = 8, pagesPerHost = 15, hotFactor = 2,
       linksPerDoc = 4, seed = 12L)
     engine.run(DocSynth.docs(spark, cfg).toDF(), DocSynth.seeds(cfg), 2)

@@ -61,6 +61,7 @@ class RoundShapeSpec extends SparkSuite {
     val inference = stages.filter { case (_, t, rdds) =>
       t == 1 && rdds.exists(_.startsWith("ParallelCollectionRDD")) }
     assert(inference.isEmpty, s"schema-inference jobs ran:\n$shape")
+    info(shape.linesIterator.next())
     // pinned at this round's counts (25 jobs, 26 stages, 590 tasks at
     // local[32]) plus one 32-task job: two commit-wave jobs that read a
     // shared cache concurrently may each run its materializing stage, as
