@@ -111,10 +111,11 @@ case class EngineConfig(
   *     graph, written as a BUCKETED table CLUSTERED BY doc_id; per-round
   *     fetch joins touch that slim table — never the 100 TB doc table.
   *     Whether the schedule and host_next joins broadcast is Spark's own
-  *     rule: plan-size estimate against `spark.sql.autoBroadcastJoinThreshold`
-  *     (driver-side statistics, no job). host_next carries no hint; the
-  *     fetch takes its broadcast branch only while the pending frontier's
-  *     estimate is within the threshold. Past it the fetch
+  *     rule: size estimate against `spark.sql.autoBroadcastJoinThreshold`
+  *     (driver-side, no job). host_next carries no hint, so the planner
+  *     sizes it from its files; the fetch broadcasts the schedule only
+  *     while the committed pending count times Spark's per-row estimate
+  *     is within the threshold (`scheduleFits`). Past it the fetch
   *     join is STORAGE-PARTITIONED — the bucketed graph side scans in
   *     place and only the skinny schedule shuffles (SHUFFLE_HASH build),
   *     so per-round fetch shuffle volume is O(schedule), never O(corpus),
@@ -526,7 +527,7 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
     val linksObs = Observation(s"links_${obsToken}_r$r")
     val scheduled = schedule(scope, frontier, hostNext, schedObs)
     val docsLinks = linkGraph(docs)
-    val smallSchedule = withinBroadcastThreshold(frontier)
+    val smallSchedule = scheduleFits(scheduled, pendingCount)
     val fetched = fetch(scope, scheduled, docsLinks, smallSchedule)
     val links = discover(scope, scheduled, docsLinks, smallSchedule, linksObs)
     val fresh = gate(scope, dedup(links, seen.upTo(r - 1), descBc))
@@ -581,14 +582,17 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
         frontier.coalesce(math.max(8, writeWidth(pendingCount)))))
     }(ExecutionContext.global))
 
-  /** Spark's own broadcast rule, the one its join planner applies: a plan
-    * broadcasts while its size estimate is within
-    * `spark.sql.autoBroadcastJoinThreshold` (-1: never). The estimate is
-    * driver-side plan statistics — no job. */
-  private def withinBroadcastThreshold(df: DataFrame): Boolean = {
-    val size = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    size >= 0 && size <= bridge.broadcastThreshold(spark)
-  }
+  /** Spark's broadcast rule (`bridge.fitsBroadcast`) for the widest frame
+    * the fetch broadcasts, `discover`'s (canon, depth): at most `pending`
+    * rows of 32 B by Spark's estimate, so up to 327,680 pending URLs at the
+    * 10 MiB default. Not the frontier's plan estimate: that is compressed
+    * parquet (~6.6 B a URL) and counts consumed URLs until compaction. */
+  private def scheduleFits(scheduled: DataFrame, pending: Long): Boolean =
+    bridge.fitsBroadcast(scheduled.select($"canon", $"depth"), pending)
+
+  /** The schedule as a join's build side: broadcast, or a shuffled hash build. */
+  private def schedSide(sched: DataFrame, small: Boolean): DataFrame =
+    if (small) broadcast(sched) else sched.hint("shuffle_hash")
 
   /** schedule — politeness: per-host top-B by (depth, seq), positioned on
     * each host's logical clock. One exact window whose partial group limit
@@ -632,13 +636,13 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
     // kept on measurement: the right-outer path alone made frontier-wide's
     // round ~0.5 s slower at local[4] (6 pairs: median 7.04 → 7.54 s)
     (if (small) {
-      val hits = docsLinks.join(broadcast(sched), docsLinks("doc_id") === sched("canon"))
+      val hits = docsLinks.join(schedSide(sched, small), docsLinks("doc_id") === sched("canon"))
         .select($"doc_id".as("canon"), lit(true).as("hit"))
       sched.join(broadcast(hits), Seq("canon"), "left_outer")
         .select($"canon", $"host", $"depth", $"seq", $"fetchTime",
                 coalesce($"hit", lit(false)).as("hit"))
     } else {
-      docsLinks.join(sched.hint("shuffle_hash"),
+      docsLinks.join(schedSide(sched, small),
           docsLinks("doc_id") === sched("canon"), "right_outer")
         .select($"canon", $"host", $"depth", $"seq", $"fetchTime",
                 $"doc_id".isNotNull.as("hit"))
@@ -653,8 +657,7 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
   private def discover(scope: RoundScope, scheduled: DataFrame, docsLinks: DataFrame,
                        small: Boolean, obs: Observation): DataFrame = {
     val sched = scheduled.select($"canon", $"depth")
-    docsLinks.join(if (small) broadcast(sched) else sched.hint("shuffle_hash"),
-        docsLinks("doc_id") === sched("canon"))
+    docsLinks.join(schedSide(sched, small), docsLinks("doc_id") === sched("canon"))
       .select($"canon".as("doc_id"), $"depth", explode($"links").as("ref"))
       .withColumn("target", resolve_url($"doc_id", $"ref"))
       .filter($"target".isNotNull)

@@ -1,7 +1,8 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Minimal bridge into `private[sql]` Column↔Expression conversion —
@@ -13,11 +14,13 @@ object bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
-  /** The session's `spark.sql.autoBroadcastJoinThreshold` in bytes, as
-    * the planner reads it (-1: broadcast nothing). */
-  def broadcastThreshold(spark: org.apache.spark.sql.SparkSession): Long =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.conf.autoBroadcastJoinThreshold
+  /** Spark's broadcast rule at a known row count: `rows` × the planner's
+    * per-row estimate for `df`'s columns within the session's
+    * `spark.sql.autoBroadcastJoinThreshold` (-1: never). No job. */
+  def fitsBroadcast(df: DataFrame, rows: Long): Boolean = {
+    val threshold = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    threshold >= 0 && EstimationUtils.getSizePerRow(df.queryExecution.analyzed.output) * rows <= threshold
+  }
 
   /** Register the graft SQL functions on an EXISTING session (the
     * SparkSessionExtensions route only applies at session build time). */

@@ -122,6 +122,25 @@ class PlanSpec extends SparkSuite {
     assert(!p.contains("Sort "), "link-graph side re-sorted every round:\n" + p)
   }
 
+  test("fetch broadcast switch: pending rows × Spark's row estimate vs the threshold") {
+    // the engine broadcasts the schedule while the committed pending count
+    // times Spark's per-row estimate for its widest broadcast frame,
+    // (canon STRING, depth INT) = 8 + 20 + 4 = 32 B, is within
+    // autoBroadcastJoinThreshold: 327,680 URLs at the 10 MiB default
+    import org.apache.spark.sql.graft.bridge
+    import spark.implicits._
+    val sched = Seq(("http://host-0.example.org/p/1", 0)).toDF("canon", "depth")
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prior = spark.conf.get(key)
+    try {
+      spark.conf.set(key, "10MB")
+      assert(bridge.fitsBroadcast(sched, 327680L))
+      assert(!bridge.fitsBroadcast(sched, 327681L))
+      spark.conf.set(key, "-1")
+      assert(!bridge.fitsBroadcast(sched, 1L))
+    } finally spark.conf.set(key, prior)
+  }
+
   test("schedule: partial WindowGroupLimit prunes each host to B before the host exchange") {
     // the skew bound of Schedulers.windowTopB: Spark's InferWindowGroupLimit
     // must plan a Partial per-partition top-B BELOW the hashpartitioning(host)
