@@ -5,7 +5,7 @@ import scala.concurrent.duration.Duration
 
 import org.apache.spark.HashPartitioner
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, Encoders, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.types.StructType
@@ -39,8 +39,10 @@ case class EngineConfig(
   *   small schedule against the once-per-crawl link graph) → extract +
   *   resolve + canonicalize links (native Catalyst expressions) →
   *   bloom-prune (per-shard `bloom_probe`) → EXACT LEFT-ANTI join vs the
-  *   BUCKETED seen table → robots gate → one per-seqshard aggregation
-  *   (schedule + candidate counts ride the same job as `observe` metrics);
+  *   BUCKETED seen table → robots gate → one collect of the round's counts
+  *   (`roundCounts`). Each of the four wave-1 caches (`scheduled`,
+  *   `fetched`, `links`, `fresh`) is built exactly once before the commit,
+  *   each as wide as its rows need (`cacheWidth`);
   *   wave 2 — the commit: frontier/host_next/crawl_log/lineage table
   *   writes, the seen-table append, and the bloom sidecar update all run
   *   CONCURRENTLY, then the atomic metadata publish.
@@ -122,14 +124,15 @@ case class EngineConfig(
   *     and a 10^8-row schedule is never collected to the driver.
   *   - per-round serial Spark actions are the crawl's Amdahl term (the
   *     fixed per-job latency is identical at every cluster size): the
-  *     round runs exactly ONE collect-style action (the 64-row per-shard
-  *     metrics agg; schedule/candidate/host counts ride the same job as
-  *     `observe` metrics), discovery seqs are assigned with NO extra jobs
-  *     (per-shard offsets from that same agg + a shard-partitioned local
-  *     sort, replacing range-sample + zipWithIndex's two jobs), and the entire
-  *     commit (5 table writes, seen append, bloom update) runs as one
-  *     concurrent wave. The round's own partitionings follow its rows
-  *     (`writeWidth`; one aggregation each for host_next and lineage).
+  *     round runs exactly ONE collect-style action (`roundCounts`: the
+  *     per-seqshard new/blocked counts and the 200/404 counts, unioned
+  *     into one job; the link count is observed while `fresh` builds),
+  *     discovery seqs are assigned with NO extra jobs (per-shard offsets
+  *     from that same collect + a shard-partitioned local sort, replacing
+  *     range-sample + zipWithIndex's two jobs), and the entire commit
+  *     (5 table writes, seen append, bloom update) runs as one concurrent
+  *     wave. The round's own partitionings follow its rows (`cacheWidth`,
+  *     `writeWidth`; one aggregation each for host_next and lineage).
   */
 object FrontierEngine {
   /** Target false-positive rate of every per-shard bloom sidecar. */
@@ -183,8 +186,6 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
 
   private val seen = new SeenTable(spark, s"${store.root}/seen_bucketed",
     cfg.seenShards, store.storage)
-  // observation names are session-global: disambiguate by store
-  private val obsToken = java.lang.Integer.toHexString(store.root.hashCode)
 
   // ---- bloom plumbing ------------------------------------------------------
   // numBits for a per-shard capacity at BloomFpp, clamped to the same
@@ -237,6 +238,19 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
   private def writeWidth(rows: Long): Int =
     math.min(64L, math.max(math.min(8L, (rows + 31249L) / 31250L),
       rows / 250000L + 1)).toInt
+
+  /** Partitions of a round cache of about `rows` rows. A cached plan keeps
+    * its partitioning (Spark plans it without AQE while
+    * `spark.sql.optimizer.canChangeCachedPlanOutputPartitioning` is false),
+    * so without a coalesce every cache, and every narrow stage reading it,
+    * runs `spark.sql.shuffle.partitions` tasks however few its rows. The
+    * width is `writeWidth`'s, but never under the cluster's task slots: a
+    * cache's build stage also runs the work before it (the `fresh` build
+    * holds the exact anti-join's seen scan), which must not collapse into
+    * fewer tasks than there are cores. Coalescing adds no shuffle, and a
+    * width at or above the plan's own partition count changes nothing. */
+  private def cacheWidth(rows: Long): Int =
+    math.max(writeWidth(rows), spark.sparkContext.defaultParallelism)
 
   /** Build + write the per-bucket bloom sidecars from a frame ALREADY
     * hash-partitioned by the seen-table bucket function (partition id ==
@@ -398,7 +412,7 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
     // them serially cost ~8 s of fixed init latency at every level
     implicit val ec: ExecutionContext = ExecutionContext.global
     val seedBuckets = canonSeeds.toDF("canon")
-      .repartition(cfg.seenShards, $"canon").transform(scope.cache)
+      .repartition(cfg.seenShards, $"canon").transform(scope.cache("seeds"))
     val manifestFut = scope.track(Future(store.writeTables(0,
       Map("frontier" -> frontier, "host_next" -> hostNext,
           "crawl_log" -> spark.emptyDataset[graft.model.CrawlLogEntry].toDF(),
@@ -460,32 +474,31 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
     * see runRound's compactFut) plus frontier ADDITIONS since the base,
     * minus the URLs consumed (= scheduled = crawl-logged) in rounds
     * base..v. Each URL is written once on discovery and once per
-    * compaction — never rewritten every round. base == 0 (or a store
-    * compacted by an older engine, whose v_base/frontier IS the full set)
-    * takes the legacy shape: adds base..v minus consumed base+1..v. */
+    * compaction — never rewritten every round. Base 0 has no artifact: its
+    * adds start with the seed frontier and init's crawl log is empty. */
   private def pendingFrontier(v: Int, base: Int): DataFrame = {
     val compactPath = s"${store.root}/data/v$base/frontier_compact"
-    // the base snapshot's COMMITTED manifest decides whether a compaction
-    // artifact exists — never a bare filesystem exists(): if the base round
-    // published frontier_compact but the dir is gone/unreadable, that is a
-    // store-integrity failure and must fail LOUDLY, not silently degrade to
-    // deltas-only (which would drop pending URLs). A base without the
-    // manifest entry is the legacy shape (v_base/frontier is the full set).
-    val hasCompact = base > 0 && store.readManifest(base).contains("frontier_compact")
-    if (hasCompact) require(store.storage.exists(compactPath),
-      s"snapshot v$base published frontier_compact but $compactPath is missing " +
-      "— store integrity violation (refusing to silently drop pending URLs)")
+    // the base snapshot's COMMITTED manifest must list the artifact, and the
+    // artifact must exist — never a bare filesystem exists(): a base without
+    // it is a store from an older engine or a damaged one, and reading only
+    // the deltas would silently drop pending URLs
+    if (base > 0) {
+      require(store.readManifest(base).contains("frontier_compact"),
+        s"store at ${store.root}: frontier base v$base lists no frontier_compact " +
+        "in its manifest (a store written by an older engine?) — refusing to " +
+        "read a pending frontier without its compaction artifact")
+      require(store.storage.exists(compactPath),
+        s"snapshot v$base published frontier_compact but $compactPath is missing " +
+        "— store integrity violation (refusing to silently drop pending URLs)")
+    }
     val addPaths = (base to v).map(i => s"${store.root}/data/v$i/frontier")
       .filter(store.storage.exists)
     val adds = spark.read.schema(FrontierEngine.FrontierSchema)
-      .parquet((if (hasCompact) compactPath +: addPaths else addPaths): _*)
-    // the compact artifact predates round `base`'s own consumption, so the
-    // anti set starts at base (legacy full-set artifacts already exclude it)
-    val consumedFrom = if (hasCompact) base else base + 1
-    val consumedPaths = (consumedFrom to v).map(i => s"${store.root}/data/v$i/crawl_log")
+      .parquet((if (base > 0) compactPath +: addPaths else addPaths): _*)
+    // the artifact predates round `base`'s own consumption
+    val consumedPaths = (base to v).map(i => s"${store.root}/data/v$i/crawl_log")
       .filter(store.storage.exists)
-    if (consumedPaths.isEmpty) adds
-    else adds.join(spark.read.schema(FrontierEngine.CrawlLogSchema)
+    adds.join(spark.read.schema(FrontierEngine.CrawlLogSchema)
       .parquet(consumedPaths: _*).select($"canon"), Seq("canon"), "left_anti")
   }
 
@@ -523,18 +536,23 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
     val descBc = scope.keep(spark.sparkContext.broadcast(BloomDesc(store, priorVer)))
 
     // ---- wave 1: the stages up to the round's ONE metrics action ----------
-    val schedObs = Observation(s"sched_${obsToken}_r$r")
-    val linksObs = Observation(s"links_${obsToken}_r$r")
-    val scheduled = schedule(scope, frontier, hostNext, schedObs)
+    // cache widths from counts committed before the round: the schedule and
+    // its fetch hold at most the pending rows; the links and the fresh
+    // canons are sized from the last round's discoveries
+    val pendingWidth = cacheWidth(pendingCount)
+    val linksWidth = cacheWidth(prior.getOrElse("discovered", pendingCount))
+    val scheduled = schedule(scope, frontier, hostNext, pendingWidth)
     val docsLinks = linkGraph(docs)
     val smallSchedule = scheduleFits(scheduled, pendingCount)
-    val fetched = fetch(scope, scheduled, docsLinks, smallSchedule)
-    val links = discover(scope, scheduled, docsLinks, smallSchedule, linksObs)
-    val fresh = gate(scope, dedup(links, seen.upTo(r - 1), descBc))
-    val (newPerShard, nBlocked) = timed("metrics")(shardCounts(fresh))
+    val fetched = fetch(scope, scheduled, docsLinks, smallSchedule, pendingWidth)
+    val links = discover(scope, scheduled, docsLinks, smallSchedule, linksWidth)
+    val (fresh, observed) = gate(scope, dedup(links, seen.upTo(r - 1), descBc), linksWidth)
+    val counts = timed("metrics")(roundCounts(fetched, fresh))
+    val newPerShard = counts.newPerShard
     val nNew = newPerShard.sum
-    val nScheduled = schedObs.get("n").asInstanceOf[Long]
-    val nDiscovered = linksObs.get("n").asInstanceOf[Long]
+    val nBlocked = counts.blocked
+    val nScheduled = counts.fetched200 + counts.fetched404
+    val nDiscovered = observed()("links").getLong(0)
     val nDeduped = nDiscovered - nNew - nBlocked
 
     // ---- wave 2: seqs, blooms, the commit ----------------------------------
@@ -544,7 +562,7 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
     // both consume this bucket-partitioned cache (partition id == bucket id
     // == bloom shard id), so the bloom update costs no shuffle of its own
     val freshBuckets = fresh.select($"canon")
-      .repartition(cfg.seenShards, $"canon").transform(scope.cache)
+      .repartition(cfg.seenShards, $"canon").transform(scope.cache("freshBuckets"))
     val capPerShard = prior.getOrElse("bloom_capacity",
       math.max(16L, cfg.bloomCapacity / cfg.seenShards))
     val bloomFut = updateBlooms(scope, r, fresh, freshBuckets, nNew + nBlocked,
@@ -558,6 +576,7 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
           "seen_total" -> newSeenTotal,
           "consumed_total" -> (consumedTotal + nScheduled),
           "scheduled" -> nScheduled, "discovered" -> nDiscovered,
+          "fetched_200" -> counts.fetched200, "fetched_404" -> counts.fetched404,
           "new_frontier" -> nNew, "blocked" -> nBlocked, "deduped" -> nDeduped,
           // a compaction round's artifact moves the pending set's read base
           "frontier_base" -> (if (isCompaction) r.toLong else base.toLong)))
@@ -602,14 +621,14 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
     * 10^8 hosts shuffles it instead of building a multi-GB table on the
     * driver every round. */
   private def schedule(scope: RoundScope, frontier: DataFrame, hostNext: DataFrame,
-                       obs: Observation): DataFrame =
+                       width: Int): DataFrame =
     Schedulers.windowTopB(frontier, cfg.perHostBudget)
       .join(hostNext, Seq("host"), "left")
       .withColumn("next_time", coalesce($"next_time", lit(0L)))
       .withColumn("delay", crawl_delay($"host").cast("long"))
       .withColumn("fetchTime", $"next_time" + ($"rank" - 1) * $"delay")
-      .observe(obs, count(lit(1)).as("n"))
-      .transform(scope.cache)
+      .coalesce(width)
+      .transform(scope.cache("scheduled"))
 
   /** fetch — the schedule against the once-per-crawl link graph. The 100 TB
     * doc table is scanned EXACTLY ONCE PER CRAWL (`linkGraph`); each round
@@ -631,7 +650,7 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
     * side), so the hit canons are broadcast back into ONE left-outer join that
     * keeps the schedule's partitioning. */
   private def fetch(scope: RoundScope, scheduled: DataFrame, docsLinks: DataFrame,
-                    small: Boolean): DataFrame = {
+                    small: Boolean, width: Int): DataFrame = {
     val sched = scheduled.select($"canon", $"host", $"depth", $"seq", $"fetchTime")
     // kept on measurement: the right-outer path alone made frontier-wide's
     // round ~0.5 s slower at local[4] (6 pairs: median 7.04 → 7.54 s)
@@ -646,16 +665,18 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
           docsLinks("doc_id") === sched("canon"), "right_outer")
         .select($"canon", $"host", $"depth", $"seq", $"fetchTime",
                 $"doc_id".isNotNull.as("hit"))
-    }).transform(scope.cache)
+    }).coalesce(width).transform(scope.cache("fetched"))
   }
 
   /** discover — link extraction → resolve → canon → min depth per target,
     * streamed from the link graph (see `fetch`). Cached: every downstream
     * consumer re-derives its slice from this 2-column frame — caching the
     * WIDE gated union instead cost 25 s of columnar build at the bench web,
-    * 7× the uncached recompute of the tail. */
+    * 7× the uncached recompute of the tail. Its build counts its rows (the
+    * "links" observation): the cache's only reader is `fresh`'s build, so
+    * a second job counting it would race that build for its partitions. */
   private def discover(scope: RoundScope, scheduled: DataFrame, docsLinks: DataFrame,
-                       small: Boolean, obs: Observation): DataFrame = {
+                       small: Boolean, width: Int): DataFrame = {
     val sched = scheduled.select($"canon", $"depth")
     docsLinks.join(schedSide(sched, small), docsLinks("doc_id") === sched("canon"))
       .select($"canon".as("doc_id"), $"depth", explode($"links").as("ref"))
@@ -664,8 +685,9 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
       .withColumn("canon2", canonicalize_url($"target"))
       .groupBy($"canon2".as("canon"))
       .agg((min($"depth") + 1).as("depth"))
-      .observe(obs, count(lit(1)).as("n"))
-      .transform(scope.cache)
+      .observe("links", count(lit(1)).as("n"))
+      .coalesce(width)
+      .transform(scope.cache("links"))
   }
 
   /** dedup — per-shard bloom fast path + exact anti-join vs the BUCKETED
@@ -692,40 +714,57 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
     * pluggable behind GateExprHelper). Blocked URLs enter seen, never the
     * frontier. The result is the round's genuinely-new canons (allowed AND
     * blocked), tagged with their seq shard and cached slim: it feeds the
-    * metrics agg, the seen append, the bloom delta and the frontier write. */
-  private def gate(scope: RoundScope, fresh: DataFrame): DataFrame =
-    fresh.withColumn("host", url_host($"canon"))
+    * round's counts, the seen append, the bloom delta and the frontier
+    * write. The cache is built over the gated plan's RDD (`bridge.detach`),
+    * so its plan holds no seen-table reference: the seen append re-caches
+    * every cached plan that reads the table it wrote, and would otherwise
+    * drop this cache (and `freshBuckets`, built from it) while commit-wave
+    * jobs still read it. Returns the cache and the reader of the `observe`
+    * metrics its build collects (the link count, see `discover`). */
+  private def gate(scope: RoundScope, fresh: DataFrame,
+                   width: Int): (DataFrame, () => Map[String, Row]) = {
+    val (gated, observed) = bridge.detach(fresh.withColumn("host", url_host($"canon"))
       .withColumn("allowed", robots_allows($"host", url_path($"canon")))
       .withColumn("seqshard", pmod(xxhash64($"canon"), lit(UrlCanon.SeqShards.toLong)))
       .select($"canon", $"host", $"depth", $"allowed", $"seqshard")
-      .transform(scope.cache)
+      .coalesce(width))
+    (gated.transform(scope.cache("fresh")), observed)
+  }
 
-  /** The round's ONE collect: the 64-row per-seqshard aggregation
-    * materializes the schedule/fetch/links/fresh caches, fires the
-    * schedule-count and candidate-count observations riding the same job,
-    * and its per-shard new counts are exactly the offsets `assignSeqs`
-    * needs — no separate count(), range-sampling or zipWithIndex job.
-    * Returns (new URLs per seq shard, blocked URLs). */
-  private def shardCounts(fresh: DataFrame): (Array[Long], Long) = {
-    val rows = fresh.groupBy($"seqshard").agg(
-      sum(when($"allowed", 1L).otherwise(0L)).as("nnew"),
-      sum(when(!$"allowed", 1L).otherwise(0L)).as("blocked")).collect()
-    val newPerShard = new Array[Long](UrlCanon.SeqShards)
-    rows.foreach(row => newPerShard(row.getLong(0).toInt) = row.getLong(1))
-    (newPerShard, rows.map(_.getLong(2)).sum)
+  /** What the round's one collect counts. */
+  private case class RoundCounts(newPerShard: Array[Long], blocked: Long,
+                                 fetched200: Long, fetched404: Long)
+
+  /** The round's ONE collect: two small aggregations — per seq shard the
+    * new and blocked canons of `fresh`, and the 200/404 split of `fetched`
+    * — unioned into one job. It builds `fetched`, and `fresh` with the
+    * `links` it reads (`scheduled` is built by the schedule broadcast that
+    * planning `fresh` runs in `gate`), each once, so the commit wave only
+    * reads them, and its per-shard new counts are exactly the
+    * offsets `assignSeqs` needs — no separate count(), range-sampling or
+    * zipWithIndex job. The scheduled count is 200 + 404: `fetched` carries
+    * every schedule row. */
+  private def roundCounts(fetched: DataFrame, fresh: DataFrame): RoundCounts = {
+    val fetchedKey = -1L
+    val rows = fresh.groupBy($"seqshard".as("key")).agg(
+        count(when($"allowed", 1)).as("a"), count(when(!$"allowed", 1)).as("b"))
+      .unionByName(fetched.agg(lit(fetchedKey).as("key"),
+        count(when($"hit", 1)).as("a"), count(when(!$"hit", 1)).as("b")))
+      .collect().map(row => (row.getLong(0), (row.getLong(1), row.getLong(2)))).toMap
+    val newPerShard = Array.tabulate(UrlCanon.SeqShards)(k => rows.get(k.toLong).fold(0L)(_._1))
+    val blocked = rows.collect { case (k, (_, b)) if k >= 0 => b }.sum
+    val (n200, n404) = rows(fetchedKey)
+    RoundCounts(newPerShard, blocked, n200, n404)
   }
 
   /** assignSeqs — deterministic discovery seqs with NO extra jobs. Global
     * order = (seqShard(canon), canon), a FIXED 64-way hash spec shared with
     * the oracle (UrlCanon.SeqShards); shard offsets come from
-    * `shardCounts`. The shards route to `writeWidth(nNew)` partitions (a
+    * `roundCounts`. The shards route to `writeWidth(nNew)` partitions (a
     * whole shard per partition); each partition sorts locally by (shard,
     * canon) — one round's slice of its shards, bounded — and numbers every
-    * shard contiguously from its offset. (An RDD, not a window: the cache
-    * is then built from an RDD whose plan does not reference the seen
-    * table, so the seen append's cache refresh — it recaches every plan
-    * that reads the table it wrote — cannot drop it while its commit-wave
-    * consumers still run.) The closures capture only `offsets` and `r`. */
+    * shard contiguously from its offset, in one pass. The closures capture
+    * only `offsets` and `r`. */
   private def assignSeqs(scope: RoundScope, fresh: DataFrame, newPerShard: Array[Long],
                          seqBase: Long, r: Int): DataFrame = {
     val offsets = newPerShard.scanLeft(seqBase)(_ + _)
@@ -747,7 +786,7 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
         }
       }
       .toDF("canon", "host", "depth", "seq", "discovered_round")
-      .transform(scope.cache)
+      .transform(scope.cache("newEntries"))
   }
 
   /** updateBlooms — the per-shard sidecars for snapshot r, started in the
@@ -828,22 +867,26 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
 
   /** commit — ONE concurrent wave, then the atomic publish. The table
     * writes, the seen-table append and the bloom update (already running)
-    * are independent jobs over the wave-1 caches; the metadata rename lands
-    * only after every one of them — and a compaction round's artifact — is
-    * durable.
+    * are independent jobs; the metadata rename lands only after every one
+    * of them — and a compaction round's artifact — is durable.
     *
-    * Deliberately NOT ordered around the shared caches (`fetched`,
-    * `newEntries`, `freshBuckets` are each consumed by two concurrent
-    * jobs): a round-6 A/B that materialized each cache once in head jobs
-    * and chained the consumers measured ~10% SLOWER at local[32] AND
-    * slower per-round at local[8] (xl, clean same-window pairs 58.1 vs
-    * 64.2 s @32) — in local mode the block manager's per-block write
-    * locks already serialize concurrent computation of the same cached
-    * partition (second job blocks, then reads), so the races cost little,
-    * while the head-job barrier + extra cache-read pass cost real wall
-    * clock. The INIT wave is the exception (see init): its seed cache
-    * parent is a driver-local relation racing the link-graph build, where
-    * the one-time materialization measured 19 s faster at local[8]. */
+    * Build order: wave 1's collect (`roundCounts`) has already built the
+    * four wave-1 caches once each, so the commit-wave jobs over `scheduled`
+    * and `fetched` (host_next, crawl_log, lineage) only read them. The seen
+    * append rebuilds nothing: no cached plan of the round reads the seen
+    * table (`fresh` is built from an RDD, see `gate`). The two caches built
+    * in this wave, `newEntries` (frontier and lineage writes) and
+    * `freshBuckets` (seen append and bloom update), are deliberately NOT
+    * materialized in a head job before their two consumers: a round-6 A/B
+    * that did so measured ~10% SLOWER at local[32] AND slower per-round at
+    * local[8] (xl, clean same-window pairs 58.1 vs 64.2 s @32) — in local
+    * mode the block manager's per-block write locks already serialize
+    * concurrent computation of the same cached partition (second job
+    * blocks, then reads), so the race costs little, while the head-job
+    * barrier + extra cache-read pass cost real wall clock. The INIT wave is
+    * the exception (see init): its seed cache parent is a driver-local
+    * relation racing the link-graph build, where the one-time
+    * materialization measured 19 s faster at local[8]. */
   private def commit(scope: RoundScope, r: Int, freshBuckets: DataFrame,
                      bloomFut: Future[(Long, Array[Int])],
                      compactFut: Option[Future[Map[String, String]]],
@@ -896,7 +939,12 @@ private[frontier] final class RoundScope {
   private val broadcasts = scala.collection.mutable.ArrayBuffer.empty[Broadcast[_]]
   private val jobs = scala.collection.mutable.ArrayBuffer.empty[Future[_]]
 
-  def cache(df: DataFrame): DataFrame = { frames += df; df.cache() }
+  /** Cache `df` for the rest of the round; its blocks are the RDD
+    * "In-memory table `name`" in Spark's stage and storage records. */
+  def cache(name: String)(df: DataFrame): DataFrame = {
+    frames += df
+    bridge.cacheNamed(df, name)
+  }
   def keep[T](b: Broadcast[T]): Broadcast[T] = { broadcasts += b; b }
   def track[T](f: Future[T]): Future[T] = { jobs += f; f }
 

@@ -1,9 +1,11 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.internal.SQLConf
 
 /** Minimal bridge into `private[sql]` Column↔Expression conversion —
   * the standard pattern public Spark extension libraries use to expose
@@ -20,6 +22,31 @@ object bridge {
   def fitsBroadcast(df: DataFrame, rows: Long): Boolean = {
     val threshold = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
     threshold >= 0 && EstimationUtils.getSizePerRow(df.queryExecution.analyzed.output) * rows <= threshold
+  }
+
+  /** `df.cache()` under a name: the cached RDD is "In-memory table `name`"
+    * in stage records and the storage listing, instead of a plan string. */
+  def cacheNamed(df: DataFrame, name: String): DataFrame = {
+    val ds = df.asInstanceOf[classic.Dataset[_]]
+    ds.sparkSession.sharedState.cacheManager.cacheQuery(ds, Some(name),
+      ds.sparkSession.sessionState.conf.defaultCacheStorageLevel)
+    df
+  }
+
+  /** `df` planned and run the way Spark builds a cached query — in a clone
+    * of the session with adaptive execution off, so every stage of its plan
+    * runs inside the one job that computes it — as a frame over the
+    * resulting RDD. The frame's plan holds none of `df`'s relations, so a
+    * write to one of them re-caches nothing built on it. The function
+    * returns `df`'s `observe` metrics (also those inside caches it reads)
+    * once a job has computed every partition of the frame. */
+  def detach(df: DataFrame): (DataFrame, () => Map[String, Row]) = {
+    val ds = df.asInstanceOf[classic.Dataset[Row]]
+    val off = classic.SparkSession.getOrCloneSessionWithConfigsOff(ds.sparkSession,
+      Seq(SQLConf.ADAPTIVE_EXECUTION_ENABLED))
+    val qe = off.withActive(off.sessionState.executePlan(ds.logicalPlan))
+    val rdd = off.withActive(qe.toRdd)
+    (ds.sparkSession.internalCreateDataFrame(rdd, ds.schema), () => qe.observedMetrics)
   }
 
   /** Register the graft SQL functions on an EXISTING session (the

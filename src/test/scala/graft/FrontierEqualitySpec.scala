@@ -168,6 +168,26 @@ class FrontierEqualitySpec extends SparkSuite {
     docs.unpersist()
   }
 
+  test("a frontier base whose manifest lists no frontier_compact fails the round, naming the store") {
+    // only compaction writes frontier_compact, and it always lists it; a base
+    // without the entry is a store from an older engine or a damaged one
+    val store = freshStore()
+    val engine = new FrontierEngine(spark, store,
+      EngineConfig(perHostBudget = budget, compactEvery = 2))
+    val docs = DocSynth.docs(spark, cfg).toDF().cache()
+    engine.run(docs, DocSynth.seeds(cfg), 2) // round 2 compacts: v2 is the base
+    assert(store.readManifest(2).contains("frontier_compact"))
+    val meta = java.nio.file.Paths.get(store.root, "metadata", "v2.json")
+    val json = new String(Files.readAllBytes(meta), "UTF-8")
+    Files.write(meta, json.replaceAll("\"frontier_compact\": \"[^\"]*\",? ?", "").getBytes("UTF-8"))
+    assert(!store.readManifest(2).contains("frontier_compact"))
+    val err = intercept[IllegalArgumentException](engine.runRound(docs, 3))
+    assert(err.getMessage.contains(store.root) && err.getMessage.contains("frontier_compact"),
+      err.getMessage)
+    assert(store.currentVersion === Some(2), "the failed round must not publish")
+    docs.unpersist()
+  }
+
   test("a round that fails in its commit wave leaks no caches or jobs; resume ≡ oracle") {
     // round 1 fails twice before it succeeds: first its bloom sidecar writes
     // fail (one attempt, no retry) after the table writes, then its table

@@ -62,13 +62,14 @@ class RoundShapeSpec extends SparkSuite {
       t == 1 && rdds.exists(_.startsWith("ParallelCollectionRDD")) }
     assert(inference.isEmpty, s"schema-inference jobs ran:\n$shape")
     info(shape.linesIterator.next())
-    // pinned at this round's counts (25 jobs, 26 stages, 590 tasks at
-    // local[32]) plus one 32-task job: two commit-wave jobs that read a
-    // shared cache concurrently may each run its materializing stage, as
-    // the engine accepts by design (see the commit wave in runRound)
+    // pinned at this round's counts (24/26/592 and 25/27/593 jobs/stages/
+    // tasks at local[32]) plus one 1-task job: the wave-1 caches are built
+    // before the commit (RoundCacheSpec), but whether a commit-wave job
+    // finds `freshBuckets` or `newEntries` already built, and so skips a
+    // stage, depends on timing
     assert(jobs <= 26, shape)
-    assert(stages.size <= 27, shape)
-    assert(tasks <= 622, shape)
+    assert(stages.size <= 28, shape)
+    assert(tasks <= 594, shape)
     docs.unpersist()
   }
 }
