@@ -34,9 +34,10 @@ object bridge {
   }
 
   /** `df` planned and run the way Spark builds a cached query — in a clone
-    * of the session with adaptive execution off, so every stage of its plan
-    * runs inside the one job that computes it — as a frame over the
-    * resulting RDD. The frame's plan holds none of `df`'s relations, so a
+    * of the session with adaptive execution off, so its shuffle stages run
+    * inside the job that computes it, not as separate adaptive query stages
+    * (broadcasts in its plan run here, when the RDD is made) — as a frame
+    * over the resulting RDD. The frame's plan holds none of `df`'s relations, so a
     * write to one of them re-caches nothing built on it. The function
     * returns `df`'s `observe` metrics (also those inside caches it reads)
     * once a job has computed every partition of the frame. */
