@@ -42,7 +42,7 @@ case class EngineConfig(
   *   BUCKETED seen table → robots gate → one collect of the round's counts
   *   (`roundCounts`). Each of the four wave-1 caches (`scheduled`,
   *   `fetched`, `links`, `fresh`) is built exactly once before the commit,
-  *   each as wide as its rows need (`cacheWidth`);
+  *   one partition per task slot (`cacheWidth`);
   *   wave 2 — the commit: frontier/host_next/crawl_log/lineage table
   *   writes, the seen-table append, and the bloom sidecar update all run
   *   CONCURRENTLY, then the atomic metadata publish.
@@ -131,8 +131,9 @@ case class EngineConfig(
   *     from that same collect + a shard-partitioned local sort, replacing
   *     range-sample + zipWithIndex's two jobs), and the entire commit
   *     (5 table writes, seen append, bloom update) runs as one concurrent
-  *     wave. The round's own partitionings follow its rows (`cacheWidth`,
-  *     `writeWidth`; one aggregation each for host_next and lineage).
+  *     wave. The round's caches take one partition per task slot
+  *     (`cacheWidth`), its writes follow their rows (`writeWidth`; one
+  *     aggregation each for host_next and lineage).
   */
 object FrontierEngine {
   /** Target false-positive rate of every per-shard bloom sidecar. */
@@ -239,18 +240,19 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
     math.min(64L, math.max(math.min(8L, (rows + 31249L) / 31250L),
       rows / 250000L + 1)).toInt
 
-  /** Partitions of a round cache of about `rows` rows. A cached plan keeps
-    * its partitioning (Spark plans it without AQE while
+  /** Partitions of a wave-1 round cache: the cluster's task slots. A
+    * cached plan keeps its partitioning (Spark plans it without AQE while
     * `spark.sql.optimizer.canChangeCachedPlanOutputPartitioning` is false),
     * so without a coalesce every cache, and every narrow stage reading it,
-    * runs `spark.sql.shuffle.partitions` tasks however few its rows. The
-    * width is `writeWidth`'s, but never under the cluster's task slots: a
-    * cache's build stage also runs the work before it (the `fresh` build
-    * holds the exact anti-join's seen scan), which must not collapse into
-    * fewer tasks than there are cores. Coalescing adds no shuffle, and a
-    * width at or above the plan's own partition count changes nothing. */
-  private def cacheWidth(rows: Long): Int =
-    math.max(writeWidth(rows), spark.sparkContext.defaultParallelism)
+    * runs `spark.sql.shuffle.partitions` tasks however few its rows. One
+    * partition per slot, not fewer: a cache's build stage also runs the
+    * work before it (the `fresh` build holds the exact anti-join's seen
+    * scan), which must keep every core busy on wave 1's critical path. Nor
+    * a width from the round's rows: between the core count and the shuffle
+    * width it is seldom a multiple of the cores, and its straggler task
+    * would sit on that path. Coalescing adds no shuffle, and a width at or
+    * above the plan's own partition count changes nothing. */
+  private def cacheWidth: Int = spark.sparkContext.defaultParallelism
 
   /** Build + write the per-bucket bloom sidecars from a frame ALREADY
     * hash-partitioned by the seen-table bucket function (partition id ==
@@ -536,17 +538,12 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
     val descBc = scope.keep(spark.sparkContext.broadcast(BloomDesc(store, priorVer)))
 
     // ---- wave 1: the stages up to the round's ONE metrics action ----------
-    // cache widths from counts committed before the round: the schedule and
-    // its fetch hold at most the pending rows; the links and the fresh
-    // canons are sized from the last round's discoveries
-    val pendingWidth = cacheWidth(pendingCount)
-    val linksWidth = cacheWidth(prior.getOrElse("discovered", pendingCount))
-    val scheduled = schedule(scope, frontier, hostNext, pendingWidth)
+    val scheduled = schedule(scope, frontier, hostNext)
     val docsLinks = linkGraph(docs)
     val smallSchedule = scheduleFits(scheduled, pendingCount)
-    val fetched = fetch(scope, scheduled, docsLinks, smallSchedule, pendingWidth)
-    val links = discover(scope, scheduled, docsLinks, smallSchedule, linksWidth)
-    val (fresh, observed) = gate(scope, dedup(links, seen.upTo(r - 1), descBc), linksWidth)
+    val fetched = fetch(scope, scheduled, docsLinks, smallSchedule)
+    val links = discover(scope, scheduled, docsLinks, smallSchedule)
+    val (fresh, observed) = gate(scope, dedup(links, seen.upTo(r - 1), descBc))
     val counts = timed("metrics")(roundCounts(fetched, fresh))
     val newPerShard = counts.newPerShard
     val nNew = newPerShard.sum
@@ -620,14 +617,13 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
     * join carries no hint: Spark broadcasts it while it is small, and at
     * 10^8 hosts shuffles it instead of building a multi-GB table on the
     * driver every round. */
-  private def schedule(scope: RoundScope, frontier: DataFrame, hostNext: DataFrame,
-                       width: Int): DataFrame =
+  private def schedule(scope: RoundScope, frontier: DataFrame, hostNext: DataFrame): DataFrame =
     Schedulers.windowTopB(frontier, cfg.perHostBudget)
       .join(hostNext, Seq("host"), "left")
       .withColumn("next_time", coalesce($"next_time", lit(0L)))
       .withColumn("delay", crawl_delay($"host").cast("long"))
       .withColumn("fetchTime", $"next_time" + ($"rank" - 1) * $"delay")
-      .coalesce(width)
+      .coalesce(cacheWidth)
       .transform(scope.cache("scheduled"))
 
   /** fetch — the schedule against the once-per-crawl link graph. The 100 TB
@@ -650,7 +646,7 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
     * side), so the hit canons are broadcast back into ONE left-outer join that
     * keeps the schedule's partitioning. */
   private def fetch(scope: RoundScope, scheduled: DataFrame, docsLinks: DataFrame,
-                    small: Boolean, width: Int): DataFrame = {
+                    small: Boolean): DataFrame = {
     val sched = scheduled.select($"canon", $"host", $"depth", $"seq", $"fetchTime")
     // kept on measurement: the right-outer path alone made frontier-wide's
     // round ~0.5 s slower at local[4] (6 pairs: median 7.04 → 7.54 s)
@@ -665,7 +661,7 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
           docsLinks("doc_id") === sched("canon"), "right_outer")
         .select($"canon", $"host", $"depth", $"seq", $"fetchTime",
                 $"doc_id".isNotNull.as("hit"))
-    }).coalesce(width).transform(scope.cache("fetched"))
+    }).coalesce(cacheWidth).transform(scope.cache("fetched"))
   }
 
   /** discover — link extraction → resolve → canon → min depth per target,
@@ -676,7 +672,7 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
     * "links" observation): the cache's only reader is `fresh`'s build, so
     * a second job counting it would race that build for its partitions. */
   private def discover(scope: RoundScope, scheduled: DataFrame, docsLinks: DataFrame,
-                       small: Boolean, width: Int): DataFrame = {
+                       small: Boolean): DataFrame = {
     val sched = scheduled.select($"canon", $"depth")
     docsLinks.join(schedSide(sched, small), docsLinks("doc_id") === sched("canon"))
       .select($"canon".as("doc_id"), $"depth", explode($"links").as("ref"))
@@ -686,7 +682,7 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
       .groupBy($"canon2".as("canon"))
       .agg((min($"depth") + 1).as("depth"))
       .observe("links", count(lit(1)).as("n"))
-      .coalesce(width)
+      .coalesce(cacheWidth)
       .transform(scope.cache("links"))
   }
 
@@ -721,13 +717,12 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
     * drop this cache (and `freshBuckets`, built from it) while commit-wave
     * jobs still read it. Returns the cache and the reader of the `observe`
     * metrics its build collects (the link count, see `discover`). */
-  private def gate(scope: RoundScope, fresh: DataFrame,
-                   width: Int): (DataFrame, () => Map[String, Row]) = {
+  private def gate(scope: RoundScope, fresh: DataFrame): (DataFrame, () => Map[String, Row]) = {
     val (gated, observed) = bridge.detach(fresh.withColumn("host", url_host($"canon"))
       .withColumn("allowed", robots_allows($"host", url_path($"canon")))
       .withColumn("seqshard", pmod(xxhash64($"canon"), lit(UrlCanon.SeqShards.toLong)))
       .select($"canon", $"host", $"depth", $"allowed", $"seqshard")
-      .coalesce(width))
+      .coalesce(cacheWidth))
     (gated.transform(scope.cache("fresh")), observed)
   }
 

@@ -34,7 +34,8 @@ object bridge {
   }
 
   /** `df` planned and run the way Spark builds a cached query — in a clone
-    * of the session with adaptive execution off, so its shuffle stages run
+    * of the session with adaptive execution and automatic bucketed scan
+    * off (`CacheManager`'s two settings), so its shuffle stages run
     * inside the job that computes it, not as separate adaptive query stages
     * (broadcasts in its plan run here, when the RDD is made) — as a frame
     * over the resulting RDD. The frame's plan holds none of `df`'s relations, so a
@@ -44,7 +45,7 @@ object bridge {
   def detach(df: DataFrame): (DataFrame, () => Map[String, Row]) = {
     val ds = df.asInstanceOf[classic.Dataset[Row]]
     val off = classic.SparkSession.getOrCloneSessionWithConfigsOff(ds.sparkSession,
-      Seq(SQLConf.ADAPTIVE_EXECUTION_ENABLED))
+      Seq(SQLConf.ADAPTIVE_EXECUTION_ENABLED, SQLConf.AUTO_BUCKETED_SCAN_ENABLED))
     val qe = off.withActive(off.sessionState.executePlan(ds.logicalPlan))
     val rdd = off.withActive(qe.toRdd)
     (ds.sparkSession.internalCreateDataFrame(rdd, ds.schema), () => qe.observedMetrics)

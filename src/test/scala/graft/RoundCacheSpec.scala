@@ -11,26 +11,49 @@ import org.apache.spark.storage.RDDBlockId
 
 import graft.frontier.{EngineConfig, FrontierEngine}
 import graft.model.DocSynth
+import graft.oracle.OracleCrawler
 import graft.snapshots.SnapshotStore
 
 /** How a round builds its caches, read from Spark's listener events. A
   * round names every cache it makes (`RoundScope.cache`), so each one's
   * RDD is "In-memory table <name>" in the stage records. The wave-1 caches
   * must each be built by one stage, before any stage reads a cache of the
-  * commit wave (those are made from the collect's counts), and no cached plan may read the seen table while the round runs: the
-  * seen append's write re-caches every such plan, dropping a cache that
-  * commit-wave jobs still read, so with none it rebuilds nothing.
+  * commit wave (those are made from the collect's counts), and no cached
+  * plan may read the seen table while the round runs: the seen append's
+  * write re-caches every such plan, dropping a cache that commit-wave jobs
+  * still read, so with none it rebuilds nothing.
+  *
+  * The suite's session shuffles to as many partitions as it has task
+  * slots, where narrowing a cache to the slots changes nothing; these
+  * tests shuffle (and bucket the seen set) twice as wide, so every wave-1
+  * cache is coalesced below its plan's width.
   */
 class RoundCacheSpec extends SparkSuite {
+  import spark.implicits._
 
   private val Prefix = "In-memory table "
   private val Wave1 = Seq("scheduled", "fetched", "links", "fresh")
+  private val cfg = DocSynth.Config(nHosts = 12, pagesPerHost = 30, hotFactor = 5,
+    linksPerDoc = 6, seed = 42L)
+  private val budget = 3
+  private val Wide = 64
 
-  test("each wave-1 cache is built once, in wave 1, and no cached plan reads the seen table") {
-    val cfg = DocSynth.Config(nHosts = 12, pagesPerHost = 30, hotFactor = 5,
-      linksPerDoc = 6, seed = 42L)
-    val store = new SnapshotStore(Files.createTempDirectory("graft-cache").toString)
-    val engine = new FrontierEngine(spark, store, EngineConfig(perHostBudget = 3))
+  /** An engine on a new store whose seen buckets match the `Wide` shuffles. */
+  private def wideEngine(): FrontierEngine = new FrontierEngine(spark,
+    new SnapshotStore(Files.createTempDirectory("graft-cache").toString),
+    EngineConfig(perHostBudget = budget, seenShards = Wide))
+
+  private def withWideShuffles[T](body: => T): T = {
+    val key = "spark.sql.shuffle.partitions"
+    val prior = spark.conf.get(key)
+    assert(spark.sparkContext.defaultParallelism < Wide)
+    spark.conf.set(key, Wide.toString)
+    try body finally spark.conf.set(key, prior)
+  }
+
+  test("each wave-1 cache is built once, in wave 1, one partition per task slot, " +
+      "and no cached plan reads the seen table") { withWideShuffles {
+    val engine = wideEngine()
     val docs = DocSynth.docs(spark, cfg).toDF().cache()
     engine.run(docs, DocSynth.seeds(cfg), 1)
 
@@ -38,6 +61,7 @@ class RoundCacheSpec extends SparkSuite {
     // `seq` numbers them so the test can order stages, block stores and jobs
     var seq = 0L
     val nameOf = mutable.Map.empty[Int, String]          // cached RDD id -> cache name
+    val widthOf = mutable.Map.empty[Int, Int]            // its partitions
     val submitted = mutable.Map.empty[Int, Vector[Long]] // stages whose lineage holds it
     val lastStored = mutable.Map.empty[Int, Long]        // its last block store
     var wave2At = Long.MaxValue                          // first stage over a commit cache
@@ -48,6 +72,7 @@ class RoundCacheSpec extends SparkSuite {
         e.stageInfo.rddInfos.filter(_.name.startsWith(Prefix)).foreach { i =>
           val name = i.name.stripPrefix(Prefix)
           nameOf(i.id) = name
+          widthOf(i.id) = i.numPartitions
           submitted(i.id) = submitted.getOrElse(i.id, Vector.empty) :+ seq
           if (!Wave1.contains(name)) wave2At = math.min(wave2At, seq)
         }
@@ -79,7 +104,8 @@ class RoundCacheSpec extends SparkSuite {
     // block was stored (a later stage finds every block and only reads)
     def builders(id: Int): Int = submitted(id).count(_ < lastStored.getOrElse(id, 0L))
     val report = byName.toSeq.sortBy(_._1).map { case (n, ids) =>
-      s"  $n: rdd ${ids.mkString(",")}, ${ids.map(builders).mkString(",")} building stage(s), " +
+      s"  $n: rdd ${ids.mkString(",")} of ${ids.map(widthOf).mkString(",")} partitions, " +
+        s"${ids.map(builders).mkString(",")} building stage(s), " +
         s"last block at ${ids.map(lastStored.getOrElse(_, 0L)).mkString(",")}"
     }.mkString("\n") + s"\n  the commit wave's first stage at $wave2At"
     info(report)
@@ -92,7 +118,25 @@ class RoundCacheSpec extends SparkSuite {
       val id = byName.getOrElse(n, fail(s"no cache named $n was built:\n$report")).head
       assert(builders(id) === 1, s"cache $n was built by ${builders(id)} stages:\n$report")
       assert(lastStored(id) < wave2At, s"cache $n was still being built in the commit wave:\n$report")
+      assert(widthOf(id) === sc.defaultParallelism, s"cache $n is not one partition per slot:\n$report")
     }
+    // partition id == bucket id == bloom shard: the append's cache stays wide
+    assert(widthOf(byName("freshBuckets").head) === Wide, report)
     docs.unpersist()
-  }
+  }}
+
+  test("a crawl whose round caches are narrower than its shuffles ≡ oracle") { withWideShuffles {
+    val engine = wideEngine()
+    val docs = DocSynth.docs(spark, cfg).toDF().cache()
+    engine.run(docs, DocSynth.seeds(cfg), 8)
+    val sparkLog = engine.crawlLog()
+      .select($"round", $"fetchTime", $"host", $"canon", $"depth", $"seq", $"status")
+      .as[(Int, Long, String, String, Int, Long, Int)].collect().toVector
+    val o = OracleCrawler.crawl(DocSynth.localDocs(cfg), DocSynth.seeds(cfg), budget, 8)
+    assert(sparkLog === o.log.map(e =>
+      (e.round, e.fetchTime, e.host, e.canon, e.depth, e.seq, e.status)),
+      "crawl with narrowed caches diverges from oracle")
+    assert(engine.seenSet().select($"canon").as[String].collect().toSet === o.seen)
+    docs.unpersist()
+  }}
 }
