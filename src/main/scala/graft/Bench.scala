@@ -435,7 +435,7 @@ object Bench {
     // warm up session (codegen, parquet footer cache, JIT) so the first
     // timed query doesn't absorb ~10 s of one-time init
     (1 to 2).foreach { _ =>
-      try spark.read.parquet(s"$sfDir/lineitem.parquet")
+      try Tables.read(spark, sfDir, "lineitem")
         .groupBy("l_returnflag").count().collect()
       catch { case _: Throwable => }
     }

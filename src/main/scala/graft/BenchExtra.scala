@@ -35,7 +35,7 @@ object BenchExtra {
     try {
       // same warmup as the official query phase
       (1 to 2).foreach { _ =>
-        try spark.read.parquet(s"$sfDir/lineitem.parquet")
+        try Tables.read(spark, sfDir, "lineitem")
           .groupBy("l_returnflag").count().collect()
         catch { case _: Throwable => }
       }

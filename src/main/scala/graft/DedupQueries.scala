@@ -12,13 +12,10 @@ import org.apache.spark.sql.expressions.Window
   */
 object DedupQueries {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
   /** Materialize the (tiny) result eagerly, then free `big`'s storage
-    * memory. The shingle caches in d2/d4 are the suite's largest cached
-    * frames; left to LRU they stayed resident for the rest of a ~60-query
-    * verify/bench session and skewed later timings. The result itself
+    * memory. d2's shingle cache is the suite's largest cached frame; left
+    * to LRU it stayed resident for the rest of a ~60-query verify/bench
+    * session and skewed later timings. The result itself
     * stays cached (a few hundred rows) for the caller's consumption. */
   private def unpersistAfter(big: DataFrame)(result: DataFrame): DataFrame = {
     val out = result.cache()
@@ -48,7 +45,7 @@ object DedupQueries {
   /** (doc_id, sh) with the token array materialized before the shingle HOF. */
   private def docShingles(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    t(s, dir, "documents")
+    Tables.read(s, dir, "documents")
       .select($"doc_id", split($"text", " ").as("toks"))
       .select($"doc_id", shinglesOf($"toks").as("sh"))
   }
@@ -166,67 +163,51 @@ object DedupQueries {
     }),
 
     // ---- d4: exact n-gram Jaccard via capped inverted index (oracle-checked)
-    // Distributed shape: explode shingles → drop shingles with document
-    // frequency > dfCap (a boilerplate shingle shared by n docs would emit
-    // n² candidate rows — the one unbounded fanout in a 100 TB corpus) →
-    // self-join on the CAPPED index for candidates → exact jaccard verify on
-    // the full shingle arrays of the (tiny) candidate set. The verify step
-    // uses the uncapped sets, so the cap only bounds candidate generation;
-    // a true near-dup pair is kept as long as it shares one sub-cap shingle
-    // (near-identical docs share many pair-specific shingles). The oracle
-    // SQL applies the identical cutoff.
+    // Distributed shape: explode shingles → ONE shuffle by shingle → per
+    // shingle, its doc list. Shingles with document frequency ≤ dfCap emit
+    // their candidate pairs; a boilerplate shingle shared by n docs would
+    // emit n² candidate rows (the one unbounded fanout in a 100 TB corpus),
+    // so shingles over the cap only list, per doc, the hot shingles it
+    // holds. The verify is exact over the uncapped sets, so the cap only
+    // bounds candidate generation: a true near-dup pair is kept as long as
+    // it shares one sub-cap shingle (near-identical docs share many
+    // pair-specific shingles). The oracle SQL applies the identical cutoff.
     "d4_ngram_jaccard" -> ((s, dir) => {
       import s.implicits._
       val dfCap = 20
-      // Count-based exact verify (guide §8: decide with small rows): the
-      // inverted index is built ONCE and every later term — candidate
-      // pairs, |A∩B|, |A|, |B| — derives from it as COUNTS. The previous
-      // form re-attached the full shingle arrays to every candidate pair
-      // and ran array_intersect/array_union over ~52-string arrays 1.12M
-      // times (measured 11.4 s of the 18 s total at sf0.1); exact jaccard
-      // needs only the integers |A∩B| and |A|+|B|.
-      val inv = shingleIndex(s, dir).cache()
-      // boilerplate shingles (df > dfCap): FEW at any scale by nature —
-      // broadcastable as a g-list; a hot shingle shared by n docs would
-      // emit n² candidate rows, the one unbounded fanout in a 100 TB
-      // corpus. The oracle SQL applies the identical cutoff.
-      val hotG = inv.groupBy($"g").agg(count(lit(1)).as("df"))
-        .filter($"df" > dfCap).select($"g")
-      // candidate pairs + shared-capped-shingle counts in ONE shuffle:
-      // per-shingle sorted doc lists (bounded by dfCap) expand to ordered
-      // pairs — no self-join, no d²-row hash build. count(pairs per (a,b))
-      // = |A∩B| over capped shingles, and the group set IS the candidate
-      // set (pairs sharing ≥1 capped shingle), exactly as before. Each
-      // side's set size rides the pair row (8 bytes) instead of a
-      // sizes-table join — at 10^10 docs a sizes side is unbroadcastable.
-      val interKept = inv.join(broadcast(hotG), Seq("g"), "left_anti")
-        .groupBy($"g").agg(array_sort(collect_list(struct($"doc_id", $"n"))).as("ids"))
-        .select(explode(pairsOf($"ids")).as("pr"))
-        .select($"pr.doc_a".as("doc_a"), $"pr.doc_b".as("doc_b"),
-          $"pr.n_a".as("n_a"), $"pr.n_b".as("n_b"))
+      // exact jaccard needs only the integers |A∩B| and |A|+|B|, never the
+      // full shingle arrays per pair. Both branches below read this one
+      // aggregation, so its exchange runs once (Spark reuses it) and nothing
+      // is cached or counted eagerly
+      val byShingle = shingleIndex(s, dir)
+        .groupBy($"g").agg(collect_list(struct($"doc_id", $"n")).as("ids"))
+      // a kept shingle's sorted doc list (≤ dfCap) expands to ordered pairs;
+      // count per (a, b) = |A∩B| over kept shingles, and the group set IS
+      // the candidate set. Each side's set size rides the pair row (8
+      // bytes), so no sizes table is joined
+      val kept = byShingle.filter(size($"ids") <= dfCap)
+        .select(explode(pairsOf(array_sort($"ids"))).as("pr"))
+        .select($"pr.doc_a", $"pr.doc_b", $"pr.n_a", $"pr.n_b")
         .groupBy($"doc_a", $"doc_b")
         .agg(count(lit(1)).as("ik"), max($"n_a").as("n_a"), max($"n_b").as("n_b"))
-        .cache()
-      // |A∩B| must also count shared HOT shingles: correction join bounded
-      // by the candidate set (candidates × hot-shingles-per-doc) — never
-      // hot-df² pairs. AQE picks the join strategy from the actual sizes.
-      val hotInv = inv.join(broadcast(hotG), Seq("g"), "left_semi")
-      val corr = interKept
-        .join(hotInv.select($"doc_id".as("doc_a"), $"g"), Seq("doc_a"))
-        .join(hotInv.select($"doc_id".as("doc_b"), $"g"), Seq("doc_b", "g"))
-        .groupBy($"doc_a", $"doc_b").agg(count(lit(1)).as("ih"))
-      val res = interKept
-        .join(corr, Seq("doc_a", "doc_b"), "left")
-        .withColumn("inter", $"ik" + coalesce($"ih", lit(0L)))
+      // |A∩B| also counts shared hot shingles: each doc's hot list (few at
+      // any scale, bounded by the doc's own shingles) meets its partner's
+      // on the candidate row — never hot-df² pairs
+      val hot = byShingle.filter(size($"ids") > dfCap)
+        .select(explode($"ids.doc_id").as("doc_id"), $"g")
+        .groupBy($"doc_id").agg(collect_list($"g").as("hot"))
+      def hotOf(side: String): DataFrame =
+        hot.select($"doc_id".as(s"doc_$side"), $"hot".as(s"hot_$side"))
+      val noHot = array().cast("array<string>")
+      kept.join(hotOf("a"), Seq("doc_a"), "left").join(hotOf("b"), Seq("doc_b"), "left")
+        .withColumn("inter", $"ik" +
+          size(array_intersect(coalesce($"hot_a", noHot), coalesce($"hot_b", noHot))))
         // identical IEEE division to the oracle: int64 inter / int64 union
         .withColumn("jaccard",
           $"inter".cast("double") / ($"n_a" + $"n_b" - $"inter").cast("double"))
         .filter($"jaccard" >= 0.8)
         .select($"doc_a", $"doc_b", $"jaccard")
         .orderBy($"doc_a", $"doc_b")
-        .transform(unpersistAfter(inv))
-      interKept.unpersist()
-      res
     }),
 
     // ---- d5: embedding-cosine near-dup (oracle-checked) --------------------
@@ -237,7 +218,7 @@ object DedupQueries {
     // previous cast-to-double materialization (guide §2.3 narrower types).
     "d5_embed_neardup" -> ((s, dir) => {
       import s.implicits._
-      val e = t(s, dir, "embeddings")
+      val e = Tables.read(s, dir, "embeddings")
         .select($"vec_id", $"label", $"embedding".as("ed"),
           sqrt(dot($"embedding", $"embedding")).as("norm"))
       val a = e.select($"vec_id".as("id_a"), $"label", $"ed".as("va"), $"norm".as("norm_a"))
@@ -252,7 +233,7 @@ object DedupQueries {
     // ---- ann1: brute-force cosine top-k (the correctness baseline) ---------
     "ann1_topk_brute" -> ((s, dir) => {
       import s.implicits._
-      val e = t(s, dir, "embeddings")
+      val e = Tables.read(s, dir, "embeddings")
         .select($"vec_id", $"embedding".as("ed"),
           sqrt(dot($"embedding", $"embedding")).as("norm"))
       val q = e.filter($"vec_id" < 10)
@@ -272,7 +253,7 @@ object DedupQueries {
     // 1/16 scan per query (recall traded for throughput, like FAISS IVF).
     "ann2_topk_ivf" -> ((s, dir) => {
       import s.implicits._
-      val e = t(s, dir, "embeddings")
+      val e = Tables.read(s, dir, "embeddings")
         .select($"vec_id", $"embedding".as("ed"),
           sqrt(dot($"embedding", $"embedding")).as("norm"))
       val cents = e.filter($"vec_id" < 16)

@@ -9,9 +9,6 @@ import org.apache.spark.sql.functions._
   */
 object MiscQueries {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // O1: natural-sort invariant + order-dependent lookup. Reference
@@ -25,7 +22,7 @@ object MiscQueries {
       import s.implicits._
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy($"file_id").orderBy($"old_offset")
-      t(s, dir, "orders")
+      Tables.read(s, dir, "orders")
         .select(($"o_orderkey" % 50).as("file_id"), $"o_orderkey".as("old_offset"))
         .withColumn("prev", lag($"old_offset", 1).over(w))
         .groupBy($"file_id").agg(
@@ -40,7 +37,7 @@ object MiscQueries {
     // record length 8192 at offset 81984113 of one corrupt file)
     "p9_record_patch" -> ((s, dir) => {
       import s.implicits._
-      t(s, dir, "lineitem")
+      Tables.read(s, dir, "lineitem")
         .withColumn("length",
           when($"l_orderkey" === 42 && $"l_linenumber" === 1, lit(8192L))
             .otherwise($"l_quantity".cast("long")))
@@ -52,7 +49,7 @@ object MiscQueries {
     // F7: 'sha1:X' → 'X' digest-prefix strip (normalizeSHA1:401-406)
     "f7_digest_strip" -> ((s, dir) => {
       import s.implicits._
-      t(s, dir, "documents")
+      Tables.read(s, dir, "documents")
         .withColumn("raw", concat(lit("sha1:"), md5($"text".cast("binary"))))
         .select($"doc_id", regexp_replace($"raw", "^sha1:", "").as("digest"))
         .orderBy($"doc_id")
@@ -63,7 +60,7 @@ object MiscQueries {
     "f11_meta_refresh" -> ((s, dir) => {
       import s.implicits._
       val content = concat($"o_orderkey" % 30, lit("; url=/page/"), $"o_orderkey")
-      t(s, dir, "orders").select($"o_orderkey",
+      Tables.read(s, dir, "orders").select($"o_orderkey",
           regexp_extract(content, "^(\\d+)\\s*;\\s*url=\\s*(.+)$", 2).as("redirect"))
         .orderBy($"o_orderkey")
     }),
@@ -80,7 +77,7 @@ object MiscQueries {
         .otherwise(lit(1393850096000L) + $"o_orderkey")
       val line = concat($"o_orderkey", lit(" "), $"o_orderkey" + 4096, lit(" "), ts)
       val f = split(trim(line), " ")
-      t(s, dir, "orders")
+      Tables.read(s, dir, "orders")
         .withColumn("line", line)
         .select($"o_orderkey",
           element_at(f, 1).cast("long").as("old_offset"),
@@ -105,7 +102,7 @@ object MiscQueries {
         $"o_orderkey" * 17 % 1000003, concat($"o_orderkey", lit("-archive.arc")),
         lit("-"))
       val f = split(line, " ")
-      t(s, dir, "orders")
+      Tables.read(s, dir, "orders")
         .withColumn("f", f)
         .select($"o_orderkey",
           element_at($"f", 8).cast("long").as("offset"),
@@ -142,7 +139,7 @@ object MiscQueries {
       val f = split(line, " ")
       def field(letter: String) = // header token i (1-based, after "CDX") = line field i-1
         element_at(f, (array_position(hdr, letter) - 1).cast("int"))
-      t(s, dir, "orders")
+      Tables.read(s, dir, "orders")
         .select($"o_orderkey",
           field("V").cast("long").as("offset"),
           field("S").cast("long").as("size"),
@@ -160,7 +157,7 @@ object MiscQueries {
         .when($"event_id" % 3 === 1,
           concat(lit("  application/"), $"event_type", lit("  xml ")))
         .otherwise(concat(lit("image/"), $"event_type"))
-      t(s, dir, "events")
+      Tables.read(s, dir, "events")
         .select($"event_id", messy.as("mime_raw"),
           trim(regexp_replace(regexp_replace(messy, "%20", " "), " +", " "))
             .as("mime_massaged"))
@@ -181,7 +178,7 @@ object MiscQueries {
         .otherwise(concat_ws(" ", $"o_orderkey", $"o_orderkey" % 997, lit("ok")))
       val f = split(line, " ")
       val offset = expr("try_cast(element_at(f, 2) AS BIGINT)")
-      t(s, dir, "orders")
+      Tables.read(s, dir, "orders")
         .withColumn("f", f)
         .withColumn("parsed", when(size($"f") >= 3, offset).otherwise(lit(null)))
         .groupBy($"o_orderpriority")
@@ -203,7 +200,7 @@ object MiscQueries {
       // lower-cased map materialized ONCE: transform/map_from_entries are
       // interpreted HOFs with no common-subexpression elimination, so the
       // previous duplicated expression rebuilt the whole map per lookup
-      t(s, dir, "events")
+      Tables.read(s, dir, "events")
         .withColumn("hmap", headers)
         .withColumn("lmap", map_from_entries(transform(map_entries($"hmap"),
           e => struct(lower(e("key")).as("key"), e("value").as("value")))))

@@ -13,8 +13,6 @@ import org.apache.spark.sql.streaming.Trigger
   */
 object PipelineQueries {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
   private def cents(c: Column): Column = round(c * 100).cast("long")
 
   /** Streaming checkpoint dir on the RAM disk (same policy as the bench:
@@ -52,7 +50,7 @@ object PipelineQueries {
       // key with no surviving B rows sums to NULL — exactly the full-outer
       // join's missing-side NULL). Replaces 2 scans + 2 shuffles + a
       // full-outer join with 1 scan + 1 shuffle (guide §2.4).
-      val merged = t(s, dir, "lineitem")
+      val merged = Tables.read(s, dir, "lineitem")
         .groupBy($"l_orderkey", $"l_linenumber")
         .agg(sum(cents($"l_extendedprice")).as("price_a"),
           sum(when($"l_suppkey" % 97 =!= 0,
@@ -93,7 +91,7 @@ object PipelineQueries {
         when(lc.contains("noarchive") || isNone, "A").otherwise(""),
         when(lc.contains("nofollow") || isNone, "F").otherwise(""),
         when(lc.contains("noindex") || isNone, "I").otherwise(""))
-      t(s, dir, "documents").select($"doc_id", content.as("robots"), flags.as("flags"))
+      Tables.read(s, dir, "documents").select($"doc_id", content.as("robots"), flags.as("flags"))
         .orderBy($"doc_id")
     }),
 
@@ -101,7 +99,7 @@ object PipelineQueries {
     "f14_filename_rewrite" -> ((s, dir) => {
       import s.implicits._
       val name = concat($"o_orderkey", lit("-metadata-1.warc"))
-      t(s, dir, "orders").select($"o_orderkey",
+      Tables.read(s, dir, "orders").select($"o_orderkey",
           concat(regexp_extract(name, "(.*-)[0-9]+(\\.w?arc)", 1), lit("2"),
             regexp_extract(name, "(.*-)[0-9]+(\\.w?arc)", 2), lit(".gz")).as("new_name"))
         .orderBy($"o_orderkey")
@@ -112,7 +110,7 @@ object PipelineQueries {
       import s.implicits._
       val digits = $"o_orderkey".cast("string")
       val padded = rpad(reverse(digits), 4, "0")
-      t(s, dir, "orders").select($"o_orderkey",
+      Tables.read(s, dir, "orders").select($"o_orderkey",
           concat_ws("/", substring(padded, 1, 1), substring(padded, 2, 1),
             substring(padded, 3, 1), substring(padded, 4, 1)).as("shard_path"))
         .orderBy($"o_orderkey")
@@ -129,9 +127,9 @@ object PipelineQueries {
       // join on keys present in BOTH oldC and newC is preserved exactly:
       // newC's keys ⊇ oldC's, so inner-join(old,new) ≡ oldC's keys with
       // n_synth defaulting to 0 for keys absent from orders.
-      val li = t(s, dir, "lineitem").select($"l_orderkey")
+      val li = Tables.read(s, dir, "lineitem").select($"l_orderkey")
       val oldC = li.groupBy($"l_orderkey").agg(count(lit(1)).as("n_old"))
-      val synthC = t(s, dir, "orders")
+      val synthC = Tables.read(s, dir, "orders")
         .groupBy($"o_orderkey".as("l_orderkey"))
         .agg((count(lit(1)) * 2).as("n_synth"))
       oldC.join(synthC, Seq("l_orderkey"), "left")
@@ -144,7 +142,7 @@ object PipelineQueries {
       // two independent derivations of the same count must agree
       // (reference compareCrawllogWithDedupcdxfile:147-166)
       import s.implicits._
-      val li = t(s, dir, "lineitem")
+      val li = Tables.read(s, dir, "lineitem")
       val viaFilter = li.filter($"l_returnflag" === "R")
         .groupBy($"l_linestatus").agg(count(lit(1)).as("n_filter"))
       val viaSum = li.groupBy($"l_linestatus")
@@ -158,7 +156,7 @@ object PipelineQueries {
     "o4_eviction_topk" -> ((s, dir) => {
       import s.implicits._
       val w = Window.partitionBy($"user_id").orderBy($"ts".desc, $"event_id".desc)
-      t(s, dir, "events").withColumn("rk", row_number().over(w)).filter($"rk" <= 3)
+      Tables.read(s, dir, "events").withColumn("rk", row_number().over(w)).filter($"rk" <= 3)
         .select($"user_id", $"rk", $"event_id")
         .orderBy($"user_id", $"rk")
     }),
@@ -170,7 +168,7 @@ object PipelineQueries {
       // frontier engine uses for seq assignment — the only forced RDD use).
       // A Window.orderBy with no partitionBy would execute in ONE task.
       import s.implicits._
-      t(s, dir, "orders").select($"o_orderkey")
+      Tables.read(s, dir, "orders").select($"o_orderkey")
         .repartitionByRange(32, $"o_orderkey").sortWithinPartitions($"o_orderkey")
         .as[Long].rdd.zipWithIndex()
         .map { case (k, i) => (k, i / 50) }
@@ -185,7 +183,7 @@ object PipelineQueries {
       import s.implicits._
       val w = Window.partitionBy($"user_id").orderBy($"ts", $"event_id")
       val ep = $"ts".cast("timestamp").cast("long")
-      t(s, dir, "events")
+      Tables.read(s, dir, "events")
         .withColumn("gap", ep - lag(ep, 1).over(w))
         .withColumn("new_session",
           when($"gap".isNull || $"gap" > 1800, 1L).otherwise(0L))
@@ -197,7 +195,7 @@ object PipelineQueries {
     // ---- F3: content digest round-trip equality (sha-256) -------------------
     "f3_digest_roundtrip" -> ((s, dir) => {
       import s.implicits._
-      t(s, dir, "documents")
+      Tables.read(s, dir, "documents")
         .select($"doc_id", sha2($"text".cast("binary"), 256).as("digest"),
           (sha2($"text".cast("binary"), 256) ===
             sha2(reverse(reverse($"text")).cast("binary"), 256)).cast("int")
@@ -218,7 +216,7 @@ object PipelineQueries {
       import s.implicits._
       import graft.functions.codecfns._
       val gz = gzip_bytes($"text".cast("binary"))
-      t(s, dir, "documents")
+      Tables.read(s, dir, "documents")
         .select($"doc_id", gz.as("gz"), length($"text").cast("long").as("n_src"))
         .select($"doc_id",
           md5(gunzip_bytes($"gz")).as("digest"),
@@ -248,7 +246,7 @@ object PipelineQueries {
         .when(k === 5, lit("mailto:admin@example.org")) // uncrawlable -> null
         .when(k === 6, concat(lit("#sec"), m))
         .otherwise(lit("100% x.html")) // bare '%' + space -> %25 / %20
-      t(s, dir, "orders")
+      Tables.read(s, dir, "orders")
         .select($"o_orderkey", base.as("base"), ref.as("ref"))
         .select($"o_orderkey", $"ref",
           resolve_url($"base", $"ref").as("resolved"),
@@ -260,7 +258,7 @@ object PipelineQueries {
     "f8_mime_normalize" -> ((s, dir) => {
       import s.implicits._
       val mime = concat($"event_type", lit("/sub; charset=UTF 8"))
-      t(s, dir, "events").select($"event_id",
+      Tables.read(s, dir, "events").select($"event_id",
           regexp_replace(trim(substring_index(mime, ";", 1)), " ", "%20").as("mime_norm"))
         .orderBy($"event_id")
     }),
@@ -276,7 +274,7 @@ object PipelineQueries {
       val en = score(Seq("the", "of", "and"))
       val de = score(Seq("der", "die", "und"))
       val fr = score(Seq("le", "la", "et"))
-      t(s, dir, "documents")
+      Tables.read(s, dir, "documents")
         .withColumn("toks", split($"text", " "))
         .withColumn("s_en", en).withColumn("s_de", de).withColumn("s_fr", fr)
         .withColumn("predicted",
@@ -291,7 +289,7 @@ object PipelineQueries {
     "t4_fingerprint" -> ((s, dir) => {
       import s.implicits._
       val norm = trim(regexp_replace(lower($"text"), " +", " "))
-      t(s, dir, "documents")
+      Tables.read(s, dir, "documents")
         .groupBy(md5(norm.cast("binary")).as("fingerprint"))
         .agg(min($"doc_id").as("keeper"), count(lit(1)).as("n_docs"))
         .orderBy($"fingerprint")
@@ -300,7 +298,7 @@ object PipelineQueries {
     // ---- a6: rollup (multi-level aggregation) --------------------------------
     "a6_rollup" -> ((s, dir) => {
       import s.implicits._
-      t(s, dir, "lineitem")
+      Tables.read(s, dir, "lineitem")
         .rollup($"l_returnflag", $"l_linestatus")
         .agg(count(lit(1)).as("n"), sum($"l_quantity".cast("long")).as("sum_qty"))
         .select(coalesce($"l_returnflag", lit("ALL")).as("l_returnflag"),
@@ -313,7 +311,7 @@ object PipelineQueries {
     // batch date_trunc equivalent — streaming and batch must agree exactly.
     "st_stream_hourly" -> ((s, dir) => {
       import s.implicits._
-      val schema = t(s, dir, "events").schema
+      val schema = Tables.schemas("events")
       val stream = s.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet").parquet(dir)
         .withColumn("ts", $"ts".cast("timestamp")) // NTZ -> event-time type (UTC session)
@@ -342,7 +340,7 @@ object PipelineQueries {
     // first payload byte's nibbles, replicated exactly by the oracle.
     "mm_media_decode" -> ((s, dir) => {
       import s.implicits._
-      val withBlob = t(s, dir, "embeddings")
+      val withBlob = Tables.read(s, dir, "embeddings")
         .select($"vec_id", unhex(md5(concat(lit("media-"), $"vec_id").cast("binary"))).as("payload"))
         .as[(Long, Array[Byte])]
       withBlob.mapPartitions { batch =>
@@ -365,7 +363,7 @@ object PipelineQueries {
     "mm2_decode_cols" -> ((s, dir) => {
       import s.implicits._
       val hex = md5(concat(lit("media-"), $"vec_id").cast("binary"))
-      t(s, dir, "embeddings")
+      Tables.read(s, dir, "embeddings")
         .select($"vec_id",
           (conv(substring(hex, 1, 1), 16, 10).cast("int") + 32).as("width"),
           (conv(substring(hex, 2, 1), 16, 10).cast("int") + 32).as("height"),

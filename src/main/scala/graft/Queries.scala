@@ -21,9 +21,6 @@ import graft.snapshots.SnapshotStore
   */
 object Queries {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
   /** Exact money arithmetic: round(x*100) as int64 cents. */
   private def cents(c: Column): Column = round(c * 100).cast("long")
 
@@ -32,7 +29,7 @@ object Queries {
     // ---- scans / filters / projections (S1, P1, P2, P4, P6) --------------
     "s1_scan_project" -> ((s, dir) => {
       import s.implicits._
-      t(s, dir, "lineitem")
+      Tables.read(s, dir, "lineitem")
         .filter($"l_shipdate" >= lit("1994-01-01") && $"l_quantity" > 0)
         .select($"l_orderkey", $"l_linenumber", cents($"l_extendedprice").as("price_cents"))
         .orderBy($"l_orderkey", $"l_linenumber")
@@ -43,8 +40,8 @@ object Queries {
       // negative-balance customers are the "blacklist"; keep orders whose
       // customer is NOT blacklisted — broadcast anti-join
       import s.implicits._
-      val o = t(s, dir, "orders")
-      val bl = t(s, dir, "customer").filter($"c_acctbal" < 0).select($"c_custkey")
+      val o = Tables.read(s, dir, "orders")
+      val bl = Tables.read(s, dir, "customer").filter($"c_acctbal" < 0).select($"c_custkey")
       o.join(broadcast(bl), o("o_custkey") === bl("c_custkey"), "left_anti")
         .groupBy($"o_orderpriority").agg(count(lit(1)).as("n"))
         .orderBy($"o_orderpriority")
@@ -52,7 +49,7 @@ object Queries {
 
     "p4_type_dispatch" -> ((s, dir) => {
       import s.implicits._
-      t(s, dir, "events")
+      Tables.read(s, dir, "events")
         .withColumn("route",
           when($"event_type" === "click", "interactive")
             .when($"event_type" === "view", "passive")
@@ -63,7 +60,7 @@ object Queries {
 
     "p6_contains_filter" -> ((s, dir) => {
       import s.implicits._
-      t(s, dir, "documents").filter($"text".contains("query"))
+      Tables.read(s, dir, "documents").filter($"text".contains("query"))
         .groupBy($"lang").agg(count(lit(1)).as("n")).orderBy($"lang")
     }),
 
@@ -78,7 +75,7 @@ object Queries {
       // ObjectHashAggregate list building + the interpreted zip_with lambda
       // dominate (guide §1.1: the ideal-plan rewrite lost to the gotcha).
       import s.implicits._
-      val li = t(s, dir, "lineitem")
+      val li = Tables.read(s, dir, "lineitem")
       val byDate = li.withColumn("rn", row_number().over(
         Window.partitionBy($"l_orderkey").orderBy($"l_shipdate", $"l_linenumber")))
         .select($"l_orderkey", $"rn", $"l_linenumber".as("ln_by_date"))
@@ -91,7 +88,7 @@ object Queries {
 
     "j3_lookup_join" -> ((s, dir) => {
       import s.implicits._
-      val li = t(s, dir, "lineitem"); val p = t(s, dir, "part")
+      val li = Tables.read(s, dir, "lineitem"); val p = Tables.read(s, dir, "part")
       li.join(broadcast(p), li("l_partkey") === p("p_partkey"))
         .groupBy($"p_brand")
         .agg(count(lit(1)).as("n"), sum(cents($"l_extendedprice")).as("revenue_cents"))
@@ -100,7 +97,7 @@ object Queries {
 
     "j4_left_coalesce" -> ((s, dir) => {
       import s.implicits._
-      val o = t(s, dir, "orders"); val c = t(s, dir, "customer")
+      val o = Tables.read(s, dir, "orders"); val c = Tables.read(s, dir, "customer")
       o.join(broadcast(c), o("o_custkey") === c("c_custkey"), "left_outer")
         .withColumn("segment", coalesce($"c_mktsegment", lit("MISSING")))
         .groupBy($"segment").agg(count(lit(1)).as("n_orders"),
@@ -112,8 +109,8 @@ object Queries {
       // seen-set dedup semantics (reference J5): 'F'-status orders are the
       // seen set; lineitems of unseen orders survive the anti-join
       import s.implicits._
-      val li = t(s, dir, "lineitem")
-      val seen = t(s, dir, "orders").filter($"o_orderstatus" === "F")
+      val li = Tables.read(s, dir, "lineitem")
+      val seen = Tables.read(s, dir, "orders").filter($"o_orderstatus" === "F")
         .select($"o_orderkey")
       li.join(seen, li("l_orderkey") === seen("o_orderkey"), "left_anti")
         .groupBy($"l_returnflag").agg(count(lit(1)).as("n"),
@@ -124,7 +121,7 @@ object Queries {
     "j6_checksum_join" -> ((s, dir) => {
       // md5-ledger validation join (reference J6, validateMD5:119-147)
       import s.implicits._
-      val d = t(s, dir, "documents")
+      val d = Tables.read(s, dir, "documents")
       val ledger = d.select($"doc_id", md5($"text".cast("binary")).as("expected_md5"))
       d.select($"doc_id", md5($"text".cast("binary")).as("actual_md5"))
         .join(ledger, Seq("doc_id"))
@@ -135,7 +132,7 @@ object Queries {
     // ---- aggregations (A1, A5) --------------------------------------------
     "a1_agg_per_group" -> ((s, dir) => {
       import s.implicits._
-      t(s, dir, "lineitem").groupBy($"l_returnflag", $"l_linestatus")
+      Tables.read(s, dir, "lineitem").groupBy($"l_returnflag", $"l_linestatus")
         .agg(count(lit(1)).as("n"),
           sum($"l_quantity".cast("long")).as("sum_qty"),
           sum(cents($"l_extendedprice")).as("sum_price_cents"),
@@ -149,7 +146,7 @@ object Queries {
     "a5_found_failed_counters" -> ((s, dir) => {
       // per-partition found/failed metrics (reference A5)
       import s.implicits._
-      t(s, dir, "orders")
+      Tables.read(s, dir, "orders")
         .withColumn("failed", when($"o_orderstatus" === "F", 1L).otherwise(0L))
         .groupBy($"o_orderpriority")
         .agg(count(lit(1)).as("n"), sum($"failed").as("n_failed"))
@@ -161,7 +158,7 @@ object Queries {
       import s.implicits._
       val w = Window.partitionBy($"l_orderkey")
         .orderBy($"l_extendedprice".desc, $"l_linenumber")
-      t(s, dir, "lineitem").withColumn("rk", row_number().over(w))
+      Tables.read(s, dir, "lineitem").withColumn("rk", row_number().over(w))
         .filter($"rk" <= 2)
         .select($"l_orderkey", $"rk", $"l_linenumber", cents($"l_extendedprice").as("price_cents"))
         .orderBy($"l_orderkey", $"rk")
@@ -174,7 +171,7 @@ object Queries {
       val w = Window.partitionBy($"l_suppkey")
         .orderBy($"l_shipdate", $"l_orderkey", $"l_linenumber")
         .rowsBetween(-2, 0)
-      t(s, dir, "lineitem")
+      Tables.read(s, dir, "lineitem")
         .withColumn("flag", when($"l_returnflag" === "R", 1L).otherwise(0L))
         .withColumn("disturbances", sum($"flag").over(w))
         .select($"l_suppkey", $"l_orderkey", $"l_linenumber", $"disturbances")
@@ -184,14 +181,14 @@ object Queries {
     // ---- sort / distinct / union (O2, O3) -----------------------------------
     "o2_distinct_sort" -> ((s, dir) => {
       import s.implicits._
-      t(s, dir, "lineitem").select($"l_returnflag", $"l_linestatus")
+      Tables.read(s, dir, "lineitem").select($"l_returnflag", $"l_linestatus")
         .distinct().orderBy($"l_returnflag", $"l_linestatus")
     }),
 
     "o3_union_shards" -> ((s, dir) => {
       import s.implicits._
-      val a = t(s, dir, "orders").select($"o_custkey".as("key"))
-      val b = t(s, dir, "customer").select($"c_custkey".as("key"))
+      val a = Tables.read(s, dir, "orders").select($"o_custkey".as("key"))
+      val b = Tables.read(s, dir, "customer").select($"c_custkey".as("key"))
       a.unionByName(b).distinct().orderBy($"key")
     }),
 
@@ -199,7 +196,7 @@ object Queries {
     "f1_canon_url" -> ((s, dir) => {
       // native Catalyst canonicalize_url over messy constructed URLs
       import s.implicits._
-      t(s, dir, "documents")
+      Tables.read(s, dir, "documents")
         .withColumn("url", concat(lit("HTTP://WWW."), upper($"source"),
           lit(".Example.ORG:80/d/"), $"doc_id", lit("#frag")))
         .select($"doc_id", canonicalize_url($"url").as("canon"))
@@ -208,7 +205,7 @@ object Queries {
 
     "f5_date_format" -> ((s, dir) => {
       import s.implicits._
-      t(s, dir, "events")
+      Tables.read(s, dir, "events")
         .select($"event_id", date_format($"ts", "yyyyMMddHHmmss").as("cdx_date"))
         .orderBy($"event_id")
     }),
@@ -222,7 +219,7 @@ object Queries {
       // every line the generator emits ([^,]+ = up to the comma, \d+ = up
       // to the closing quote).
       import s.implicits._
-      t(s, dir, "lineitem")
+      Tables.read(s, dir, "lineitem")
         .withColumn("line", concat(lit("fetched duplicate:\"file-"), $"l_orderkey",
           lit(".arc,"), cents($"l_extendedprice"), lit("\" ok")))
         .withColumn("anno",
@@ -235,7 +232,7 @@ object Queries {
 
     "p8_json_extract" -> ((s, dir) => {
       import s.implicits._
-      t(s, dir, "events")
+      Tables.read(s, dir, "events")
         .select($"event_id", get_json_object($"props", "$.k").cast("long").as("k"))
         .orderBy($"event_id")
     }),
@@ -243,7 +240,7 @@ object Queries {
     // ---- dedup & text analysis (training-data ops) -------------------------
     "d1_exact_dedup" -> ((s, dir) => {
       import s.implicits._
-      t(s, dir, "documents")
+      Tables.read(s, dir, "documents")
         .groupBy(md5($"text".cast("binary")).as("fingerprint"))
         .agg(min($"doc_id").as("keeper"), count(lit(1)).as("n_copies"))
         .orderBy($"fingerprint")
@@ -251,7 +248,7 @@ object Queries {
 
     "t1_token_count" -> ((s, dir) => {
       import s.implicits._
-      t(s, dir, "documents")
+      Tables.read(s, dir, "documents")
         .select($"doc_id", size(split($"text", " ")).cast("long").as("n_tokens"),
           length($"text").cast("long").as("n_chars_actual"))
         .orderBy($"doc_id")
@@ -259,7 +256,7 @@ object Queries {
 
     "t2_quality_score" -> ((s, dir) => {
       import s.implicits._
-      t(s, dir, "documents")
+      Tables.read(s, dir, "documents")
         .withColumn("n_tokens", size(split($"text", " ")).cast("long"))
         .withColumn("n_stop", (size(split($"text", " the ")) - 1).cast("long"))
         .select($"doc_id", $"n_tokens", $"n_stop",

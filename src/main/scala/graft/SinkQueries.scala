@@ -24,9 +24,6 @@ import org.apache.spark.sql.functions._
   */
 object SinkQueries {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
   /** Scratch dir for sink outputs: RAM disk when present (same policy as
     * the bench — the sandbox's single virtio disk stalls under writeback),
     * unique per invocation. NOT deleted at return: the returned frame
@@ -73,7 +70,7 @@ object SinkQueries {
       val out = scratch("ifile")
       val ts = when($"o_orderkey" % 5 === 0, lit(-1L))
         .otherwise(lit(1393850096000L) + $"o_orderkey" % 777601)
-      t(s, dir, "orders")
+      Tables.read(s, dir, "orders")
         .select(concat($"o_orderkey", lit(" "),
           $"o_orderkey" * 3 + 7, lit(" "), ts).as("value"))
         .write.mode("overwrite").text(out)
@@ -107,7 +104,7 @@ object SinkQueries {
         lit("-"),                                                   // r
         ($"l_orderkey" * 7 + $"l_linenumber").cast("long"),         // V
         concat($"l_orderkey" % 100, lit(".warc.gz")))               // g
-      t(s, dir, "lineitem").select(line.as("value"))
+      Tables.read(s, dir, "lineitem").select(line.as("value"))
         .write.mode("overwrite").text(out)
       val f = split($"value", " ")
       s.read.text(out)
@@ -129,7 +126,7 @@ object SinkQueries {
     "k3_bytes_sink" -> ((s, dir) => {
       import s.implicits._
       val out = scratch("bytes")
-      t(s, dir, "documents")
+      Tables.read(s, dir, "documents")
         .select($"doc_id", $"text".cast("binary").as("payload"))
         .write.mode("overwrite").parquet(out)
       s.read.parquet(out)

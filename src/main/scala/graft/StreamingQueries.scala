@@ -10,9 +10,6 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object StreamingQueries {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
   case class Ev(user_id: Long, event_id: Long, epoch: Long)
   case class SessionAgg(user_id: Long, n_sessions: Long, n_events: Long)
 
@@ -24,7 +21,7 @@ object StreamingQueries {
     // the same total order as the batch twin, so results are identical.
     "st_sessionize_stateful" -> ((s, dir) => {
       import s.implicits._
-      val schema = t(s, dir, "events").schema
+      val schema = Tables.schemas("events")
       val src = s.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet").parquet(dir)
         .select($"user_id", $"event_id",
@@ -63,7 +60,7 @@ object StreamingQueries {
     // pivot: per-user event-type counts as columns
     "a7_pivot" -> ((s, dir) => {
       import s.implicits._
-      t(s, dir, "events")
+      Tables.read(s, dir, "events")
         .groupBy($"user_id")
         .pivot($"event_type", Seq("click", "view", "purchase"))
         .agg(count(lit(1)))

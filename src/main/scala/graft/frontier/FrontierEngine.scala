@@ -553,7 +553,7 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
     val nDeduped = nDiscovered - nNew - nBlocked
 
     // ---- wave 2: seqs, blooms, the commit ----------------------------------
-    val newEntries = assignSeqs(scope, fresh, newPerShard, seqBase, r)
+    val newEntries = assignSeqs(fresh, newPerShard, seqBase, r)
     val newSeenTotal = prior("seen_total") + nNew + nBlocked
     // ONE shuffle shared by the seen append and the bloom sidecar build:
     // both consume this bucket-partitioned cache (partition id == bucket id
@@ -568,7 +568,7 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
       Map("frontier" -> newEntries,
           "host_next" -> advanceClocks(scheduled, hostNext),
           "crawl_log" -> crawlLogOf(r, fetched).coalesce(writeWidth(nScheduled)),
-          "lineage" -> lineageOf(r, fetched, newEntries, nDeduped, nBlocked)),
+          "lineage" -> lineageOf(r, fetched, fresh, nDeduped, nBlocked)),
       Map("seq_base" -> (seqBase + nNew),
           "seen_total" -> newSeenTotal,
           "consumed_total" -> (consumedTotal + nScheduled),
@@ -670,7 +670,9 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
     * WIDE gated union instead cost 25 s of columnar build at the bench web,
     * 7× the uncached recompute of the tail. Its build counts its rows (the
     * "links" observation): the cache's only reader is `fresh`'s build, so
-    * a second job counting it would race that build for its partitions. */
+    * a second job counting it would race that build for its partitions.
+    * The cache also carries each canon's bloom shard and key (`bloomKeyed`),
+    * which `dedup` probes. */
   private def discover(scope: RoundScope, scheduled: DataFrame, docsLinks: DataFrame,
                        small: Boolean): DataFrame = {
     val sched = scheduled.select($"canon", $"depth")
@@ -682,6 +684,7 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
       .groupBy($"canon2".as("canon"))
       .agg((min($"depth") + 1).as("depth"))
       .observe("links", count(lit(1)).as("n"))
+      .transform(bloomKeyed)
       .coalesce(cacheWidth)
       .transform(scope.cache("links"))
   }
@@ -693,18 +696,26 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
     * (only the candidate side shuffles; SHUFFLE_HASH build on the seen
     * bucket — no per-round re-sort of the seen set). LEFT ANTI is also
     * dup-safe: duplicate build rows (possible only after a crash-retry
-    * append) cannot duplicate probe rows. Shard routing = the seen-table
-    * BUCKET id (murmur3), key = xxhash64: bloom shards align 1:1 with the
-    * buckets. */
-  private def dedup(links: DataFrame, seenPrev: DataFrame,
-                    descBc: Broadcast[BloomDesc]): DataFrame = {
-    val withKey = links.withColumn("key", xxhash64($"canon"))
-      .withColumn("bshard", pmod(hash($"canon"), lit(cfg.seenShards)))
+    * append) cannot duplicate probe rows.
+    *
+    * `links` must be a cache carrying `bloomKeyed`'s columns: with the
+    * probe's inputs derived from `canon` in this plan, the optimizer pushes
+    * it down to an expression of `canon` and InferFiltersFromConstraints
+    * copies it through the join key onto the seen side, probing every seen
+    * row each round, all of which pass (PlanSpec checks). */
+  private[graft] def dedup(links: DataFrame, seenPrev: DataFrame,
+                           descBc: Broadcast[BloomDesc]): DataFrame = {
     val maybeSeen = graft.functions.bloomfns.bloom_probe($"bshard", $"key", descBc)
-    withKey.filter(maybeSeen)
+    links.filter(maybeSeen)
       .join(seenPrev.hint("shuffle_hash"), Seq("canon"), "left_anti")
-      .unionByName(withKey.filter(!maybeSeen))
+      .unionByName(links.filter(!maybeSeen))
   }
+
+  /** `df` with each canon's bloom shard, the seen-table BUCKET id (murmur3),
+    * and its bloom key (xxhash64): bloom shards align 1:1 with the buckets. */
+  private[graft] def bloomKeyed(df: DataFrame): DataFrame =
+    df.withColumn("key", xxhash64($"canon"))
+      .withColumn("bshard", pmod(hash($"canon"), lit(cfg.seenShards)))
 
   /** gate — robots (the codegen'd `robots_allows`; its rule source is
     * pluggable behind GateExprHelper). Blocked URLs enter seen, never the
@@ -759,8 +770,9 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
     * whole shard per partition); each partition sorts locally by (shard,
     * canon) — one round's slice of its shards, bounded — and numbers every
     * shard contiguously from its offset, in one pass. The closures capture
-    * only `offsets` and `r`. */
-  private def assignSeqs(scope: RoundScope, fresh: DataFrame, newPerShard: Array[Long],
+    * only `offsets` and `r`. Not cached: the frontier write is its only
+    * reader (lineage counts its rows per host from `fresh`). */
+  private def assignSeqs(fresh: DataFrame, newPerShard: Array[Long],
                          seqBase: Long, r: Int): DataFrame = {
     val offsets = newPerShard.scanLeft(seqBase)(_ + _)
     fresh.filter($"allowed")
@@ -781,7 +793,6 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
         }
       }
       .toDF("canon", "host", "depth", "seq", "discovered_round")
-      .transform(scope.cache("newEntries"))
   }
 
   /** updateBlooms — the per-shard sidecars for snapshot r, started in the
@@ -844,12 +855,13 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
         .as("next_time"))
 
   /** Per-host lineage for round r (north rule: per-partition lineage): ONE
-    * aggregation over the slim `fetched` cache ∪ the round's new entries,
-    * written with its natural (AQE-coalesced) partitioning. */
-  private def lineageOf(r: Int, fetched: DataFrame, newEntries: DataFrame,
+    * aggregation over the slim `fetched` cache ∪ the round's new entries
+    * (`fresh`'s allowed rows, the rows `assignSeqs` numbers), written with
+    * its natural (AQE-coalesced) partitioning. */
+  private def lineageOf(r: Int, fetched: DataFrame, fresh: DataFrame,
                         deduped: Long, blocked: Long): DataFrame =
     fetched.select($"host", $"hit")
-      .unionByName(newEntries.select($"host", lit(true).as("new")),
+      .unionByName(fresh.filter($"allowed").select($"host", lit(true).as("new")),
         allowMissingColumns = true)
       .groupBy($"host").agg(
         count($"hit").as("scheduled"),
@@ -866,13 +878,13 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
     * of them — and a compaction round's artifact — is durable.
     *
     * Build order: wave 1's collect (`roundCounts`) has already built the
-    * four wave-1 caches once each, so the commit-wave jobs over `scheduled`
-    * and `fetched` (host_next, crawl_log, lineage) only read them. The seen
-    * append rebuilds nothing: no cached plan of the round reads the seen
-    * table (`fresh` is built from an RDD, see `gate`). The two caches built
-    * in this wave, `newEntries` (frontier and lineage writes) and
-    * `freshBuckets` (seen append and bloom update), are deliberately NOT
-    * materialized in a head job before their two consumers: a round-6 A/B
+    * four wave-1 caches once each, so the commit-wave jobs over `scheduled`,
+    * `fetched` and `fresh` (host_next, crawl_log, lineage, frontier) only
+    * read them. The seen append rebuilds nothing: no cached plan of the
+    * round reads the seen table (`fresh` is built from an RDD, see `gate`).
+    * The one cache built in this wave, `freshBuckets` (seen append and
+    * bloom update), is deliberately NOT materialized in a head job before
+    * its two consumers: a round-6 A/B
     * that did so measured ~10% SLOWER at local[32] AND slower per-round at
     * local[8] (xl, clean same-window pairs 58.1 vs 64.2 s @32) — in local
     * mode the block manager's per-block write locks already serialize

@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.graft.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 /** Dedup-family cross-checks at sf0.001: the probabilistic methods must
@@ -35,6 +39,26 @@ class DedupSpec extends SparkSuite {
       .select($"query_id", $"neighbor_id").as[(Long, Long)].collect().toSet
     val recall = ivf.count(brute).toDouble / ivf.size
     assert(recall >= 0.3, s"IVF recall vs brute force $recall — cells too lossy")
+  }
+
+  test("d4_ngram_jaccard runs at most 8 jobs") {
+    // one shuffle by shingle feeds both the candidate pairs and the hot
+    // lists; the count-and-correct form it replaced ran 20 jobs at sf0.01
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    ListenerDrain(sc)
+    sc.addSparkListener(listener)
+    try SparkEntry.queries("d4_ngram_jaccard")(spark, sf("sf0.01"))
+      .write.mode("overwrite").format("noop").save()
+    finally {
+      ListenerDrain(sc)
+      sc.removeSparkListener(listener)
+    }
+    info(s"${jobs.get} jobs")
+    assert(jobs.get <= 8, s"d4_ngram_jaccard ran ${jobs.get} jobs")
   }
 
   test("exact dedup and normalized fingerprint agree on identical docs") {

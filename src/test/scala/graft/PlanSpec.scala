@@ -90,6 +90,44 @@ class PlanSpec extends SparkSuite {
     assert(!p.contains("Sort "), "seen side re-sorted every round:\n" + p)
   }
 
+  test("frontier dedup: the bloom probe prunes the candidates, never the seen scan") {
+    // InferFiltersFromConstraints copies a LEFT ANTI join's left-side
+    // filters onto its right side through the join key: a probe of an
+    // expression of `canon` would probe every seen row each round, and
+    // every one passes, since the blooms are built from the seen set
+    import graft.frontier.{EngineConfig, FrontierEngine}
+    import graft.functions.{BloomDesc, BloomProbe}
+    import graft.model.DocSynth
+    import graft.snapshots.SnapshotStore
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
+    import org.apache.spark.sql.functions._
+    val store = new SnapshotStore(java.nio.file.Files.createTempDirectory("plan-probe").toString)
+    val shards = 32
+    val engine = new FrontierEngine(spark, store,
+      EngineConfig(perHostBudget = 3, seenShards = shards))
+    val cfg = DocSynth.Config(nHosts = 8, pagesPerHost = 15, hotFactor = 2,
+      linksPerDoc = 4, seed = 13L)
+    engine.run(DocSynth.docs(spark, cfg).toDF(), DocSynth.seeds(cfg), 1)
+    // the round's `links` cache: candidates with their bloom shard and key
+    val links = engine.bloomKeyed(spark.range(0, 1000)
+      .select(concat(lit("http://host-"), col("id") % 8, lit(".example.org/p/"), col("id"))
+        .as("canon"), lit(1).as("depth"))).cache()
+    val desc = spark.sparkContext.broadcast(BloomDesc(store, Array.fill(shards)(1)))
+    try {
+      val plan = engine.dedup(links, engine.seenJoinable(1), desc).queryExecution.optimizedPlan
+      val anti = plan.collectFirst { case j: Join if j.joinType == LeftAnti => j }
+        .getOrElse(fail(s"no LEFT ANTI join:\n$plan"))
+      def probes(p: LogicalPlan): Boolean =
+        p.exists(_.expressions.exists(_.exists(_.isInstanceOf[BloomProbe])))
+      assert(probes(anti.left), s"the candidates are not bloom-pruned:\n$plan")
+      assert(!probes(anti.right), s"the seen scan probes the bloom:\n$plan")
+    } finally {
+      links.unpersist()
+      desc.destroy()
+    }
+  }
+
   test("fetch join is storage-partitioned: bucketed link-graph side scans in place") {
     // the 100 TB-corpus question: past the broadcast threshold the
     // fetch join must shuffle ONLY the skinny schedule — the bucketed

@@ -66,12 +66,15 @@ class RoundShapeSpec extends SparkSuite {
     // (24/26/592 jobs/stages/tasks six times, 25/27/593 twice) plus one
     // 1-task job: the wave-1 caches are built before the commit
     // (RoundCacheSpec), but whether a commit-wave job finds `freshBuckets`
-    // or `newEntries` already built, and so skips a stage, depends on
-    // timing. One stage more than before the wave-1 caches were built once:
-    // the round's collect also aggregates `fetched` (its 200/404 split)
+    // already built, and so skips a stage, depends on timing. One stage
+    // more than before the wave-1 caches were built once: the round's
+    // collect also aggregates `fetched` (its 200/404 split). 31 tasks more
+    // since lineage counts the new entries from `fresh`, one partition per
+    // slot (32 here), not from `newEntries`, which is no longer cached and
+    // has `writeWidth` partitions (1 here); 24/26/623 in five runs
     assert(jobs <= 26, shape)
     assert(stages.size <= 28, shape)
-    assert(tasks <= 594, shape)
+    assert(tasks <= 624, shape)
     docs.unpersist()
   }
 }

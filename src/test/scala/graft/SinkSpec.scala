@@ -12,7 +12,7 @@ class SinkSpec extends SparkSuite {
   test("k1 ifile sink round-trips every (old, new, ts) line") {
     val got = SparkEntry.queries("k1_ifile_sink")(spark, sf("sf0.001"))
       .as[(Long, Long, Long)].collect()
-    val orders = spark.read.parquet(sf("sf0.001") + "/orders.parquet")
+    val orders = Tables.read(spark, sf("sf0.001"), "orders")
       .select($"o_orderkey".cast("long")).as[Long].collect()
     assert(got.length === orders.length)
     val expect = orders.map { k =>
@@ -23,7 +23,7 @@ class SinkSpec extends SparkSuite {
 
   test("k2 cdx sink preserves the 9-field NbamskrVg layout per record") {
     val got = SparkEntry.queries("k2_cdx_sink")(spark, sf("sf0.001")).cache()
-    val li = spark.read.parquet(sf("sf0.001") + "/lineitem.parquet")
+    val li = Tables.read(spark, sf("sf0.001"), "lineitem")
     assert(got.count() === li.count())
     // every parsed row must carry a well-formed url + filename, the derived
     // offset, and the fixed-position fields (status, 32-hex checksum, dash
@@ -37,7 +37,7 @@ class SinkSpec extends SparkSuite {
 
   test("k3 binary sink preserves payload bytes (digest equality)") {
     val got = SparkEntry.queries("k3_bytes_sink")(spark, sf("sf0.001"))
-    val src = spark.read.parquet(sf("sf0.001") + "/documents.parquet")
+    val src = Tables.read(spark, sf("sf0.001"), "documents")
       .select($"doc_id", md5($"text".cast("binary")).as("digest"),
         length($"text").cast("long").as("nbytes"))
     assert(got.join(src, Seq("doc_id", "digest", "nbytes")).count() === src.count())

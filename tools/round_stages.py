@@ -1,21 +1,25 @@
 #!/usr/bin/env python3
-"""Print a crawl round's Spark stage timeline from a crawlbench trace.
+"""Print a crawl round's or a catalog query's Spark stage timeline from a crawlbench trace.
 
 A traced benchmark run (`python3 crawlbench/run.py --workload frontier-wide
---trace 1`) writes `crawlbench/out/<workload>-seed<n>-trace1.trace.jsonl`:
-one JSON object per span (set-ups, rounds, storage calls) and per completed
-Spark stage. This tool assigns each stage to the round span that covers its
-submission time, as the benchmark's per-layer metrics do, and prints per
-stage: submit and complete offsets from the round's start, tasks, task-s,
-cpu-s and the input, shuffle-write, shuffle-read and output megabytes. The
-totals line adds the round's wall time, the wall time no stage covered
-(idle) and the stage count.
+--trace 1`, or `--workload catalog`) writes
+`crawlbench/out/<workload>-seed<n>-trace1.trace.jsonl`: one JSON object per
+span (set-ups, rounds or timed queries, storage calls) and per completed
+Spark stage. This tool assigns each stage to the operation span that covers
+its submission time, as the benchmark's per-layer metrics do, and prints per
+stage: submit and complete offsets from the operation's start, tasks,
+task-s, cpu-s and the input, shuffle-write, shuffle-read and output
+megabytes. The totals line adds the operation's wall time, the wall time no
+stage covered (idle) and the stage count.
 
     python3 tools/round_stages.py crawlbench/out/frontier-wide-seed21-trace1.trace.jsonl
     python3 tools/round_stages.py --round 2 --totals before.trace.jsonl after.trace.jsonl
+    python3 tools/round_stages.py --query d4_ngram_jaccard crawlbench/out/catalog-seed1-trace1.trace.jsonl
 
-With several files, `--totals` prints one totals row per file and round, so
-two commits' runs on the same seed compare side by side.
+A catalog run times each query twice (two passes, the second in reverse
+order); `--query` prints both, labelled `NAME#1` and `NAME#2`. With several
+files, `--totals` prints one totals row per file and operation, so two
+commits' runs on the same seed compare side by side.
 """
 import argparse
 import json
@@ -33,11 +37,18 @@ def load(path):
     return spans, stages
 
 
-def rounds_of(spans, run, only):
+def ops_of(spans, run, rnd, query):
+    """The (label, span) of each selected operation, in start order: a
+    catalog query's timed passes, or the crawl's rounds (all, or one)."""
+    if query is not None:
+        out = [s for s in spans if s["name"] == "query" and s["run"] == run
+               and s["detail"] == query]
+        return [(f"{query}#{k}", s)
+                for k, s in enumerate(sorted(out, key=lambda s: s["start_ms"]), 1)]
     out = [s for s in spans if s["name"] == "round" and s["run"] == run]
-    if only is not None:
-        out = [s for s in out if s["detail"] == f"r{only}"]
-    return sorted(out, key=lambda s: s["start_ms"])
+    if rnd is not None:
+        out = [s for s in out if s["detail"] == f"r{rnd}"]
+    return [(s["detail"][1:], s) for s in sorted(out, key=lambda s: s["start_ms"])]
 
 
 def covered_ms(intervals, lo, hi):
@@ -51,10 +62,10 @@ def covered_ms(intervals, lo, hi):
     return total
 
 
-def totals(rnd, stages):
-    wall = rnd["dur_ms"]
+def totals(op, stages):
+    wall = op["dur_ms"]
     busy = covered_ms([(s["submitted_ms"], s["completed_ms"]) for s in stages],
-                      rnd["start_ms"], rnd["end_ms"])
+                      op["start_ms"], op["end_ms"])
     return {
         "wall_s": wall / 1e3,
         "idle_s": (wall - busy) / 1e3,
@@ -77,9 +88,9 @@ def fmt(v):
     return f"{v:d}" if isinstance(v, int) else f"{v:.3f}"
 
 
-def timeline(rnd, stages):
-    t0 = rnd["start_ms"]
-    print(f"round {rnd['detail'][1:]}  wall {rnd['dur_ms'] / 1e3:.3f} s")
+def timeline(what, op, stages):
+    t0 = op["start_ms"]
+    print(f"{what}  wall {op['dur_ms'] / 1e3:.3f} s")
     head = ["stage", "submit_s", "done_s", "dur_s", "tasks", "task_s", "cpu_s",
             "in_mb", "shw_mb", "shr_mb", "out_mb"]
     print("  " + " ".join(f"{h:>8}" for h in head))
@@ -89,39 +100,45 @@ def timeline(rnd, stages):
                s["cpu_s"], s["input_b"] / MB, s["shuffle_write_b"] / MB,
                s["shuffle_read_b"] / MB, s["output_b"] / MB]
         print("  " + " ".join(f"{fmt(v):>8}" for v in row))
-    t = totals(rnd, stages)
+    t = totals(op, stages)
     print("  total: " + ", ".join(f"{k} {fmt(t[k])}" for k in TOTAL_COLS))
 
 
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("traces", nargs="+", help="crawlbench *.trace.jsonl files")
-    ap.add_argument("--round", type=int, default=None, help="only this round (default: all)")
+    which = ap.add_mutually_exclusive_group()
+    which.add_argument("--round", type=int, default=None,
+                       help="only this crawl round (default: every round)")
+    which.add_argument("--query", default=None,
+                       help="this catalog query's timed passes instead of rounds")
     ap.add_argument("--run", type=int, default=0,
                     help="span run id (0 = the measured crawl; default 0)")
     ap.add_argument("--totals", action="store_true",
                     help="one totals row per file and round instead of timelines")
     a = ap.parse_args()
+    kind = "round" if a.query is None else "query"
+    width = 5 if a.query is None else len(a.query) + 2
     if a.totals:
-        print(f"{'trace':<48} {'round':>5} " + " ".join(f"{c:>8}" for c in TOTAL_COLS))
+        print(f"{'trace':<48} {kind:>{width}} " + " ".join(f"{c:>8}" for c in TOTAL_COLS))
     found = False
     for path in a.traces:
         spans, stages = load(path)
-        for rnd in rounds_of(spans, a.run, a.round):
+        for label, op in ops_of(spans, a.run, a.round, a.query):
             found = True
             mine = sorted((s for s in stages
-                           if rnd["start_ms"] <= s["submitted_ms"] <= rnd["end_ms"]),
+                           if op["start_ms"] <= s["submitted_ms"] <= op["end_ms"]),
                           key=lambda s: (s["submitted_ms"], s["stage"]))
             if a.totals:
-                t = totals(rnd, mine)
+                t = totals(op, mine)
                 name = path if len(path) <= 48 else "..." + path[-45:]
-                print(f"{name:<48} {rnd['detail'][1:]:>5} " +
+                print(f"{name:<48} {label:>{width}} " +
                       " ".join(f"{fmt(t[c]):>8}" for c in TOTAL_COLS))
             else:
                 print(f"== {path}")
-                timeline(rnd, mine)
+                timeline(f"{kind} {label}", op, mine)
     if not found:
-        sys.exit("no matching round span in " + ", ".join(a.traces))
+        sys.exit(f"no matching {kind} span in " + ", ".join(a.traces))
 
 
 if __name__ == "__main__":
