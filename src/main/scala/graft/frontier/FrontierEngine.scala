@@ -9,10 +9,9 @@ import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.util.sketch.BloomFilter
 
 import graft.canon.UrlCanon
-import graft.functions.{BloomDesc, BloomRegistry}
+import graft.functions.{BloomDesc, BloomLayers}
 import graft.functions.urlfns._
 import graft.functions.gatefns._
 import graft.model.DocSynth
@@ -26,7 +25,7 @@ import graft.snapshots.SnapshotStore
 case class EngineConfig(
     perHostBudget: Int = 4,      // max fetches per host per round (politeness)
     seenShards: Int = 32,        // seen-set bucket/bloom-shard count (≫ executors at scale)
-    bloomCapacity: Long = 1L << 22, // TOTAL bloom capacity (items) across shards
+    bloomCapacity: Long = 1L << 22, // items of the FIRST bloom layer, across all shards
     compactEvery: Int = 16)      // rewrite the full pending frontier every K rounds
 
 /** BSP URL-frontier + fetch scheduler over interleaved text+media docs.
@@ -77,33 +76,30 @@ case class EngineConfig(
   *     round, awaited only at publish (at 10^9 pending URLs the rewrite
   *     costs the round max(0, rewrite − round) extra wall-clock, not the
   *     full O(|frontier|) stall).
-  *   - the bloom filter is PER-SEEN-BUCKET (one sidecar blob per bucket of
-  *     the seen table — shard routing IS the bucket function): no false
-  *     negatives ⇒ !might_contain rows are PROVABLY new and skip the exact
-  *     join entirely; might_contain rows get the exact decision (reference
-  *     analog: negative cache, IFileLoaderImpl.java:21-29). Each round's
-  *     sidecar update rides the SAME bucket repartition as the seen-table
-  *     append (one shared shuffle): every task builds its bucket's filter
-  *     in place, merges the prior blob read inside the task, and writes
-  *     the round-r sidecar FROM THE TASK — the driver learns only the
-  *     written shard ids (O(shards) ints), so no filter bytes ever flow
-  *     through the driver (at 32k shards × 4.8 MB a driver-side merge
-  *     loop would move ~150 GB per rebuild).
-  *     Untouched shards are carried forward by REFERENCE: each snapshot's
-  *     metadata records the per-shard latest blob version (`bloom_vers`
-  *     prop), so finding them is one O(shards) metadata read — no
-  *     per-file probing. On the PROBE side the driver broadcasts only
-  *     that version manifest; executors lazily pull exactly the shard
-  *     blobs their tasks probe from shared storage into a bounded LRU
-  *     (BloomRegistry) that stays warm across rounds for unchanged
-  *     shards. Probes ride the codegen'd `BloomProbe` expression — never
-  *     a bloom-as-literal, never a ScalaUDF, and never O(total-bloom-
-  *     bytes) through the driver in either direction. When the seen
-  *     count outgrows capacity/2 the shards are
-  *     rebuilt at 4× capacity from the seen table — O(log n) rebuilds over
-  *     a crawl's lifetime — until the per-shard clamp (4M items, matching
-  *     BloomFilterAggregate's SQLConf cap) binds, at which point rebuilds
-  *     stop and the fix is more shards (warned).
+  *   - the bloom filter is PER-SEEN-BUCKET (shard routing IS the bucket
+  *     function): no false negatives ⇒ !might_contain rows are PROVABLY new
+  *     and skip the exact join entirely; might_contain rows get the exact
+  *     decision (reference analog: negative cache, IFileLoaderImpl.java:
+  *     21-29). Each shard is a stack of filter layers (`BloomLayers`, a
+  *     scalable Bloom filter): layer i holds max(16, bloomCapacity /
+  *     seenShards) · 2^i items at FPP 0.01 · 2^-i, so the probe, which ORs
+  *     a shard's layers, stays under 0.02 at any seen count, with no
+  *     capacity clamp. A round's update rides the SAME bucket repartition
+  *     as the seen-table append (one shared shuffle): each task adds its
+  *     bucket's new canons to the shard's newest layer, read inside the
+  *     task, opens the next layer whenever one fills, and writes the layers
+  *     it touched FROM THE TASK. The driver learns only those layers'
+  *     versions and the newest layer's count, and no round reads the seen
+  *     table for blooms: per-round bloom work is O(new URLs). Each
+  *     snapshot's `bloom_vers` prop lists every shard's layer versions and
+  *     newest count (O(shards × log n) ints), so untouched layers carry
+  *     forward by REFERENCE with no per-file probing. On the PROBE side the
+  *     driver broadcasts only that manifest (`BloomDesc`); executors lazily
+  *     pull exactly the layer blobs their tasks probe from shared storage
+  *     into a bounded LRU (BloomRegistry) that stays warm across rounds for
+  *     unchanged layers. Probes ride the codegen'd `BloomProbe` expression
+  *     — never a bloom-as-literal, never a ScalaUDF, and never
+  *     O(total-bloom-bytes) through the driver in either direction.
   *   - per-host skew (hot hosts with 10^7 pending URLs) is broken by
   *     Spark's partial WindowGroupLimit: before the host exchange each
   *     partition keeps at most B rows per host, so a hot host contributes
@@ -136,13 +132,6 @@ case class EngineConfig(
   *     aggregation each for host_next and lineage).
   */
 object FrontierEngine {
-  /** Target false-positive rate of every per-shard bloom sidecar. */
-  private val BloomFpp = 0.01
-  /** Per-shard bloom capacity clamp (items): the cap BloomFilterAggregate
-    * applies from its SQLConf default. Past it rebuilds stop; more shards
-    * are the fix. */
-  private val BloomClampItems = 4000000L
-
   // schemas of the snapshot tables a round reads back: a read that names its
   // schema runs no parquet schema-inference job (one 1-task job per read)
   private val FrontierSchema = StructType.fromDDL(
@@ -189,41 +178,32 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
     cfg.seenShards, store.storage)
 
   // ---- bloom plumbing ------------------------------------------------------
-  // numBits for a per-shard capacity at BloomFpp, clamped to the same
-  // caps BloomFilterAggregate applies from SQLConf defaults (4M items,
-  // 67108864 bits) so driver-side expectations and the aggregate agree.
-  private def bitsFor(capPerShard: Long): Long = {
-    val n = math.min(capPerShard, FrontierEngine.BloomClampItems)
-    val bits = math.ceil(-n * math.log(FrontierEngine.BloomFpp) /
-      (math.log(2) * math.log(2))).toLong
-    math.min(math.max(bits, 64L), 67108864L)
-  }
+  /** Items of a shard's first bloom layer (see `BloomLayers`). */
+  private def layerBase: Long = math.max(16L, cfg.bloomCapacity / cfg.seenShards)
 
-  /** Per-shard latest committed blob version at snapshot v, from the
-    * snapshot's own metadata (the `bloom_vers` prop written by `publish`).
-    * Shards untouched by recent rounds are carried forward by REFERENCE —
-    * a round only writes the sidecars it changed and records the rest's
-    * prior versions in the manifest. Replaces the round-3 walk-back, which
-    * stat'ed one blob file per (shard, version) from the driver —
-    * O(seenShards × rounds-since-touch) metadata calls per round, the
-    * exact per-round serial cost the engine design bans. Also validates
-    * the shard count against the config: resuming a store with a changed
-    * seenShards must fail loudly, not silently mis-route probes. */
-  private def blobVersions(v: Int): Array[Int] = {
+  /** Each shard's bloom layers at snapshot v, from the snapshot's own
+    * metadata (the `bloom_vers` prop written by `publish`). Layers untouched
+    * by recent rounds are carried forward by REFERENCE — a round only
+    * writes the layers it changed and records the rest's prior versions in
+    * the manifest, so finding them is one O(shards × layers) metadata read,
+    * never a stat of blob files from the driver. Also validates the shard
+    * count against the config: resuming a store with a changed seenShards
+    * must fail loudly, not silently mis-route probes. */
+  private def bloomLayers(v: Int): Array[BloomLayers] = {
     val s = store.readProps(v).getOrElse("bloom_vers",
       throw new IllegalStateException(
         s"snapshot v$v under ${store.root} carries no bloom_vers manifest"))
-    val vers = s.split(",").map(_.toInt)
-    require(vers.length == cfg.seenShards,
-      s"store at ${store.root} has ${vers.length} bloom shards but the " +
+    val shards = s.split(",").map(BloomLayers.parse(_, layerBase))
+    require(shards.length == cfg.seenShards,
+      s"store at ${store.root} has ${shards.length} bloom shards but the " +
       s"engine is configured with seenShards=${cfg.seenShards} — changing " +
       "the shard count on an existing store breaks bucket-aligned probing; " +
       "rewrite the seen table and sidecars to grow shards")
-    vers
+    shards
   }
 
-  private def bloomVersProp(vers: Array[Int]): Map[String, String] =
-    Map("bloom_vers" -> vers.mkString(","))
+  private def bloomVersProp(shards: Array[BloomLayers]): Map[String, String] =
+    Map("bloom_vers" -> shards.map(BloomLayers.show).mkString(","))
 
   /** Write width FOLLOWS DATA VOLUME (the exact counts are already known
     * from committed metrics or wave 1 — no extra job): a 10^8-row write
@@ -254,38 +234,27 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
     * above the plan's own partition count changes nothing. */
   private def cacheWidth: Int = spark.sparkContext.defaultParallelism
 
-  /** Build + write the per-bucket bloom sidecars from a frame ALREADY
+  /** Grow the per-bucket bloom layers by the canons of a frame ALREADY
     * hash-partitioned by the seen-table bucket function (partition id ==
-    * bucket id == bloom shard id): each task builds its bucket's delta
-    * filter in place — NO shuffle, NO aggregate — merges it with the prior
-    * blob (read inside the task from shared storage) and writes the
-    * round-r sidecar FROM THE TASK. The driver receives only the written
-    * shard ids (O(shards) ints); no filter bytes ever cross the driver.
-    * `priorVer(k) = -1` means build fresh (init / rebuild). In the delta
-    * path the input is the SAME cached repartition the seen-table append
-    * consumes, so the bloom update costs no shuffle of its own. */
-  private def writeBucketBlooms(byBucket: DataFrame, capPerShard: Long, r: Int,
-                                priorVer: Array[Int]): Set[Int] = {
-    val st = store
-    val bits = bitsFor(capPerShard)
-    val cap = math.min(capPerShard, FrontierEngine.BloomClampItems)
-    byBucket.select(col("canon")).as[String]
+    * bucket id == bloom shard id), in place — NO shuffle, NO aggregate: each
+    * task adds its bucket's canons to the shard's stack (`BloomLayers.grow`:
+    * the newest layer is read inside the task, and as many layers are
+    * opened as the canons need) and writes the layers it changed FROM THE
+    * TASK. The driver receives only each touched shard's layer versions and
+    * newest count; no filter bytes ever cross the driver. Returns every
+    * shard's layers, untouched ones as in `prior`. The canons must be new
+    * to the seen set, so the counts stay exact. */
+  private def writeBucketBlooms(byBucket: DataFrame, r: Int,
+                                prior: Array[BloomLayers]): Array[BloomLayers] = {
+    val (st, base) = (store, layerBase)
+    val grown = byBucket.select(col("canon")).as[String]
       .rdd.mapPartitionsWithIndex { case (pid, it) =>
         if (!it.hasNext) Iterator.empty
-        else {
-          val name = BloomRegistry.blobName(pid)
-          val pv = priorVer(pid)
-          val bf =
-            if (pv < 0) BloomFilter.create(cap, bits)
-            else BloomFilter.readFrom(st.readBlob(pv, name))
-          it.foreach(c => bf.putLong(UrlCanon.urlKey64(c)))
-          val bos = new java.io.ByteArrayOutputStream()
-          bf.writeTo(bos)
-          st.writeBlob(r, name, bos.toByteArray)
-          Iterator.single(pid)
-        }
+        else Iterator.single(
+          pid -> BloomLayers.grow(st, r, base, pid, prior(pid), it.map(UrlCanon.urlKey64)))
       }
-      .collect().toSet
+      .collect().toMap
+    Array.tabulate(prior.length)(k => grown.getOrElse(k, prior(k)))
   }
 
   /** One-time projection of the interleaved-doc corpus to the slim link
@@ -408,7 +377,6 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
     }.toDF("canon", "host", "depth", "seq", "discovered_round")
     val hostNext = canonSeeds.map(UrlCanon.hostOf).distinct.toDF("host")
       .withColumn("next_time", lit(0L))
-    val capPerShard = math.max(16L, cfg.bloomCapacity / cfg.seenShards)
     // one concurrent wave, like the per-round commit: table writes, the
     // seed seen-append and the seed blooms are independent jobs — running
     // them serially cost ~8 s of fixed init latency at every level
@@ -428,18 +396,15 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
     val seedMat = Future(seedBuckets.count())
     val seenFut = scope.track(
       seedMat.map(_ => seen.append(seedBuckets, 0, prePartitioned = true)))
-    val bloomFut = scope.track(seedMat.map(_ => writeBucketBlooms(seedBuckets,
-      capPerShard, 0, Array.fill(cfg.seenShards)(-1))))
+    val bloomFut = scope.track(seedMat.map(_ => writeBucketBlooms(seedBuckets, 0,
+      Array.fill(cfg.seenShards)(BloomLayers.empty))))
     val manifest = Await.result(manifestFut, Duration.Inf)
     Await.result(seenFut, Duration.Inf)
-    val written = Await.result(bloomFut, Duration.Inf)
-    val vers0 = Array.tabulate(cfg.seenShards)(k => if (written(k)) 0 else -1)
     store.publish(0, manifest,
       Map("seq_base" -> canonSeeds.size.toLong,
           "seen_total" -> canonSeeds.size.toLong,
-          "bloom_capacity" -> capPerShard,
           "frontier_base" -> 0L),
-      bloomVersProp(vers0))
+      bloomVersProp(Await.result(bloomFut, Duration.Inf)))
   }
 
   private def emptyLineage: DataFrame =
@@ -529,13 +494,13 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
     val compactFut = if (isCompaction) Some(compact(scope, frontier, r, pendingCount)) else None
     val hostNext = store.read(spark, "host_next", Some(r - 1),
       Some(FrontierEngine.HostNextSchema))
-    val priorVer = blobVersions(r - 1)
-    // one TINY broadcast per round — the per-shard blob-version manifest,
-    // O(shards) ints. The filters load lazily executor-side from shared
-    // storage into the bounded BloomRegistry cache; untouched shards keep
-    // their version, so their filters stay warm across rounds. No filter
-    // bytes ever cross the driver (see BloomRegistry scaladoc).
-    val descBc = scope.keep(spark.sparkContext.broadcast(BloomDesc(store, priorVer)))
+    val priorBlooms = bloomLayers(r - 1)
+    // one TINY broadcast per round — the per-shard layer-version manifest,
+    // O(shards × layers) ints. The filters load lazily executor-side from
+    // shared storage into the bounded BloomRegistry cache; untouched layers
+    // keep their version, so their filters stay warm across rounds. No
+    // filter bytes ever cross the driver (see BloomRegistry scaladoc).
+    val descBc = scope.keep(spark.sparkContext.broadcast(BloomDesc(store, priorBlooms)))
 
     // ---- wave 1: the stages up to the round's ONE metrics action ----------
     val scheduled = schedule(scope, frontier, hostNext)
@@ -560,10 +525,7 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
     // == bloom shard id), so the bloom update costs no shuffle of its own
     val freshBuckets = fresh.select($"canon")
       .repartition(cfg.seenShards, $"canon").transform(scope.cache("freshBuckets"))
-    val capPerShard = prior.getOrElse("bloom_capacity",
-      math.max(16L, cfg.bloomCapacity / cfg.seenShards))
-    val bloomFut = updateBlooms(scope, r, fresh, freshBuckets, nNew + nBlocked,
-      newSeenTotal, capPerShard, priorVer)
+    val bloomFut = updateBlooms(scope, r, freshBuckets, nNew + nBlocked, priorBlooms)
     commit(scope, r, freshBuckets, bloomFut, compactFut,
       Map("frontier" -> newEntries,
           "host_next" -> advanceClocks(scheduled, hostNext),
@@ -795,47 +757,16 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
       .toDF("canon", "host", "depth", "seq", "discovered_round")
   }
 
-  /** updateBlooms — the per-shard sidecars for snapshot r, started in the
-    * background and awaited by `commit`. Returns the capacity and per-shard
-    * blob versions to publish: a delta advances only the touched shards to
-    * r, a rebuild advances every shard — the manifest is what the NEXT
-    * round's probe reads. When the seen count outgrows capacity/2 the
-    * shards are rebuilt at 4× capacity from the seen table (O(log n)
-    * rebuilds per crawl) until the per-shard clamp binds; from then on a
-    * rebuild would rescan the seen set for identically sized filters, so
-    * deltas keep merging and the warning says to add shards. */
-  private def updateBlooms(scope: RoundScope, r: Int, fresh: DataFrame,
-                           freshBuckets: DataFrame, nFresh: Long, newSeenTotal: Long,
-                           capPerShard: Long, priorVer: Array[Int]): Future[(Long, Array[Int])] =
+  /** updateBlooms — the per-shard bloom layers for snapshot r, started in
+    * the background and awaited by `commit`: the round's new canons (the
+    * bucketed cache the seen append also writes) grow each shard's stack,
+    * opening layers as they fill (`writeBucketBlooms`). It reads no seen
+    * table, so its work is O(new URLs) at any seen count. Returns every
+    * shard's layers to publish — the manifest the NEXT round's probe reads. */
+  private def updateBlooms(scope: RoundScope, r: Int, freshBuckets: DataFrame,
+                           nFresh: Long, prior: Array[BloomLayers]): Future[Array[BloomLayers]] =
     scope.track(Future(timed("bloom") {
-      val over = newSeenTotal > capPerShard * cfg.seenShards / 2
-      if (nFresh == 0) (capPerShard, priorVer)
-      else if (over && capPerShard < FrontierEngine.BloomClampItems) {
-        var cap = capPerShard
-        while (newSeenTotal > cap * cfg.seenShards / 2 && cap < FrontierEngine.BloomClampItems)
-          cap *= 4
-        // the bucketed scan is already partition == bucket; the union with
-        // this round's delta needs one explicit repartition
-        val full = seenSet(Some(r - 1)).unionByName(fresh.select($"canon"))
-          .repartition(cfg.seenShards, $"canon")
-        val written = writeBucketBlooms(full, cap, r, Array.fill(cfg.seenShards)(-1))
-        // shards the rebuild didn't touch must still advance to the new
-        // sizing, or later delta merges see mismatched bit counts
-        (0 until cfg.seenShards).filterNot(written).foreach { k =>
-          val bos = new java.io.ByteArrayOutputStream()
-          BloomFilter.create(math.min(cap, FrontierEngine.BloomClampItems), bitsFor(cap))
-            .writeTo(bos)
-          store.writeBlob(r, BloomRegistry.blobName(k), bos.toByteArray)
-        }
-        (cap, Array.fill(cfg.seenShards)(r))
-      } else {
-        if (over)
-          System.err.println(s"[frontier] WARN seen_total=$newSeenTotal exceeds " +
-            s"clamped bloom capacity (${cfg.seenShards} shards x $capPerShard); " +
-            "fpp degrades — raise seenShards")
-        val written = writeBucketBlooms(freshBuckets, capPerShard, r, priorVer)
-        (capPerShard, Array.tabulate(cfg.seenShards)(k => if (written(k)) r else priorVer(k)))
-      }
+      if (nFresh == 0) prior else writeBucketBlooms(freshBuckets, r, prior)
     })(ExecutionContext.global))
 
   /** The round's crawl-log rows: one per scheduled URL, 200 or 404. */
@@ -895,19 +826,19 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
     * relation racing the link-graph build, where the one-time
     * materialization measured 19 s faster at local[8]. */
   private def commit(scope: RoundScope, r: Int, freshBuckets: DataFrame,
-                     bloomFut: Future[(Long, Array[Int])],
+                     bloomFut: Future[Array[BloomLayers]],
                      compactFut: Option[Future[Map[String, String]]],
                      tables: Map[String, DataFrame], metrics: Map[String, Long]): Unit = {
     val seenFut = scope.track(Future {
       timed("seen")(seen.append(freshBuckets, r, prePartitioned = true))
     }(ExecutionContext.global))
     val manifest = timed("commit")(store.writeTables(r, tables))
-    val (cap, vers) = timed("await-bloom")(Await.result(bloomFut, Duration.Inf))
+    val blooms = timed("await-bloom")(Await.result(bloomFut, Duration.Inf))
     timed("await-seen")(Await.result(seenFut, Duration.Inf))
     val compactManifest = compactFut.map(f =>
       timed("await-compact")(Await.result(f, Duration.Inf))).getOrElse(Map.empty)
-    timed("publish")(store.publish(r, manifest ++ compactManifest,
-      metrics + ("bloom_capacity" -> cap), bloomVersProp(vers)))
+    timed("publish")(store.publish(r, manifest ++ compactManifest, metrics,
+      bloomVersProp(blooms)))
   }
 
   /** Run until the frontier drains or maxRounds — resuming from the last

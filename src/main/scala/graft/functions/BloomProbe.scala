@@ -8,7 +8,8 @@ import org.apache.spark.sql.types.{BooleanType, DataType}
 import org.apache.spark.util.sketch.BloomFilter
 
 /** `bloom_probe(shard, key)` over a BROADCAST `BloomDesc` — the per-shard
-  * blob-version manifest, O(shards) ints. The filters themselves are
+  * layer-version manifest, O(shards × layers) ints; a key probes true if
+  * any layer of its shard might hold it. The filters themselves are
   * loaded lazily, executor-side, from shared storage into the bounded
   * [[BloomRegistry]] cache: no filter bytes ever cross the driver (the
   * round-3 design broadcast every deserialized shard filter from the
@@ -32,15 +33,15 @@ import org.apache.spark.util.sketch.BloomFilter
   * generated code resolves `broadcast.value` ONCE per task (mutable
   * codegen state) — `.value` per row costs ~3 µs (volatile + soft-ref
   * deref through TorrentBroadcast), measured 50× the probe itself.
-  * Scales to arbitrarily many shards: probe cost is O(1) per row, executor
-  * memory is bounded by the registry's LRU.
+  * Scales to arbitrarily many shards: probe cost is O(layers) per row,
+  * executor memory is bounded by the registry's LRU.
   */
 case class BloomProbe(left: Expression, right: Expression,
                       desc: Broadcast[BloomDesc]) extends BinaryExpression {
   override def dataType: DataType = BooleanType
   @transient private lazy val d: BloomDesc = desc.value
-  @transient private lazy val arr: Array[BloomFilter] =
-    new Array[BloomFilter](d.vers.length)
+  @transient private lazy val arr: Array[Array[BloomFilter]] =
+    new Array[Array[BloomFilter]](d.shards.length)
   override def nullSafeEval(s: Any, k: Any): Any =
     BloomRegistry.probe(arr, d, s.asInstanceOf[Int], k.asInstanceOf[Long])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
@@ -49,10 +50,10 @@ case class BloomProbe(left: Expression, right: Expression,
     val descCls = "graft.functions.BloomDesc"
     val dRef = ctx.addMutableState(descCls, "bloomDesc",
       v => s"$v = ($descCls) $bcRef.value();")
-    val arrCls = "org.apache.spark.util.sketch.BloomFilter[]"
+    val arrCls = "org.apache.spark.util.sketch.BloomFilter[][]"
     val arr = ctx.addMutableState(arrCls, "bloomArr",
       v => s"$v = new org.apache.spark.util.sketch.BloomFilter[" +
-        s"(($descCls) $bcRef.value()).vers().length];")
+        s"(($descCls) $bcRef.value()).shards().length][];")
     defineCodeGen(ctx, ev, (s, k) =>
       s"graft.functions.BloomRegistry.probe($arr, $dRef, $s, $k)")
   }

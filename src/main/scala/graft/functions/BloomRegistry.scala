@@ -4,16 +4,81 @@ import org.apache.spark.util.sketch.BloomFilter
 
 import graft.snapshots.SnapshotStore
 
-/** Tiny per-round descriptor of the seen set's bloom sidecars: the store
-  * (paths only, Serializable) plus each shard's latest committed blob
-  * version (-1 = that shard has no filter yet). O(shards) ints — THIS is
-  * what a round broadcasts; the filter bytes themselves never leave shared
-  * storage except into each executor's bounded cache.
+/** One bloom shard's stack of filter layers, a scalable Bloom filter
+  * (Almeida et al., IPL 2007): each layer's blob version, oldest first, and
+  * the item count of the newest layer. Layer i holds `base · 2^i` items at
+  * FPP `0.01 · 2^-i`, so a probe that ORs the layers stays under a 0.02
+  * false-positive rate however many layers the shard grows, and a shard
+  * grows by adding a layer, never by rebuilding from the seen set. A layer
+  * whose count has reached its capacity is sealed and never written again.
   */
-case class BloomDesc(store: SnapshotStore, vers: Array[Int])
+case class BloomLayers(vers: Array[Int], fill: Long)
+
+object BloomLayers {
+  val empty: BloomLayers = BloomLayers(Array.empty, 0L)
+
+  def capacity(base: Long, layer: Int): Long = base << layer
+  def fpp(layer: Int): Double = 0.01 / (1L << layer)
+
+  /** The blob of one layer of one shard; layer 0 keeps the name the
+    * single-filter shards of older stores carry. */
+  def blobName(shard: Int, layer: Int): String =
+    if (layer == 0) s"seen.bloom.$shard" else s"seen.bloom.$shard.$layer"
+
+  /** One shard's entry of the `bloom_vers` manifest: `v0.v1…:fill`, or -1
+    * for a shard with no layer yet. A bare version, the flat form of stores
+    * written before layers, reads as one sealed layer. */
+  def parse(entry: String, base: Long): BloomLayers = entry.split(':') match {
+    case Array(vers, fill) => BloomLayers(vers.split('.').map(_.toInt), fill.toLong)
+    case Array(v) => if (v.toInt < 0) empty else BloomLayers(Array(v.toInt), capacity(base, 0))
+  }
+  def show(s: BloomLayers): String =
+    if (s.vers.isEmpty) "-1" else s.vers.mkString(".") + ":" + s.fill
+
+  /** Adds `keys`, new to the shard, to its stack as of round `r`, inside the
+    * task that holds them: the newest layer is read back unless sealed, and
+    * each time a layer reaches its capacity it is written and the next one
+    * opened. Only the layers this round wrote take version `r`; sealed ones
+    * keep theirs. The keys must be distinct and unseen, which keeps `fill`
+    * exact. */
+  def grow(store: SnapshotStore, r: Int, base: Long, shard: Int,
+           prior: BloomLayers, keys: Iterator[Long]): BloomLayers = {
+    var layer = prior.vers.length - 1
+    var fill = prior.fill
+    val reopen = layer >= 0 && fill < capacity(base, layer)
+    val kept = if (reopen) layer else layer + 1
+    var bf = if (!reopen) null
+      else BloomFilter.readFrom(store.readBlob(prior.vers(layer), blobName(shard, layer)))
+    def write(): Unit = {
+      val bos = new java.io.ByteArrayOutputStream()
+      bf.writeTo(bos)
+      store.writeBlob(r, blobName(shard, layer), bos.toByteArray)
+    }
+    keys.foreach { k =>
+      if (bf == null || fill >= capacity(base, layer)) {
+        if (bf != null) write()
+        layer += 1
+        fill = 0
+        bf = BloomFilter.create(capacity(base, layer), fpp(layer))
+      }
+      bf.putLong(k)
+      fill += 1
+    }
+    if (bf != null) write()
+    BloomLayers(prior.vers.take(kept) ++ Array.fill(layer + 1 - kept)(r), fill)
+  }
+}
+
+/** Tiny per-round descriptor of the seen set's bloom sidecars: the store
+  * (paths only, Serializable) plus each shard's layer versions. O(shards ×
+  * layers) ints — THIS is what a round broadcasts; the filter bytes
+  * themselves never leave shared storage except into each executor's
+  * bounded cache.
+  */
+case class BloomDesc(store: SnapshotStore, shards: Array[BloomLayers])
 
 /** Executor-wide, bounded, lazily-loaded cache of bloom sidecar blobs,
-  * keyed by (store root, shard, version).
+  * keyed by (store root, shard, layer, version).
   *
   * Why this exists: the round-3 engine read, deserialized and broadcast
   * EVERY shard's filter through the driver each round — O(total bloom
@@ -22,67 +87,62 @@ case class BloomDesc(store: SnapshotStore, vers: Array[Int])
   * ships only a `BloomDesc` and each executor pulls, once, exactly the
   * shard blobs its tasks actually probe, straight from shared storage.
   * Because sidecar blobs are immutable and the key carries the version, a
-  * cache hit is always current — and shards untouched by recent rounds
+  * cache hit is always current — and layers untouched by recent rounds
   * keep their version, so their filters stay warm ACROSS rounds with no
   * re-read at all (the driver re-broadcast them every round before).
   *
-  * The cache is an access-ordered LRU bounded by
-  * SPARK_GRAFT_BLOOM_CACHE_ENTRIES (default 256): executor memory stays
-  * bounded no matter how many shards exist. This is the engine's analog of
-  * the reference's bounded executor-local ifile caches (soft-reference /
-  * hard-ring: IFileCacheSoftApacheImpl.java:36-73, IFileCacheImpl.java:
-  * 44-55) — same role, a hot working set of immutable lookup structures
-  * pinned near the compute.
+  * The cache is an access-ordered LRU of at most 256 layers: executor
+  * memory stays bounded no matter how many shards exist. This is the
+  * engine's analog of the reference's bounded executor-local ifile caches
+  * (soft-reference / hard-ring: IFileCacheSoftApacheImpl.java:36-73,
+  * IFileCacheImpl.java:44-55) — same role, a hot working set of immutable
+  * lookup structures pinned near the compute.
   */
 object BloomRegistry {
-  private val maxEntries: Int =
-    sys.env.getOrElse("SPARK_GRAFT_BLOOM_CACHE_ENTRIES", "256").toInt
+  private val MaxEntries = 256
 
   private val cache =
     new java.util.LinkedHashMap[String, BloomFilter](64, 0.75f, true) {
       override def removeEldestEntry(
           e: java.util.Map.Entry[String, BloomFilter]): Boolean =
-        size() > maxEntries
+        size() > MaxEntries
     }
-
-  /** The sidecar blob of one bloom shard: the engine writes it, `load`
-    * reads it, under this one name. */
-  def blobName(shard: Int): String = s"seen.bloom.$shard"
 
   private[graft] def cachedCount: Int = cache.synchronized(cache.size())
   private[graft] def clear(): Unit = cache.synchronized(cache.clear())
 
-  /** The shard's filter at its pinned version, loading + caching on first
-    * touch by this JVM; null iff the shard has no committed filter. */
-  def load(desc: BloomDesc, shard: Int): BloomFilter = {
-    val v = desc.vers(shard)
-    if (v < 0) return null
-    val key = s"${desc.store.root}#$shard#$v"
+  /** One layer of the shard at its pinned version, loading + caching on
+    * first touch by this JVM. */
+  def load(desc: BloomDesc, shard: Int, layer: Int): BloomFilter = {
+    val v = desc.shards(shard).vers(layer)
+    val key = s"${desc.store.root}#$shard#$layer#$v"
     cache.synchronized {
       val hit = cache.get(key)
       if (hit != null) return hit
     }
     // storage read OUTSIDE the lock — a slow shared-storage fetch must not
     // serialize every other task's cache hits behind it
-    val bf = BloomFilter.readFrom(desc.store.readBlob(v, blobName(shard)))
+    val bf = BloomFilter.readFrom(desc.store.readBlob(v, BloomLayers.blobName(shard, layer)))
     cache.synchronized {
       val prior = cache.get(key) // another task may have won the race
       if (prior != null) prior else { cache.put(key, bf); bf }
     }
   }
 
-  /** Per-row probe through a TASK-LOCAL lazily-filled array: the registry
-    * lock is touched once per (task, shard); the steady-state row cost is
-    * an array index + mightContainLong. `false` for a filter-less shard is
+  /** Per-row probe through a TASK-LOCAL lazily-filled array of each shard's
+    * layers: the registry lock is touched once per (task, layer); the
+    * steady-state row cost is an array index + one mightContainLong per
+    * layer, newest (largest) first. `false` for a shard without layers is
     * EXACT (it contains nothing), so "provably new" stays sound. */
-  def probe(arr: Array[BloomFilter], desc: BloomDesc,
+  def probe(arr: Array[Array[BloomFilter]], desc: BloomDesc,
             shard: Int, key: Long): Boolean = {
-    var bf = arr(shard)
-    if (bf == null) {
-      if (desc.vers(shard) < 0) return false
-      bf = load(desc, shard)
-      arr(shard) = bf
+    var layers = arr(shard)
+    if (layers == null) {
+      layers = Array.tabulate(desc.shards(shard).vers.length)(load(desc, shard, _))
+      arr(shard) = layers
     }
-    bf.mightContainLong(key)
+    var i = layers.length - 1
+    while (i >= 0 && !layers(i).mightContainLong(key)) i -= 1
+    i >= 0
   }
 }

@@ -3,87 +3,112 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
 import graft.canon.UrlCanon
-import graft.functions.{BloomDesc, BloomRegistry}
+import graft.functions.{BloomDesc, BloomLayers, BloomRegistry}
 import graft.functions.bloomfns.bloom_probe
 import graft.snapshots.SnapshotStore
 
 /** The bucket-aligned bloom contract the frontier engine depends on:
-  * partition-wise-built filters (partition id == seen-table bucket id)
-  * must be probe-compatible through BloomProbe (no false negatives),
-  * delta-insertable into a prior blob, and bucket routing must agree
-  * between the build side (HashPartitioning/bucketBy = pmod(murmur3, n))
-  * and the probe side (pmod(hash(canon), n)) and executor-side Scala
-  * (UrlCanon.bucketOf). The probe path is the PRODUCTION one: sidecar
-  * blobs in a SnapshotStore, a broadcast version manifest (BloomDesc) and
-  * lazily-loaded executor-cached filters (BloomRegistry) — no filter
-  * bytes through the driver. */
+  * partition-wise-grown layer stacks (partition id == seen-table bucket id)
+  * must be probe-compatible through BloomProbe (no false negatives, however
+  * many layers a shard opens), growable across rounds, and bucket routing
+  * must agree between the build side (HashPartitioning/bucketBy =
+  * pmod(murmur3, n)) and the probe side (pmod(hash(canon), n)) and
+  * executor-side Scala (UrlCanon.bucketOf). The probe path is the
+  * PRODUCTION one: sidecar blobs in a SnapshotStore, a broadcast version
+  * manifest (BloomDesc) and lazily-loaded executor-cached filters
+  * (BloomRegistry) — no filter bytes through the driver. */
 class BloomSpec extends SparkSuite {
   import spark.implicits._
 
   private val nShards = 8
-  private val cap = 4096L
-  private val bits = 1L << 16
 
-  /** Production build shape (FrontierEngine.writeBucketBlooms without the
-    * store): repartition by canon into buckets, build one filter per
-    * partition in place. */
-  private def buildShards(urls: Seq[String]): Array[BloomFilter] = {
-    val (c, b) = (cap, bits) // locals: the closure must not drag the suite in
-    val rows = urls.toDF("canon")
+  private def freshStore() =
+    new SnapshotStore(java.nio.file.Files.createTempDirectory("bloom-store").toString)
+
+  /** Production build shape (FrontierEngine.writeBucketBlooms): repartition
+    * by canon into buckets and grow each bucket's layers inside its task,
+    * as round `r` of `store`. Returns the descriptor a round would
+    * broadcast. */
+  private def storeShards(urls: Seq[String], base: Long = 4096L,
+                          store: SnapshotStore = freshStore(), r: Int = 0,
+                          prior: Array[BloomLayers] = Array.fill(nShards)(BloomLayers.empty)
+                         ): BloomDesc = {
+    val (st, b, p) = (store, base, prior) // locals: the closure must not drag the suite in
+    val grown = urls.toDF("canon")
       .repartition(nShards, $"canon")
       .as[String]
       .rdd.mapPartitionsWithIndex { case (pid, it) =>
         if (!it.hasNext) Iterator.empty
-        else {
-          val bf = BloomFilter.create(c, b)
-          it.foreach(c => bf.putLong(UrlCanon.urlKey64(c)))
-          val bos = new java.io.ByteArrayOutputStream()
-          bf.writeTo(bos)
-          Iterator.single(pid -> bos.toByteArray)
-        }
-      }.collect()
-    val arr = Array.fill[BloomFilter](nShards)(null)
-    rows.foreach { case (k, b) => arr(k) = BloomFilter.readFrom(b) }
-    arr
+        else Iterator.single(
+          pid -> BloomLayers.grow(st, r, b, pid, p(pid), it.map(UrlCanon.urlKey64)))
+      }.collect().toMap
+    BloomDesc(store, Array.tabulate(nShards)(k => grown.getOrElse(k, prior(k))))
   }
 
-  /** Persist built shards as v0 sidecar blobs of a fresh store and return
-    * the descriptor a round would broadcast. */
-  private def storeShards(urls: Seq[String]): BloomDesc = {
-    val root = java.nio.file.Files.createTempDirectory("bloom-store").toString
-    val store = new SnapshotStore(root)
-    val shards = buildShards(urls)
-    val vers = shards.zipWithIndex.map { case (bf, k) =>
-      if (bf == null) -1
-      else {
-        val bos = new java.io.ByteArrayOutputStream()
-        bf.writeTo(bos)
-        store.writeBlob(0, s"seen.bloom.$k", bos.toByteArray)
-        0
-      }
-    }
-    BloomDesc(store, vers)
+  /** How many of `urls` probe true through `bloom_probe` over `desc`. */
+  private def probedTrue(desc: BloomDesc, urls: Seq[String]): Long = {
+    val bc = spark.sparkContext.broadcast(desc)
+    try urls.toDF("canon")
+      .filter(bloom_probe(pmod(hash($"canon"), lit(nShards)), xxhash64($"canon"), bc))
+      .count()
+    finally bc.destroy()
   }
 
   test("no false negatives: every inserted key probes true through BloomProbe") {
     val urls = (0 until 5000).map(i => s"http://host-$i.example.org/p/$i")
-    val desc = spark.sparkContext.broadcast(storeShards(urls))
-    val misses = urls.toDF("canon")
-      .filter(!bloom_probe(pmod(hash($"canon"), lit(nShards)), xxhash64($"canon"), desc))
-      .count()
-    assert(misses === 0, "bloom false negative — dedup fast path is broken")
-    desc.destroy()
+    assert(probedTrue(storeShards(urls), urls) === urls.size,
+      "bloom false negative — dedup fast path is broken")
   }
 
   test("probe selectivity: most absent keys probe false (fpp sane)") {
     val urls = (0 until 5000).map(i => s"http://host-$i.example.org/p/$i")
-    val desc = spark.sparkContext.broadcast(storeShards(urls))
     val absent = (0 until 5000).map(i => s"http://other-$i.example.net/q/$i")
-    val falsePos = absent.toDF("canon")
-      .filter(bloom_probe(pmod(hash($"canon"), lit(nShards)), xxhash64($"canon"), desc))
-      .count()
+    val falsePos = probedTrue(storeShards(urls), absent)
     assert(falsePos < 500, s"fpp ${falsePos / 5000.0} — filter useless")
-    desc.destroy()
+  }
+
+  test("layers opened inside one task at a tiny capacity: every inserted key probes true") {
+    // 16 items in layer 0, then 32, 64, 128: ~250 canons a shard open at
+    // least four layers, all in the one task that holds the shard's canons
+    val base = 16L
+    val urls = (0 until 2000).map(i => s"http://tiny-$i.example.org/p/$i")
+    val desc = storeShards(urls, base)
+    desc.shards.zipWithIndex.foreach { case (s, k) =>
+      assert(s.vers.length >= 4 && s.vers.forall(_ == 0),
+        s"shard $k: layers ${BloomLayers.show(s)}")
+      // sealed layers hold exactly their capacity, the newest its fill
+      val held = (0 until s.vers.length - 1).map(BloomLayers.capacity(base, _)).sum + s.fill
+      assert(held === urls.count(UrlCanon.bucketOf(_, nShards) == k), s"shard $k count")
+    }
+    assert(probedTrue(desc, urls) === urls.size, "a layered shard lost a key")
+  }
+
+  test("layered false-positive rate over 10^5 never-inserted keys is at most 0.025") {
+    // ~6 full layers a shard (64 · 63 items): the layers' FPPs 0.01, 0.005,
+    // … sum to under 0.02, so the measured rate must stay near that
+    val urls = (0 until nShards * 64 * 63).map(i => s"http://in-$i.example.org/p/$i")
+    val desc = storeShards(urls, base = 64L)
+    assert(desc.shards.forall(_.vers.length >= 5), desc.shards.map(BloomLayers.show).mkString(" "))
+    val absent = (0 until 100000).map(i => s"http://out-$i.example.net/q/$i")
+    val fpr = probedTrue(desc, absent) / absent.size.toDouble
+    info(f"measured FPR $fpr%.4f")
+    assert(fpr <= 0.025, s"measured FPR $fpr exceeds the layered bound")
+  }
+
+  test("bloom_vers entries: a bare version reads as one sealed layer; layered entries round-trip") {
+    val flat = BloomLayers.parse("7", 16L)
+    assert(flat.vers.toSeq === Seq(7) && flat.fill === BloomLayers.capacity(16L, 0))
+    assert(BloomLayers.parse("-1", 16L).vers.isEmpty)
+    val layered = BloomLayers(Array(0, 3, 5), 42L)
+    val back = BloomLayers.parse(BloomLayers.show(layered), 16L)
+    assert(back.vers.toSeq === layered.vers.toSeq && back.fill === 42L)
+    assert(BloomLayers.show(BloomLayers.empty) === "-1")
+    // the next key after a sealed flat layer opens layer 1
+    val store = freshStore()
+    val grown = BloomLayers.grow(store, 9, 16L, 0, flat, Iterator(1L))
+    assert(grown.vers.toSeq === Seq(7, 9) && grown.fill === 1L)
+    assert(store.blobExists(9, BloomLayers.blobName(0, 1)) &&
+      !store.blobExists(9, BloomLayers.blobName(0, 0)), "a sealed layer was rewritten")
   }
 
   test("bucket routing agrees: writer partition == probe shard == bucketOf") {
@@ -102,72 +127,68 @@ class BloomSpec extends SparkSuite {
   }
 
   test("delta insert into a prior blob: old and new keys both probe true") {
-    // the engine's delta path: read prior blob, putLong the round's new
-    // keys into it, re-serialize — everything inserted in any round probes
+    // the engine's per-round path: round 1 reads each shard's newest layer
+    // back and grows the stack from there — past a layer boundary here —
+    // so everything inserted in any round probes true
     val old = (0 until 1000).map(i => s"http://a.example.org/$i")
     val fresh = (0 until 1000).map(i => s"http://b.example.net/$i")
-    val prior = buildShards(old)
-    val merged = prior.zipWithIndex.map { case (bf0, k) =>
-      val bf = if (bf0 == null) BloomFilter.create(cap, bits) else {
-        // round-trip through bytes like the sidecar files do
-        val bos = new java.io.ByteArrayOutputStream(); bf0.writeTo(bos)
-        BloomFilter.readFrom(bos.toByteArray)
-      }
-      fresh.filter(c => UrlCanon.bucketOf(c, nShards) == k)
-        .foreach(c => bf.putLong(UrlCanon.urlKey64(c)))
-      bf
-    }
-    (old ++ fresh).foreach { c =>
-      val k = UrlCanon.bucketOf(c, nShards)
-      assert(merged(k).mightContainLong(UrlCanon.urlKey64(c)), s"lost $c")
-    }
+    val round0 = storeShards(old, base = 64L)
+    val round1 = storeShards(fresh, base = 64L, store = round0.store, r = 1,
+      prior = round0.shards)
+    assert(round1.shards.exists(s => s.vers.contains(0) && s.vers.contains(1)),
+      "no shard kept a round-0 layer and grew in round 1")
+    assert(probedTrue(round1, old ++ fresh) === old.size + fresh.size, "lost a key")
   }
 
   test("executor-written sidecars: manifest-addressed blobs cover the whole seen set") {
-    // end-to-end over the engine: blobs are written FROM the building
-    // tasks (never collected to the driver), untouched shards are carried
-    // forward by reference, and each snapshot's bloom_vers manifest must
-    // point at exactly the latest committed blob per shard (no filesystem
-    // walk-back anywhere) with zero false negatives over the seen set
+    // end-to-end over the engine at 16 items a first layer: layers are
+    // written FROM the building tasks (never collected to the driver),
+    // untouched layers are carried forward by reference, and each
+    // snapshot's bloom_vers manifest must point at exactly the latest
+    // committed blob per (shard, layer) (no filesystem walk-back anywhere)
+    // with exact counts and zero false negatives over the seen set
     import graft.frontier.{EngineConfig, FrontierEngine}
     import graft.model.DocSynth
     val shards = 8
+    val base = 16L
     val root = java.nio.file.Files.createTempDirectory("bloom-exec").toString
     val store = new SnapshotStore(root)
     val engine = new FrontierEngine(spark, store,
-      EngineConfig(perHostBudget = 3, seenShards = shards))
+      EngineConfig(perHostBudget = 3, seenShards = shards, bloomCapacity = shards * base))
     val cfg = DocSynth.Config(nHosts = 10, pagesPerHost = 20, hotFactor = 3,
       linksPerDoc = 5, seed = 7L)
     val docs = DocSynth.docs(spark, cfg).toDF()
     engine.run(docs, DocSynth.seeds(cfg), 5)
     val last = store.currentVersion.get
     assert(last >= 3, "crawl too short to exercise delta merges")
+    val manifest = store.readProps(last)("bloom_vers").split(",").map(BloomLayers.parse(_, base))
+    assert(manifest.exists(_.vers.length >= 2), "no shard opened a second layer")
     // the manifest must equal an exhaustive walk-back over the blob files
-    val manifest = store.readProps(last)("bloom_vers").split(",").map(_.toInt)
+    def latest(k: Int, layer: Int) =
+      (last to 0 by -1).find(v => store.blobExists(v, BloomLayers.blobName(k, layer)))
     val walkBack = Array.tabulate(shards) { k =>
-      (last to 0 by -1).find(v => store.blobExists(v, s"seen.bloom.$k")).getOrElse(-1)
+      Iterator.from(0).map(latest(k, _)).takeWhile(_.isDefined).map(_.get).toSeq
     }
-    assert(manifest.toSeq === walkBack.toSeq,
+    assert(manifest.map(_.vers.toSeq).toSeq === walkBack.toSeq,
       "bloom_vers manifest disagrees with the blobs actually on disk")
     val seen = engine.seenSet().select($"canon").as[String].collect()
     assert(seen.nonEmpty)
-    seen.foreach { c =>
-      val k = UrlCanon.bucketOf(c, shards)
-      assert(manifest(k) >= 0, s"shard $k has seen canons but no sidecar")
-      val bf = BloomFilter.readFrom(store.readBlob(manifest(k), s"seen.bloom.$k"))
-      assert(bf.mightContainLong(UrlCanon.urlKey64(c)), s"false negative for $c in shard $k")
+    seen.groupBy(UrlCanon.bucketOf(_, shards)).foreach { case (k, canons) =>
+      val s = manifest(k)
+      val held = (0 until s.vers.length - 1).map(BloomLayers.capacity(base, _)).sum + s.fill
+      assert(held === canons.length, s"shard $k: the manifest's count is not the seen count")
+      val layers = s.vers.indices.map(i =>
+        BloomFilter.readFrom(store.readBlob(s.vers(i), BloomLayers.blobName(k, i))))
+      canons.foreach { c =>
+        assert(layers.exists(_.mightContainLong(UrlCanon.urlKey64(c))),
+          s"false negative for $c in shard $k")
+      }
     }
   }
 
   test("null shard slots (no filter yet) probe false — provably-new is exact") {
-    val root = java.nio.file.Files.createTempDirectory("bloom-empty").toString
-    val desc = spark.sparkContext.broadcast(
-      BloomDesc(new SnapshotStore(root), Array.fill(nShards)(-1)))
-    val n = (0 until 100).map(i => s"u$i").toDF("canon")
-      .filter(bloom_probe(pmod(hash($"canon"), lit(nShards)), xxhash64($"canon"), desc))
-      .count()
-    assert(n === 0)
-    desc.destroy()
+    val desc = BloomDesc(freshStore(), Array.fill(nShards)(BloomLayers.empty))
+    assert(probedTrue(desc, (0 until 100).map(i => s"u$i")) === 0)
   }
 
   test("registry: blobs load once per (shard, version) and stay warm across descs") {
@@ -177,20 +198,24 @@ class BloomSpec extends SparkSuite {
     BloomRegistry.clear()
     val urls = (0 until 500).map(i => s"http://w-$i.example.org/$i")
     val desc = storeShards(urls)
-    val touched = desc.vers.zipWithIndex.filter(_._1 >= 0).map(_._2)
-    assert(touched.nonEmpty)
-    val a = BloomRegistry.load(desc, touched.head)
+    val touched = desc.shards.indexWhere(_.vers.nonEmpty)
+    assert(touched >= 0)
+    val a = BloomRegistry.load(desc, touched, 0)
     val before = BloomRegistry.cachedCount
-    val again = BloomRegistry.load(desc.copy(), touched.head)
-    assert(a eq again, "same (root, shard, version) must hit the cache")
+    val again = BloomRegistry.load(desc.copy(), touched, 0)
+    assert(a eq again, "same (root, shard, layer, version) must hit the cache")
     assert(BloomRegistry.cachedCount === before, "cache grew on a pure hit")
-    // a NEW version of the same shard is a different immutable entry
+    // a NEW version of the same layer, and a second layer, are different
+    // immutable entries
     val bos = new java.io.ByteArrayOutputStream()
     BloomFilter.create(64, 512).writeTo(bos)
-    desc.store.writeBlob(1, s"seen.bloom.${touched.head}", bos.toByteArray)
-    val v1 = desc.vers.clone(); v1(touched.head) = 1
-    val b = BloomRegistry.load(BloomDesc(desc.store, v1), touched.head)
+    desc.store.writeBlob(1, BloomLayers.blobName(touched, 0), bos.toByteArray)
+    desc.store.writeBlob(1, BloomLayers.blobName(touched, 1), bos.toByteArray)
+    val v1 = desc.shards.clone(); v1(touched) = BloomLayers(Array(1, 1), 0L)
+    val b = BloomRegistry.load(BloomDesc(desc.store, v1), touched, 0)
     assert(!(a eq b), "new blob version must not alias the old cache entry")
-    assert(BloomRegistry.cachedCount === before + 1)
+    val c = BloomRegistry.load(BloomDesc(desc.store, v1), touched, 1)
+    assert(!(b eq c), "a second layer must not alias the first")
+    assert(BloomRegistry.cachedCount === before + 2)
   }
 }

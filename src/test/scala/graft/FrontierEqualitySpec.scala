@@ -4,6 +4,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.frontier.{EngineConfig, FrontierEngine}
+import graft.functions.BloomLayers
 import graft.model.DocSynth
 import graft.oracle.OracleCrawler
 import graft.snapshots.{HadoopStorage, SnapshotStore}
@@ -147,13 +148,14 @@ class FrontierEqualitySpec extends SparkSuite {
     docs.unpersist()
   }
 
-  test("frontier compaction (compactEvery=2) + tiny-bloom rebuild: crawl ≡ oracle") {
+  test("frontier compaction (compactEvery=2) + tiny-bloom layer growth: crawl ≡ oracle") {
     // exercises BOTH rare state paths the default config never hits in 8
     // rounds: the pending-frontier rewrite + base advance (compaction), and
-    // the bloom capacity-growth rebuild (capacity 64 saturates immediately)
+    // bloom layer growth (16 items a first layer over 4 shards: the shards
+    // open layer after layer as the seen set grows)
     val store = freshStore()
-    val engine = new FrontierEngine(spark, store,
-      EngineConfig(perHostBudget = budget, compactEvery = 2, bloomCapacity = 64))
+    val engine = new FrontierEngine(spark, store, EngineConfig(perHostBudget = budget,
+      compactEvery = 2, seenShards = 4, bloomCapacity = 64))
     val docs = DocSynth.docs(spark, cfg).toDF().cache()
     engine.run(docs, DocSynth.seeds(cfg), rounds)
     val sparkLog = engine.crawlLog()
@@ -163,8 +165,42 @@ class FrontierEqualitySpec extends SparkSuite {
       budget, rounds)
     val oracleLog = o.log.map(e =>
       (e.round, e.fetchTime, e.host, e.canon, e.depth, e.seq, e.status))
-    assert(sparkLog === oracleLog, "compaction/rebuild run diverges from oracle")
+    assert(sparkLog === oracleLog, "compaction/layered-bloom run diverges from oracle")
     assert(engine.seenSet().select($"canon").as[String].collect().toSet === o.seen)
+    val layers = store.readProps(store.currentVersion.get)("bloom_vers")
+      .split(",").map(BloomLayers.parse(_, 16L).vers.length)
+    assert(layers.max >= 3, s"layers per shard: ${layers.mkString(",")}")
+    docs.unpersist()
+  }
+
+  test("resume from a snapshot whose bloom_vers is in the flat pre-layer form ≡ oracle") {
+    // stores written before layers list one bare blob version per shard;
+    // each reads as one sealed layer, so the resumed rounds open layer 1
+    // on top of it and the probe ORs both
+    val store = freshStore()
+    val docs = DocSynth.docs(spark, cfg).toDF().cache()
+    new FrontierEngine(spark, store, EngineConfig(perHostBudget = budget))
+      .run(docs, DocSynth.seeds(cfg), 3)
+    val meta = java.nio.file.Paths.get(store.root, "metadata", "v3.json")
+    val json = new String(Files.readAllBytes(meta), "UTF-8")
+    val layered = store.readProps(3)("bloom_vers")
+    assert(layered.split(",").forall(e => e == "-1" || e.matches("\\d+:\\d+")), layered)
+    val flat = layered.split(",").map(_.takeWhile(_ != ':')).mkString(",")
+    Files.write(meta, json.replace(layered, flat).getBytes("UTF-8"))
+    assert(store.readProps(3)("bloom_vers") === flat)
+    val resumed = new FrontierEngine(spark, store, EngineConfig(perHostBudget = budget))
+    resumed.run(docs, DocSynth.seeds(cfg), rounds)
+    val sparkLog = resumed.crawlLog()
+      .select($"round", $"fetchTime", $"host", $"canon", $"depth", $"seq", $"status")
+      .as[(Int, Long, String, String, Int, Long, Int)].collect().toVector
+    val o = OracleCrawler.crawl(DocSynth.localDocs(cfg), DocSynth.seeds(cfg), budget, rounds)
+    assert(sparkLog === o.log.map(e =>
+      (e.round, e.fetchTime, e.host, e.canon, e.depth, e.seq, e.status)),
+      "crawl resumed from a flat bloom manifest diverges from oracle")
+    assert(resumed.seenSet().select($"canon").as[String].collect().toSet === o.seen)
+    val layers = store.readProps(store.currentVersion.get)("bloom_vers")
+      .split(",").map(BloomLayers.parse(_, 1L << 17).vers.length)
+    assert(layers.max >= 2, s"no shard grew past its flat layer: ${layers.mkString(",")}")
     docs.unpersist()
   }
 

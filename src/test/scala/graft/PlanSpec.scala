@@ -96,7 +96,7 @@ class PlanSpec extends SparkSuite {
     // expression of `canon` would probe every seen row each round, and
     // every one passes, since the blooms are built from the seen set
     import graft.frontier.{EngineConfig, FrontierEngine}
-    import graft.functions.{BloomDesc, BloomProbe}
+    import graft.functions.{BloomDesc, BloomLayers, BloomProbe}
     import graft.model.DocSynth
     import graft.snapshots.SnapshotStore
     import org.apache.spark.sql.catalyst.plans.LeftAnti
@@ -113,7 +113,8 @@ class PlanSpec extends SparkSuite {
     val links = engine.bloomKeyed(spark.range(0, 1000)
       .select(concat(lit("http://host-"), col("id") % 8, lit(".example.org/p/"), col("id"))
         .as("canon"), lit(1).as("depth"))).cache()
-    val desc = spark.sparkContext.broadcast(BloomDesc(store, Array.fill(shards)(1)))
+    val desc = spark.sparkContext.broadcast(
+      BloomDesc(store, Array.fill(shards)(BloomLayers(Array(1), 0L))))
     try {
       val plan = engine.dedup(links, engine.seenJoinable(1), desc).queryExecution.optimizedPlan
       val anti = plan.collectFirst { case j: Join if j.joinType == LeftAnti => j }

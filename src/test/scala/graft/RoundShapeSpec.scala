@@ -9,6 +9,7 @@ import org.apache.spark.graft.ListenerDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 
 import graft.frontier.{EngineConfig, FrontierEngine}
+import graft.functions.BloomLayers
 import graft.model.DocSynth
 import graft.snapshots.SnapshotStore
 
@@ -19,15 +20,24 @@ import graft.snapshots.SnapshotStore
   */
 class RoundShapeSpec extends SparkSuite {
 
-  /** Jobs, and the completed stages' (name, tasks, RDD names), of `body`. */
-  private def shapeOf(body: => Unit): (Int, Seq[(String, Int, Seq[String])]) = {
+  /** The jobs (each named by its last stage), the completed stages' (name,
+    * tasks, RDD names), and how many of those stages scanned the seen
+    * table's files, of `body`. */
+  private def shapeOf(body: => Unit): (Seq[String], Seq[(String, Int, Seq[String])], Int) = {
     val sc = spark.sparkContext
-    val jobs = new ConcurrentLinkedQueue[Int]()
+    val jobs = new ConcurrentLinkedQueue[String]()
     val stages = new ConcurrentLinkedQueue[(String, Int, Seq[String])]()
+    val seenScans = new java.util.concurrent.atomic.AtomicInteger()
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.add(e.jobId)
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(e.stageInfos.maxBy(_.stageId).name)
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
         val si = e.stageInfo
+        // a stage lists the narrow lineage of the caches it reads too; only
+        // a stage that read file records ran its file scans
+        if (si.taskMetrics.inputMetrics.recordsRead > 0 && si.rddInfos.exists(i =>
+            i.name == "FileScanRDD" && i.scope.exists(_.name.contains("graft_seen_"))))
+          seenScans.incrementAndGet()
         // RDD names of cached plans carry the whole plan: keep the class
         stages.add((si.name, si.numTasks,
           si.rddInfos.map(i => i.name.takeWhile(c => !c.isWhitespace) +
@@ -41,7 +51,7 @@ class RoundShapeSpec extends SparkSuite {
       ListenerDrain(sc)
       sc.removeSparkListener(listener)
     }
-    (jobs.size, stages.asScala.toSeq)
+    (jobs.asScala.toSeq, stages.asScala.toSeq, seenScans.get)
   }
 
   test("one round's jobs, stages and tasks stay within their pinned bounds") {
@@ -51,7 +61,8 @@ class RoundShapeSpec extends SparkSuite {
     val engine = new FrontierEngine(spark, store, EngineConfig(perHostBudget = 3))
     val docs = DocSynth.docs(spark, cfg).toDF().cache()
     engine.run(docs, DocSynth.seeds(cfg), 1)
-    val (jobs, stages) = shapeOf(assert(engine.runRound(docs, 2) > 0))
+    val (jobNames, stages, _) = shapeOf(assert(engine.runRound(docs, 2) > 0))
+    val jobs = jobNames.size
     val tasks = stages.map(_._2).sum
     val shape = s"$jobs jobs, ${stages.size} stages, $tasks tasks:\n" +
       stages.map { case (n, t, rdds) => s"  $t  $n  ${rdds.mkString(",")}" }.mkString("\n")
@@ -75,6 +86,40 @@ class RoundShapeSpec extends SparkSuite {
     assert(jobs <= 26, shape)
     assert(stages.size <= 28, shape)
     assert(tasks <= 624, shape)
+    docs.unpersist()
+  }
+
+  test("a round that opens bloom layers runs no more jobs than at the default capacity") {
+    // a shard grows inside the task that adds the round's new canons to it,
+    // so a round that opens layers submits the same jobs as one that does
+    // not, and scans the seen table only where `fresh` is built: no job
+    // rescans the seen set to resize the filters (a capacity rebuild did).
+    // The seen append's own jobs are left out of the count: it runs one or
+    // two `saveAsTable` jobs depending on timing, at any capacity
+    val cfg = DocSynth.Config(nHosts = 12, pagesPerHost = 30, hotFactor = 5,
+      linksPerDoc = 6, seed = 42L)
+    val docs = DocSynth.docs(spark, cfg).toDF().cache()
+    val shards = 4
+    def round4(bloomCapacity: Long): (Int, Int, String, Seq[Int], Seq[Int]) = {
+      val store = new SnapshotStore(Files.createTempDirectory("graft-layers").toString)
+      val engine = new FrontierEngine(spark, store, EngineConfig(perHostBudget = 3,
+        seenShards = shards, bloomCapacity = bloomCapacity))
+      engine.run(docs, DocSynth.seeds(cfg), 3)
+      val (jobNames, stages, seenScans) = shapeOf(assert(engine.runRound(docs, 4) > 0))
+      val jobs = jobNames.count(!_.contains("SeenTable.scala"))
+      def layers(v: Int) = store.readProps(v)("bloom_vers").split(",")
+        .map(BloomLayers.parse(_, bloomCapacity / shards).vers.length).toSeq
+      (jobs, seenScans, s"$jobs jobs besides the seen append, ${stages.size} stages, " +
+        s"$seenScans seen scans", layers(3), layers(4))
+    }
+    val (tinyJobs, tinyScans, tiny, before, after) = round4(16L * shards)
+    assert(before.zip(after).exists { case (b, a) => a > b && a >= 2 },
+      s"round 4 opened no layer: ${before.mkString(",")} -> ${after.mkString(",")}")
+    val (defaultJobs, defaultScans, default, _, flat) = round4(EngineConfig().bloomCapacity)
+    assert(flat.forall(_ <= 1), s"the default capacity opened layers: ${flat.mkString(",")}")
+    info(s"layer-opening round: $tiny; default capacity: $default")
+    assert(tinyJobs <= defaultJobs, s"layer-opening round: $tiny; default capacity: $default")
+    assert(tinyScans <= defaultScans, s"layer-opening round: $tiny; default capacity: $default")
     docs.unpersist()
   }
 }
