@@ -31,8 +31,8 @@ case class EngineConfig(
 /** BSP URL-frontier + fetch scheduler over interleaved text+media docs.
   *
   * A round is the reference workflow's chain of named stages — schedule,
-  * fetch, discover, dedup, gate, assignSeqs, updateBlooms, commit — each a
-  * frame transform of its own, run as TWO Spark job waves:
+  * fetch, discover, dedup, gate, assignSeqs, commit — each a frame
+  * transform of its own, run as TWO Spark job waves:
   *   wave 1 — ONE metrics action: read snapshot r-1 → schedule (per-host
   *   top-B by (depth,seq), one window) → "fetch" (join the
   *   small schedule against the once-per-crawl link graph) → extract +
@@ -42,9 +42,14 @@ case class EngineConfig(
   *   (`roundCounts`). Each of the four wave-1 caches (`scheduled`,
   *   `fetched`, `links`, `fresh`) is built exactly once before the commit,
   *   one partition per task slot (`cacheWidth`);
-  *   wave 2 — the commit: frontier/host_next/crawl_log/lineage table
-  *   writes, the seen-table append, and the bloom sidecar update all run
-  *   CONCURRENTLY, then the atomic metadata publish.
+  *   wave 2 — the commit: the frontier/host_next/crawl_log/lineage table
+  *   writes, and beside them ONE job that appends the round's new canons
+  *   to the seen table and grows the bloom layers from the same rows
+  *   (`appendSeen`), then the atomic metadata publish.
+  * Each job's Spark description names the engine step that submitted it
+  * (`write <table>`, `seen+bloom`, `link graph`; AQE and broadcast jobs
+  * inherit it); wave 1's lazily planned steps run under `schedule+discover`
+  * (planning `fresh` in `gate`) and `counts` (the collect).
   *
   * Determinism (SURVEY.md §7.5 #1): all ordering is on logical keys —
   * (depth, seq) for scheduling, i*crawlDelay(host) logical ticks for fetch
@@ -82,24 +87,25 @@ case class EngineConfig(
   *     decision (reference analog: negative cache, IFileLoaderImpl.java:
   *     21-29). Each shard is a stack of filter layers (`BloomLayers`, a
   *     scalable Bloom filter): layer i holds max(16, bloomCapacity /
-  *     seenShards) · 2^i items at FPP 0.01 · 2^-i, so the probe, which ORs
-  *     a shard's layers, stays under 0.02 at any seen count, with no
-  *     capacity clamp. A round's update rides the SAME bucket repartition
-  *     as the seen-table append (one shared shuffle): each task adds its
-  *     bucket's new canons to the shard's newest layer, read inside the
-  *     task, opens the next layer whenever one fills, and writes the layers
-  *     it touched FROM THE TASK. The driver learns only those layers'
-  *     versions and the newest layer's count, and no round reads the seen
-  *     table for blooms: per-round bloom work is O(new URLs). Each
-  *     snapshot's `bloom_vers` prop lists every shard's layer versions and
-  *     newest count (O(shards × log n) ints), so untouched layers carry
-  *     forward by REFERENCE with no per-file probing. On the PROBE side the
-  *     driver broadcasts only that manifest (`BloomDesc`); executors lazily
-  *     pull exactly the layer blobs their tasks probe from shared storage
-  *     into a bounded LRU (BloomRegistry) that stays warm across rounds for
-  *     unchanged layers. Probes ride the codegen'd `BloomProbe` expression
-  *     — never a bloom-as-literal, never a ScalaUDF, and never
-  *     O(total-bloom-bytes) through the driver in either direction.
+  *     seenShards) · 2^i items at FPP 0.01 · 2^-i, so the probe, which ORs a
+  *     shard's layers, stays under 0.02 at any seen count, with no capacity
+  *     clamp. A round's update runs INSIDE the seen-table append's write tasks
+  *     (`appendSeen`), each of which owns whole buckets: it adds each bucket's
+  *     new canons to the shard's newest layer, read inside the task, opens the
+  *     next layer whenever one fills, and writes the layers it touched FROM
+  *     THE TASK, before writing the bucket's seen file. The driver plans each
+  *     shard's layer versions and newest count from the round's per-bucket
+  *     counts, so nothing returns from the tasks and no round reads the seen
+  *     table for blooms: per-round bloom work is O(new URLs). Each snapshot's
+  *     `bloom_vers` prop lists every shard's layer versions and newest count
+  *     (O(shards × log n) ints), so untouched layers carry forward by
+  *     REFERENCE with no per-file probing. On the PROBE side the driver
+  *     broadcasts only that manifest (`BloomDesc`); executors lazily pull
+  *     exactly the layer blobs their tasks probe from shared storage into a
+  *     bounded LRU (BloomRegistry) that stays warm across rounds for unchanged
+  *     layers. Probes ride the codegen'd `BloomProbe` expression — never a
+  *     bloom-as-literal, never a ScalaUDF, and never O(total-bloom-bytes)
+  *     through the driver in either direction.
   *   - per-host skew (hot hosts with 10^7 pending URLs) is broken by
   *     Spark's partial WindowGroupLimit: before the host exchange each
   *     partition keeps at most B rows per host, so a hot host contributes
@@ -126,7 +132,7 @@ case class EngineConfig(
   *     discovery seqs are assigned with NO extra jobs (per-shard offsets
   *     from that same collect + a shard-partitioned local sort, replacing
   *     range-sample + zipWithIndex's two jobs), and the entire commit
-  *     (5 table writes, seen append, bloom update) runs as one concurrent
+  *     (4 table writes and one seen + bloom job) runs as one concurrent
   *     wave. The round's caches take one partition per task slot
   *     (`cacheWidth`), its writes follow their rows (`writeWidth`; one
   *     aggregation each for host_next and lineage).
@@ -205,17 +211,13 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
   private def bloomVersProp(shards: Array[BloomLayers]): Map[String, String] =
     Map("bloom_vers" -> shards.map(BloomLayers.show).mkString(","))
 
-  /** Write width FOLLOWS DATA VOLUME (the exact counts are already known
-    * from committed metrics or wave 1 — no extra job): a 10^8-row write
-    * goes wide, a 10^4-row one lands a handful of files instead of a fixed
-    * 64 — per-round commit file count is the crawl's biggest syscall
-    * surface (64 frontier files/round × 10^4 rounds is also a real
-    * small-file problem on HDFS/S3). Encode CPU, not file size, is what the
-    * width must parallelize: the stage log measured ~30 s of parquet-encode
-    * CPU for a 4M-row crawl-log write (~7.5 µs/row). So a task takes at most
-    * ~31k rows (~0.23 s of encode) until 8 tasks, 8 tasks hold up to 1.75M
-    * rows, then ~250k rows per file; cap 64 bounds the per-round file count
-    * at any volume. A round under 31k rows lands one file in one task. */
+  /** Write width FOLLOWS DATA VOLUME (exact counts from committed metrics
+    * or wave 1 — no extra job): per-round file count is the crawl's biggest
+    * syscall surface and a small-file problem on HDFS/S3. Encode CPU (~7.5
+    * µs/row of parquet encode, measured on a 4M-row crawl-log write) is what
+    * the width parallelizes: a task takes at most ~31k rows until 8 tasks,
+    * 8 tasks hold up to 1.75M rows, then ~250k rows per file, capped at 64
+    * files. A round under 31k rows lands one file in one task. */
   private def writeWidth(rows: Long): Int =
     math.min(64L, math.max(math.min(8L, (rows + 31249L) / 31250L),
       rows / 250000L + 1)).toInt
@@ -234,28 +236,38 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
     * above the plan's own partition count changes nothing. */
   private def cacheWidth: Int = spark.sparkContext.defaultParallelism
 
-  /** Grow the per-bucket bloom layers by the canons of a frame ALREADY
-    * hash-partitioned by the seen-table bucket function (partition id ==
-    * bucket id == bloom shard id), in place — NO shuffle, NO aggregate: each
-    * task adds its bucket's canons to the shard's stack (`BloomLayers.grow`:
-    * the newest layer is read inside the task, and as many layers are
-    * opened as the canons need) and writes the layers it changed FROM THE
-    * TASK. The driver receives only each touched shard's layer versions and
-    * newest count; no filter bytes ever cross the driver. Returns every
-    * shard's layers, untouched ones as in `prior`. The canons must be new
-    * to the seen set, so the counts stay exact. */
-  private def writeBucketBlooms(byBucket: DataFrame, r: Int,
-                                prior: Array[BloomLayers]): Array[BloomLayers] = {
-    val (st, base) = (store, layerBase)
-    val grown = byBucket.select(col("canon")).as[String]
-      .rdd.mapPartitionsWithIndex { case (pid, it) =>
-        if (!it.hasNext) Iterator.empty
-        else Iterator.single(
-          pid -> BloomLayers.grow(st, r, base, pid, prior(pid), it.map(UrlCanon.urlKey64)))
+  /** The seen append and the bloom update as ONE job (`seen+bloom`) whose
+    * tasks each own whole buckets: `keyed`'s (bshard, canon) rows route by
+    * bucket to min(seenShards, slots) partitions, as `assignSeqs` routes seq
+    * shards. Each task grows each bucket's bloom stack from its sorted keys
+    * (`BloomLayers.grow`, so no layer depends on row order), then hands the
+    * canons to the bucketed writer: one seen file per bucket. The manifest
+    * is planned from the driver's counts (`BloomLayers.after`), and a bucket
+    * holding another count throws, so it never depends on what tasks return
+    * or how often Spark computes them. The canons must be new to the seen
+    * set. Returns every shard's layers. */
+  private def appendSeen(keyed: DataFrame, r: Int, prior: Array[BloomLayers],
+                         perBucket: Array[Long]): Array[BloomLayers] = {
+    val (st, base, shards) = (store, layerBase, cfg.seenShards)
+    val owner = new HashPartitioner(math.min(shards, cacheWidth))
+    val canons = keyed.select($"bshard", $"canon").as[(Int, String)].rdd
+      .partitionBy(owner)
+      .mapPartitionsWithIndex { case (pid, it) =>
+        val byBucket = it.toArray.groupBy(_._1)
+        (0 until shards).iterator.filter(owner.getPartition(_) == pid).flatMap { k =>
+          val rows = byBucket.getOrElse(k, Array.empty[(Int, String)]).map(_._2)
+          val keys = rows.map(UrlCanon.urlKey64)
+          java.util.Arrays.sort(keys)
+          BloomLayers.grow(st, r, base, k, prior(k), perBucket(k), keys)
+          rows.iterator
+        }
       }
-      .collect().toMap
-    Array.tabulate(prior.length)(k => grown.getOrElse(k, prior(k)))
+    described("seen+bloom")(seen.append(canons.toDF("canon"), r, prePartitioned = true))
+    Array.tabulate(shards)(k => BloomLayers.after(prior(k), perBucket(k), base, r))
   }
+
+  private def described[T](what: String)(body: => T): T =
+    SnapshotStore.described(spark.sparkContext, what)(body)
 
   /** One-time projection of the interleaved-doc corpus to the slim link
     * graph (doc_id, links: array<string>) the frontier actually consumes —
@@ -267,14 +279,12 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
     * full-corpus pass (~3% of corpus bytes thereafter).
     *
     * Written as a BUCKETED catalog table CLUSTERED BY doc_id (same move as
-    * SeenTable): once the pending set outgrows the broadcast threshold,
-    * the per-round fetch join would otherwise shuffle the WHOLE
-    * link-graph table by doc_id — the crawl's largest table, re-shuffled
-    * twice per round (the links scan and the crawl-log hit scan). With the
-    * bucketing metadata the graph side scans in place and ONLY the skinny
-    * schedule shuffles: per-round fetch shuffle volume is O(schedule),
-    * never O(corpus). Bucket count = seenShards = shuffle.partitions, so
-    * the scan's HashPartitioning satisfies the join's distribution exactly.
+    * SeenTable): once the pending set outgrows the broadcast threshold, the
+    * fetch and discover joins would otherwise shuffle the WHOLE graph, the
+    * crawl's largest table, twice per round; with the bucketing metadata it
+    * scans in place and ONLY the skinny schedule shuffles (`joinSides`).
+    * Bucket count = seenShards = shuffle.partitions, so the scan's
+    * HashPartitioning satisfies the join's distribution exactly.
     *
     * MEMOIZED + synchronized per engine: `run()` kicks the build off
     * concurrently with `init` (the two are independent — init writes the
@@ -310,27 +320,18 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
     // The staging name must not start with '.' or '_': Spark's file index
     // ignores such paths, and the staged table would resolve empty.
     var built = false
-    if (!store.storage.exists(s"$path/_SUCCESS")) timed("linkgraph") {
+    if (!store.storage.exists(s"$path/_SUCCESS")) timed("linkgraph")(described("link graph") {
       val tmp = s"${store.root}/links.tmp"
       val stage = name + "_stage"
       store.storage.deleteRec(tmp)
       store.storage.deleteRec(path)
       spark.sql(s"DROP TABLE IF EXISTS $stage")
-      // bucketed but NOT sorted: the fetch join is SHUFFLE_HASH (hash
-      // build on the schedule side), so a within-bucket sort order buys
-      // nothing — and the sorted write's per-task UnsafeExternalSorter
-      // was measured NOT to scale with cores on this box (26 s at BOTH
-      // local[8] and local[32] for the xl graph, 16-48% system CPU from
-      // 32 concurrent sorters spilling through tmpfs; unsorted: 7.4 s at
-      // local[32]). If an SMJ consumer ever appears, sort at read time.
-      // field-array formulation: spans.kind / spans.media_ref come out as
-      // flat string arrays (GetArrayStructFields, codegen) and the two
-      // interpreted HOF lambdas touch only strings — the struct-HOF form
-      // (filter(spans, sp.kind==link) then transform(_, sp.media_ref))
-      // allocated a struct row per span per pass (A/B at the big web:
-      // 4.2 -> 1.4 s cold, equal output). zstd: measured FASTER to write
-      // than snappy here (1.9 vs 3.3 s) and 37% smaller, and the graph is
-      // rescanned twice per round where smaller bytes win again (guide §6).
+      // bucketed but NOT sorted: the joins build their hash table on the
+      // schedule, and the sorted write's concurrent sorters did not scale
+      // with cores (xl graph: 26 s at local[8] and local[32]; unsorted 7.4 s
+      // at local[32]). Field arrays, not a struct-HOF over spans: no struct
+      // row per span (4.2 -> 1.4 s cold at the big web). zstd: faster to
+      // write than snappy here (1.9 vs 3.3 s) and 37% smaller.
       docs.select($"doc_id",
           filter(zip_with($"spans.kind", $"spans.media_ref",
             (k, m) => when(k === "link", m)), x => x.isNotNull).as("links"))
@@ -349,7 +350,7 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
       store.storage.writeString(s"$tmp/_buckets", cfg.seenShards.toString)
       store.storage.moveAtomic(tmp, path)
       built = true
-    }
+    })
     val onDisk = store.storage.readString(s"$path/_buckets").trim.toInt
     require(onDisk == cfg.seenShards,
       s"link graph at $path was bucketed INTO $onDisk BUCKETS but the engine " +
@@ -365,7 +366,9 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
     spark.table(name)
   }
 
-  /** Snapshot v0: canonical, deduped, robots-gated seed frontier. */
+  /** Snapshot v0: canonical, deduped, robots-gated seed frontier, committed
+    * like a round: the table writes beside one seen + bloom job, whose
+    * per-bucket counts come from the driver-local seeds with no job. */
   def init(seeds: Seq[String]): Unit = timed("init")(FrontierEngine.scoped(initIn(_, seeds)))
 
   private def initIn(scope: RoundScope, seeds: Seq[String]): Unit = {
@@ -377,34 +380,19 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
     }.toDF("canon", "host", "depth", "seq", "discovered_round")
     val hostNext = canonSeeds.map(UrlCanon.hostOf).distinct.toDF("host")
       .withColumn("next_time", lit(0L))
-    // one concurrent wave, like the per-round commit: table writes, the
-    // seed seen-append and the seed blooms are independent jobs — running
-    // them serially cost ~8 s of fixed init latency at every level
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val seedBuckets = canonSeeds.toDF("canon")
-      .repartition(cfg.seenShards, $"canon").transform(scope.cache("seeds"))
-    val manifestFut = scope.track(Future(store.writeTables(0,
+    val tablesFut = scope.track(Future(store.writeTables(0,
       Map("frontier" -> frontier, "host_next" -> hostNext,
           "crawl_log" -> spark.emptyDataset[graft.model.CrawlLogEntry].toDF(),
-          "lineage" -> emptyLineage))))
-    // materialize the shared seed cache ONCE before its two consumers: the
-    // cache's parent is a driver-local relation, and the seen-append and
-    // seed-bloom jobs racing to parallelize it (while the link-graph build
-    // saturates the same cores) measured 19 s slower at local[8] on the xl
-    // web (init+linkgraph 38.7 -> 18.3-19.8 s with this head job). The
-    // per-round commit wave deliberately does NOT do this — see runRound.
-    val seedMat = Future(seedBuckets.count())
-    val seenFut = scope.track(
-      seedMat.map(_ => seen.append(seedBuckets, 0, prePartitioned = true)))
-    val bloomFut = scope.track(seedMat.map(_ => writeBucketBlooms(seedBuckets, 0,
-      Array.fill(cfg.seenShards)(BloomLayers.empty))))
-    val manifest = Await.result(manifestFut, Duration.Inf)
-    Await.result(seenFut, Duration.Inf)
-    store.publish(0, manifest,
+          "lineage" -> emptyLineage)))(ExecutionContext.global))
+    val keyed = canonSeeds.toDF("canon").transform(bloomKeyed)
+    val perBucket = new Array[Long](cfg.seenShards)
+    keyed.select($"bshard").as[Int].collect().foreach(k => perBucket(k) += 1)
+    val blooms = appendSeen(keyed, 0, Array.fill(cfg.seenShards)(BloomLayers.empty), perBucket)
+    store.publish(0, Await.result(tablesFut, Duration.Inf),
       Map("seq_base" -> canonSeeds.size.toLong,
           "seen_total" -> canonSeeds.size.toLong,
           "frontier_base" -> 0L),
-      bloomVersProp(Await.result(bloomFut, Duration.Inf)))
+      bloomVersProp(blooms))
   }
 
   private def emptyLineage: DataFrame =
@@ -508,8 +496,9 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
     val smallSchedule = scheduleFits(scheduled, pendingCount)
     val fetched = fetch(scope, scheduled, docsLinks, smallSchedule)
     val links = discover(scope, scheduled, docsLinks, smallSchedule)
-    val (fresh, observed) = gate(scope, dedup(links, seen.upTo(r - 1), descBc))
-    val counts = timed("metrics")(roundCounts(fetched, fresh))
+    val (fresh, observed) =
+      described("schedule+discover")(gate(scope, dedup(links, seen.upTo(r - 1), descBc)))
+    val counts = timed("metrics")(described("counts")(roundCounts(fetched, fresh)))
     val newPerShard = counts.newPerShard
     val nNew = newPerShard.sum
     val nBlocked = counts.blocked
@@ -517,16 +506,10 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
     val nDiscovered = observed()("links").getLong(0)
     val nDeduped = nDiscovered - nNew - nBlocked
 
-    // ---- wave 2: seqs, blooms, the commit ----------------------------------
+    // ---- wave 2: seqs, the commit -----------------------------------------
     val newEntries = assignSeqs(fresh, newPerShard, seqBase, r)
     val newSeenTotal = prior("seen_total") + nNew + nBlocked
-    // ONE shuffle shared by the seen append and the bloom sidecar build:
-    // both consume this bucket-partitioned cache (partition id == bucket id
-    // == bloom shard id), so the bloom update costs no shuffle of its own
-    val freshBuckets = fresh.select($"canon")
-      .repartition(cfg.seenShards, $"canon").transform(scope.cache("freshBuckets"))
-    val bloomFut = updateBlooms(scope, r, freshBuckets, nNew + nBlocked, priorBlooms)
-    commit(scope, r, freshBuckets, bloomFut, compactFut,
+    commit(scope, r, () => appendSeen(fresh, r, priorBlooms, counts.perBucket), compactFut,
       Map("frontier" -> newEntries,
           "host_next" -> advanceClocks(scheduled, hostNext),
           "crawl_log" -> crawlLogOf(r, fetched).coalesce(writeWidth(nScheduled)),
@@ -568,9 +551,16 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
   private def scheduleFits(scheduled: DataFrame, pending: Long): Boolean =
     bridge.fitsBroadcast(scheduled.select($"canon", $"depth"), pending)
 
-  /** The schedule as a join's build side: broadcast, or a shuffled hash build. */
-  private def schedSide(sched: DataFrame, small: Boolean): DataFrame =
-    if (small) broadcast(sched) else sched.hint("shuffle_hash")
+  /** The link graph and schedule sides of a join. While the schedule
+    * broadcasts, the graph is read by file splits (a cached plan turns off
+    * auto bucketed scan, so the bucketed table scans a task per bucket file
+    * at any core count); past it, the graph scans in place by bucket and
+    * the schedule shuffles into a hash build. */
+  private def joinSides(docsLinks: DataFrame, sched: DataFrame,
+                        small: Boolean): (DataFrame, DataFrame) =
+    if (small)
+      (spark.read.schema(docsLinks.schema).parquet(s"${store.root}/links"), broadcast(sched))
+    else (docsLinks, sched.hint("shuffle_hash"))
 
   /** schedule — politeness: per-host top-B by (depth, seq), positioned on
     * each host's logical clock. One exact window whose partial group limit
@@ -612,15 +602,15 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
     val sched = scheduled.select($"canon", $"host", $"depth", $"seq", $"fetchTime")
     // kept on measurement: the right-outer path alone made frontier-wide's
     // round ~0.5 s slower at local[4] (6 pairs: median 7.04 → 7.54 s)
+    val (graph, schedBuild) = joinSides(docsLinks, sched, small)
     (if (small) {
-      val hits = docsLinks.join(schedSide(sched, small), docsLinks("doc_id") === sched("canon"))
+      val hits = graph.join(schedBuild, graph("doc_id") === sched("canon"))
         .select($"doc_id".as("canon"), lit(true).as("hit"))
       sched.join(broadcast(hits), Seq("canon"), "left_outer")
         .select($"canon", $"host", $"depth", $"seq", $"fetchTime",
                 coalesce($"hit", lit(false)).as("hit"))
     } else {
-      docsLinks.join(schedSide(sched, small),
-          docsLinks("doc_id") === sched("canon"), "right_outer")
+      graph.join(schedBuild, graph("doc_id") === sched("canon"), "right_outer")
         .select($"canon", $"host", $"depth", $"seq", $"fetchTime",
                 $"doc_id".isNotNull.as("hit"))
     }).coalesce(cacheWidth).transform(scope.cache("fetched"))
@@ -638,7 +628,8 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
   private def discover(scope: RoundScope, scheduled: DataFrame, docsLinks: DataFrame,
                        small: Boolean): DataFrame = {
     val sched = scheduled.select($"canon", $"depth")
-    docsLinks.join(schedSide(sched, small), docsLinks("doc_id") === sched("canon"))
+    val (graph, schedBuild) = joinSides(docsLinks, sched, small)
+    graph.join(schedBuild, graph("doc_id") === sched("canon"))
       .select($"canon".as("doc_id"), $"depth", explode($"links").as("ref"))
       .withColumn("target", resolve_url($"doc_id", $"ref"))
       .filter($"target".isNotNull)
@@ -673,8 +664,9 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
       .unionByName(links.filter(!maybeSeen))
   }
 
-  /** `df` with each canon's bloom shard, the seen-table BUCKET id (murmur3),
-    * and its bloom key (xxhash64): bloom shards align 1:1 with the buckets. */
+  /** `df` with each canon's bloom shard, the seen-table BUCKET id (murmur3,
+    * Spark's `bucketBy` function), and its bloom key (xxhash64): bloom
+    * shards align 1:1 with the buckets. */
   private[graft] def bloomKeyed(df: DataFrame): DataFrame =
     df.withColumn("key", xxhash64($"canon"))
       .withColumn("bshard", pmod(hash($"canon"), lit(cfg.seenShards)))
@@ -682,47 +674,51 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
   /** gate — robots (the codegen'd `robots_allows`; its rule source is
     * pluggable behind GateExprHelper). Blocked URLs enter seen, never the
     * frontier. The result is the round's genuinely-new canons (allowed AND
-    * blocked), tagged with their seq shard and cached slim: it feeds the
-    * round's counts, the seen append, the bloom delta and the frontier
+    * blocked), tagged with their seq shard and seen bucket and cached slim:
+    * it feeds the round's counts, the seen + bloom job and the frontier
     * write. The cache is built over the gated plan's RDD (`bridge.detach`),
     * so its plan holds no seen-table reference: the seen append re-caches
     * every cached plan that reads the table it wrote, and would otherwise
-    * drop this cache (and `freshBuckets`, built from it) while commit-wave
-    * jobs still read it. Returns the cache and the reader of the `observe`
-    * metrics its build collects (the link count, see `discover`). */
+    * drop this cache while commit-wave jobs still read it. Returns the cache
+    * and the reader of the `observe` metrics its build collects (the link
+    * count, see `discover`). */
   private def gate(scope: RoundScope, fresh: DataFrame): (DataFrame, () => Map[String, Row]) = {
     val (gated, observed) = bridge.detach(fresh.withColumn("host", url_host($"canon"))
       .withColumn("allowed", robots_allows($"host", url_path($"canon")))
       .withColumn("seqshard", pmod(xxhash64($"canon"), lit(UrlCanon.SeqShards.toLong)))
-      .select($"canon", $"host", $"depth", $"allowed", $"seqshard")
+      .select($"canon", $"host", $"depth", $"allowed", $"seqshard", $"bshard")
       .coalesce(cacheWidth))
     (gated.transform(scope.cache("fresh")), observed)
   }
 
   /** What the round's one collect counts. */
   private case class RoundCounts(newPerShard: Array[Long], blocked: Long,
-                                 fetched200: Long, fetched404: Long)
+                                 perBucket: Array[Long], fetched200: Long, fetched404: Long)
 
-  /** The round's ONE collect: two small aggregations — per seq shard the
-    * new and blocked canons of `fresh`, and the 200/404 split of `fetched`
-    * — unioned into one job. It builds `fetched`, and `fresh` with the
-    * `links` it reads (`scheduled` is built by the schedule broadcast that
-    * planning `fresh` runs in `gate`), each once, so the commit wave only
-    * reads them, and its per-shard new counts are exactly the
-    * offsets `assignSeqs` needs — no separate count(), range-sampling or
-    * zipWithIndex job. The scheduled count is 200 + 404: `fetched` carries
-    * every schedule row. */
+  /** The round's ONE collect: two small aggregations — over grouping sets
+    * of `fresh` (one scan, one shuffle), per seq shard its new and blocked
+    * canons and per seen bucket its canons, and the 200/404 split of
+    * `fetched` — unioned into one job. It builds `fetched`, and `fresh` with
+    * the `links` it reads (`scheduled` is built by the schedule broadcast
+    * that planning `fresh` runs in `gate`), each once, so the commit wave
+    * only reads them. Its per-shard new counts are exactly the offsets
+    * `assignSeqs` needs — no count(), range-sampling or zipWithIndex job —
+    * and its per-bucket counts plan the bloom manifest (`appendSeen`). The
+    * scheduled count is 200 + 404: `fetched` carries every schedule row. */
   private def roundCounts(fetched: DataFrame, fresh: DataFrame): RoundCounts = {
-    val fetchedKey = -1L
-    val rows = fresh.groupBy($"seqshard".as("key")).agg(
-        count(when($"allowed", 1)).as("a"), count(when(!$"allowed", 1)).as("b"))
-      .unionByName(fetched.agg(lit(fetchedKey).as("key"),
-        count(when($"hit", 1)).as("a"), count(when(!$"hit", 1)).as("b")))
-      .collect().map(row => (row.getLong(0), (row.getLong(1), row.getLong(2)))).toMap
-    val newPerShard = Array.tabulate(UrlCanon.SeqShards)(k => rows.get(k.toLong).fold(0L)(_._1))
-    val blocked = rows.collect { case (k, (_, b)) if k >= 0 => b }.sum
-    val (n200, n404) = rows(fetchedKey)
-    RoundCounts(newPerShard, blocked, n200, n404)
+    val rows = fresh.groupingSets(Seq(Seq($"seqshard"), Seq($"bshard")), $"seqshard", $"bshard")
+      .agg(count(when($"allowed", 1)).as("a"), count(when(!$"allowed", 1)).as("b"))
+      .unionByName(fetched.agg(count(when($"hit", 1)).as("a"), count(when(!$"hit", 1)).as("b")),
+        allowMissingColumns = true)
+      .collect()
+    def ab(r: Row) = (r.getAs[Long]("a"), r.getAs[Long]("b"))
+    val seqRows = rows.filter(!_.isNullAt(0)).map(r => r.getLong(0).toInt -> ab(r)).toMap
+    val bucketRows = rows.filter(!_.isNullAt(1)).map(r => r.getInt(1) -> ab(r)).toMap
+    val (n200, n404) = ab(rows.find(r => r.isNullAt(0) && r.isNullAt(1)).get)
+    RoundCounts(Array.tabulate(UrlCanon.SeqShards)(k => seqRows.get(k).fold(0L)(_._1)),
+      seqRows.values.map(_._2).sum,
+      Array.tabulate(cfg.seenShards)(k => bucketRows.get(k).fold(0L)(c => c._1 + c._2)),
+      n200, n404)
   }
 
   /** assignSeqs — deterministic discovery seqs with NO extra jobs. Global
@@ -756,18 +752,6 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
       }
       .toDF("canon", "host", "depth", "seq", "discovered_round")
   }
-
-  /** updateBlooms — the per-shard bloom layers for snapshot r, started in
-    * the background and awaited by `commit`: the round's new canons (the
-    * bucketed cache the seen append also writes) grow each shard's stack,
-    * opening layers as they fill (`writeBucketBlooms`). It reads no seen
-    * table, so its work is O(new URLs) at any seen count. Returns every
-    * shard's layers to publish — the manifest the NEXT round's probe reads. */
-  private def updateBlooms(scope: RoundScope, r: Int, freshBuckets: DataFrame,
-                           nFresh: Long, prior: Array[BloomLayers]): Future[Array[BloomLayers]] =
-    scope.track(Future(timed("bloom") {
-      if (nFresh == 0) prior else writeBucketBlooms(freshBuckets, r, prior)
-    })(ExecutionContext.global))
 
   /** The round's crawl-log rows: one per scheduled URL, 200 or 404. */
   private def crawlLogOf(r: Int, fetched: DataFrame): DataFrame =
@@ -803,38 +787,19 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
         $"fetched_404", $"discovered", lit(deduped).as("deduped"),
         lit(blocked).as("blocked"))
 
-  /** commit — ONE concurrent wave, then the atomic publish. The table
-    * writes, the seen-table append and the bloom update (already running)
-    * are independent jobs; the metadata rename lands only after every one
-    * of them — and a compaction round's artifact — is durable.
-    *
-    * Build order: wave 1's collect (`roundCounts`) has already built the
-    * four wave-1 caches once each, so the commit-wave jobs over `scheduled`,
-    * `fetched` and `fresh` (host_next, crawl_log, lineage, frontier) only
-    * read them. The seen append rebuilds nothing: no cached plan of the
-    * round reads the seen table (`fresh` is built from an RDD, see `gate`).
-    * The one cache built in this wave, `freshBuckets` (seen append and
-    * bloom update), is deliberately NOT materialized in a head job before
-    * its two consumers: a round-6 A/B
-    * that did so measured ~10% SLOWER at local[32] AND slower per-round at
-    * local[8] (xl, clean same-window pairs 58.1 vs 64.2 s @32) — in local
-    * mode the block manager's per-block write locks already serialize
-    * concurrent computation of the same cached partition (second job
-    * blocks, then reads), so the race costs little, while the head-job
-    * barrier + extra cache-read pass cost real wall clock. The INIT wave is
-    * the exception (see init): its seed cache parent is a driver-local
-    * relation racing the link-graph build, where the one-time
-    * materialization measured 19 s faster at local[8]. */
-  private def commit(scope: RoundScope, r: Int, freshBuckets: DataFrame,
-                     bloomFut: Future[Array[BloomLayers]],
+  /** commit — ONE concurrent wave, then the atomic publish. The four table
+    * writes are submitted first, in the background; the round's thread then
+    * runs the seen + bloom job (`appendSeen`), which takes no commit thread.
+    * The metadata rename lands only after every write — and a compaction
+    * round's artifact — is durable. Every wave-1 cache is built by now
+    * (`roundCounts`), the wave builds none, and the seen append re-caches
+    * nothing: no cached plan of the round reads the seen table (`gate`). */
+  private def commit(scope: RoundScope, r: Int, seenAndBlooms: () => Array[BloomLayers],
                      compactFut: Option[Future[Map[String, String]]],
                      tables: Map[String, DataFrame], metrics: Map[String, Long]): Unit = {
-    val seenFut = scope.track(Future {
-      timed("seen")(seen.append(freshBuckets, r, prePartitioned = true))
-    }(ExecutionContext.global))
-    val manifest = timed("commit")(store.writeTables(r, tables))
-    val blooms = timed("await-bloom")(Await.result(bloomFut, Duration.Inf))
-    timed("await-seen")(Await.result(seenFut, Duration.Inf))
+    val tablesFut = scope.track(Future(store.writeTables(r, tables))(ExecutionContext.global))
+    val blooms = timed("seen+bloom")(seenAndBlooms())
+    val manifest = timed("await-tables")(Await.result(tablesFut, Duration.Inf))
     val compactManifest = compactFut.map(f =>
       timed("await-compact")(Await.result(f, Duration.Inf))).getOrElse(Map.empty)
     timed("publish")(store.publish(r, manifest ++ compactManifest, metrics,

@@ -19,9 +19,9 @@ import org.apache.spark.sql.functions._
   *
   * Layout: one table per store root at `<root>/seen_bucketed`, schema
   * (canon STRING, round INT). Each round appends exactly one file per
-  * bucket (the append repartitions by `canon` with numBuckets partitions,
-  * so every task holds exactly one bucket's rows). Readers filter
-  * `round <= v` — this is also the crash story: an append that landed
+  * bucket (the append repartitions by `canon`, or its caller routes whole
+  * buckets to each task, so every bucket's rows are in one task). Readers
+  * filter `round <= v` — this is also the crash story: an append that landed
   * before a failed publish carries round r > committed version and is
   * invisible until round r actually commits; a re-run of round r appends
   * the same rows again, and the only consumer of committed duplicates is
@@ -78,10 +78,10 @@ class SeenTable(spark: SparkSession, location: String, shards: Int,
   }
 
   /** Append one round's new canons (one file per bucket).
-    * `prePartitioned = true` skips the repartition when the caller already
-    * holds the frame hash-partitioned by canon into `shards` partitions
-    * (the engine shares that one shuffle between the seen append and the
-    * bloom sidecar build). */
+    * `prePartitioned = true` skips the repartition when each of the
+    * caller's partitions already holds whole buckets (the engine's seen +
+    * bloom job routes buckets to its task slots and grows their blooms
+    * from the same rows). */
   def append(canons: DataFrame, round: Int, prePartitioned: Boolean = false): Unit = {
     val out0 = canons.select(col("canon"), lit(round).as("round"))
     val out =
@@ -95,8 +95,8 @@ class SeenTable(spark: SparkSession, location: String, shards: Int,
     // the seen bucket, so within-bucket order buys nothing — and the
     // sorted write's per-task sorter was measured not to scale with cores
     // (32 concurrent UnsafeExternalSorters contend in the kernel on this
-    // box; see the linkGraph write note). The append sorts NOTHING now:
-    // each task streams its bucket's rows straight into parquet.
+    // box; see the linkGraph write note). The writer sorts a task's rows
+    // only by bucket id, to write one file per bucket, never by canon.
     out.write.mode(mode).format("parquet")
       .option("compression", "zstd") // faster write + smaller scan (guide §6, A/B'd)
       .bucketBy(shards, "canon")

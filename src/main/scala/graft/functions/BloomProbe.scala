@@ -19,8 +19,8 @@ import org.apache.spark.util.sketch.BloomFilter
   * The shard column is the SEEN-TABLE BUCKET id (`pmod(hash(canon),
   * nShards)` — Spark's HashPartitioning/bucketBy function), so bloom
   * shards align 1:1 with the bucketed seen table and the round's sidecar
-  * update rides the same repartition as the seen append with no shuffle of
-  * its own (see FrontierEngine.writeBucketBlooms).
+  * update runs inside the seen append's write tasks, each of which owns
+  * whole buckets (see FrontierEngine.appendSeen).
   *
   * Why not Spark's `BloomFilterMightContain` with the serialized filter as
   * a binary literal: the filter bytes then live INSIDE the expression tree,

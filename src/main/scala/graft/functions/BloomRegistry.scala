@@ -35,37 +35,57 @@ object BloomLayers {
   def show(s: BloomLayers): String =
     if (s.vers.isEmpty) "-1" else s.vers.mkString(".") + ":" + s.fill
 
+  /** The layers `prior` keeps unchanged when keys are added: all of them
+    * if its newest layer is sealed, else all but that one. */
+  private def kept(prior: BloomLayers, base: Long): Int = {
+    val newest = prior.vers.length - 1
+    if (newest >= 0 && prior.fill < capacity(base, newest)) newest else newest + 1
+  }
+
+  /** The stack after round `r` adds `n` keys new to the shard: each layer
+    * takes keys up to its capacity, then the next opens; the layers that
+    * took keys get version `r`. Pure, so the driver plans a round's manifest
+    * from counts alone; `grow` follows it. */
+  def after(prior: BloomLayers, n: Long, base: Long, r: Int): BloomLayers =
+    if (n == 0) prior else {
+      val k = kept(prior, base)
+      var layer = k
+      var fill = if (k < prior.vers.length) prior.fill else 0L
+      var left = n
+      while (fill + left > capacity(base, layer)) {
+        left -= capacity(base, layer) - fill
+        layer += 1
+        fill = 0
+      }
+      BloomLayers(prior.vers.take(k) ++ Array.fill(layer + 1 - k)(r), fill + left)
+    }
+
   /** Adds `keys`, new to the shard, to its stack as of round `r`, inside the
-    * task that holds them: the newest layer is read back unless sealed, and
-    * each time a layer reaches its capacity it is written and the next one
-    * opened. Only the layers this round wrote take version `r`; sealed ones
-    * keep theirs. The keys must be distinct and unseen, which keeps `fill`
-    * exact. */
+    * task that holds them: the newest layer is read back unless sealed, each
+    * layer takes the keys `after` plans for it, and each is then written.
+    * Throws unless there are exactly `n` keys, the count the manifest was
+    * planned from. Distinct, unseen keys keep `fill` exact. */
   def grow(store: SnapshotStore, r: Int, base: Long, shard: Int,
-           prior: BloomLayers, keys: Iterator[Long]): BloomLayers = {
-    var layer = prior.vers.length - 1
-    var fill = prior.fill
-    val reopen = layer >= 0 && fill < capacity(base, layer)
-    val kept = if (reopen) layer else layer + 1
-    var bf = if (!reopen) null
-      else BloomFilter.readFrom(store.readBlob(prior.vers(layer), blobName(shard, layer)))
-    def write(): Unit = {
+           prior: BloomLayers, n: Long, keys: Array[Long]): BloomLayers = {
+    if (keys.length != n) throw new IllegalStateException(
+      s"bloom shard $shard of round $r holds ${keys.length} new keys, but the manifest " +
+        s"was planned for $n")
+    val out = after(prior, n, base, r)
+    var next = 0
+    if (n > 0) for (layer <- kept(prior, base) until out.vers.length) {
+      val reopen = layer < prior.vers.length
+      val bf = if (reopen)
+          BloomFilter.readFrom(store.readBlob(prior.vers(layer), blobName(shard, layer)))
+        else BloomFilter.create(capacity(base, layer), fpp(layer))
+      val from = if (reopen) prior.fill else 0L
+      val to = if (layer == out.vers.length - 1) out.fill else capacity(base, layer)
+      val end = next + (to - from).toInt
+      while (next < end) { bf.putLong(keys(next)); next += 1 }
       val bos = new java.io.ByteArrayOutputStream()
       bf.writeTo(bos)
       store.writeBlob(r, blobName(shard, layer), bos.toByteArray)
     }
-    keys.foreach { k =>
-      if (bf == null || fill >= capacity(base, layer)) {
-        if (bf != null) write()
-        layer += 1
-        fill = 0
-        bf = BloomFilter.create(capacity(base, layer), fpp(layer))
-      }
-      bf.putLong(k)
-      fill += 1
-    }
-    if (bf != null) write()
-    BloomLayers(prior.vers.take(kept) ++ Array.fill(layer + 1 - kept)(r), fill)
+    out
   }
 }
 

@@ -1,5 +1,6 @@
 package graft.snapshots
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
@@ -90,14 +91,15 @@ class SnapshotStore(val root: String,
       val p = dataDir(v, name)
       Future {
         val t0 = System.nanoTime()
-        withRetry(s"table write $name/v$v") {
+        withRetry(s"table write $name/v$v")(SnapshotStore.described(df.sparkSession.sparkContext,
+            s"write $name") {
           // zstd across all snapshot tables: measured faster to WRITE than
           // the snappy default on this box (parquet-zstd level 1) and ~37%
           // smaller, and every table is re-read in later rounds (pending
           // union, crawl-log anti set) where smaller bytes win again —
           // the guide §6 recommendation, confirmed by A/B probe.
           df.write.mode("overwrite").option("compression", "zstd").parquet(p)
-        }
+        })
         if (sys.env.contains("SPARK_GRAFT_PHASE_LOG"))
           System.err.println(f"[phase]   write $name/v$v: ${(System.nanoTime() - t0) / 1e9}%.2f s")
         name -> p
@@ -207,4 +209,14 @@ class SnapshotStore(val root: String,
     storage.readBytes(s"$root/blobs/v$v/$name")
   def blobExists(v: Int, name: String): Boolean =
     storage.exists(s"$root/blobs/v$v/$name")
+}
+
+object SnapshotStore {
+  /** Runs `body` with `what` as the description of the Spark jobs it (and
+    * the AQE and broadcast jobs they start) submits from this thread. */
+  def described[T](sc: SparkContext, what: String)(body: => T): T = {
+    val prior = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(what)
+    try body finally sc.setJobDescription(prior)
+  }
 }

@@ -25,10 +25,10 @@ class BloomSpec extends SparkSuite {
   private def freshStore() =
     new SnapshotStore(java.nio.file.Files.createTempDirectory("bloom-store").toString)
 
-  /** Production build shape (FrontierEngine.writeBucketBlooms): repartition
-    * by canon into buckets and grow each bucket's layers inside its task,
-    * as round `r` of `store`. Returns the descriptor a round would
-    * broadcast. */
+  /** Production build shape (FrontierEngine.appendSeen, one bucket a
+    * task): repartition by canon into buckets and grow each bucket's layers
+    * inside its task, as round `r` of `store`. Returns the descriptor a
+    * round would broadcast. */
   private def storeShards(urls: Seq[String], base: Long = 4096L,
                           store: SnapshotStore = freshStore(), r: Int = 0,
                           prior: Array[BloomLayers] = Array.fill(nShards)(BloomLayers.empty)
@@ -38,9 +38,9 @@ class BloomSpec extends SparkSuite {
       .repartition(nShards, $"canon")
       .as[String]
       .rdd.mapPartitionsWithIndex { case (pid, it) =>
-        if (!it.hasNext) Iterator.empty
-        else Iterator.single(
-          pid -> BloomLayers.grow(st, r, b, pid, p(pid), it.map(UrlCanon.urlKey64)))
+        val keys = it.map(UrlCanon.urlKey64).toArray
+        if (keys.isEmpty) Iterator.empty
+        else Iterator.single(pid -> BloomLayers.grow(st, r, b, pid, p(pid), keys.length, keys))
       }.collect().toMap
     BloomDesc(store, Array.tabulate(nShards)(k => grown.getOrElse(k, prior(k))))
   }
@@ -105,10 +105,80 @@ class BloomSpec extends SparkSuite {
     assert(BloomLayers.show(BloomLayers.empty) === "-1")
     // the next key after a sealed flat layer opens layer 1
     val store = freshStore()
-    val grown = BloomLayers.grow(store, 9, 16L, 0, flat, Iterator(1L))
+    val grown = BloomLayers.grow(store, 9, 16L, 0, flat, 1, Array(1L))
     assert(grown.vers.toSeq === Seq(7, 9) && grown.fill === 1L)
     assert(store.blobExists(9, BloomLayers.blobName(0, 1)) &&
       !store.blobExists(9, BloomLayers.blobName(0, 0)), "a sealed layer was rewritten")
+  }
+
+  test("the manifest planned from counts equals what grow writes, over random rounds") {
+    // the driver publishes `after(prior, n)` without hearing from the tasks,
+    // so it must be exactly the stack `grow` leaves: same versions, same
+    // fill, one blob per layer given the round's version, none for the rest
+    val rnd = new scala.util.Random(11L)
+    val base = 4L
+    val store = freshStore()
+    var several = 0
+    (0 until 6).foreach { shard =>
+      var prior = if (shard % 2 == 0) BloomLayers.empty else BloomLayers.parse("0", base)
+      (1 to 12).foreach { r =>
+        // mostly a few keys, sometimes enough to open several layers at once
+        val n = if (rnd.nextInt(4) == 0) rnd.nextInt(40).toLong else rnd.nextInt(6).toLong
+        val keys = Array.fill(n.toInt)(rnd.nextLong())
+        val planned = BloomLayers.after(prior, n, base, r)
+        val grown = BloomLayers.grow(store, r, base, shard, prior, n, keys)
+        assert(BloomLayers.show(planned) === BloomLayers.show(grown),
+          s"shard $shard round $r, n $n")
+        def held(s: BloomLayers) =
+          (0 until s.vers.length - 1).map(BloomLayers.capacity(base, _)).sum +
+            (if (s.vers.isEmpty) 0L else s.fill)
+        assert(held(grown) === held(prior) + n, s"shard $shard round $r: count")
+        grown.vers.indices.foreach { i =>
+          assert(store.blobExists(r, BloomLayers.blobName(shard, i)) === (grown.vers(i) == r),
+            s"shard $shard round $r layer $i: " +
+              s"${BloomLayers.show(prior)} -> ${BloomLayers.show(grown)}")
+        }
+        if (grown.vers.count(_ == r) >= 3) several += 1
+        prior = grown
+      }
+    }
+    assert(several > 0, "no round opened several layers")
+  }
+
+  test("a bucket holding another count of keys than planned throws and writes nothing") {
+    val store = freshStore()
+    val err = intercept[IllegalStateException](
+      BloomLayers.grow(store, 3, 16L, 5, BloomLayers.empty, 4, Array(1L, 2L, 3L)))
+    assert(err.getMessage.contains("planned for 4"), err.getMessage)
+    assert(!store.blobExists(3, BloomLayers.blobName(5, 0)))
+  }
+
+  test("a round writes exactly one blob per bloom layer it touched") {
+    // each layer a round changes is written by the one task that owns its
+    // bucket, once: a second computation of the seen + bloom partitions (a
+    // re-run job, a racing stage) would write more blobs than touched layers
+    import graft.frontier.{EngineConfig, FrontierEngine}
+    import graft.model.DocSynth
+    val shards = 8
+    val base = 16L
+    val root = java.nio.file.Files.createTempDirectory("bloom-count").toString
+    val store = new SnapshotStore(root, storage = new BlobCountingStorage)
+    val engine = new FrontierEngine(spark, store,
+      EngineConfig(perHostBudget = 3, seenShards = shards, bloomCapacity = shards * base))
+    val cfg = DocSynth.Config(nHosts = 10, pagesPerHost = 20, hotFactor = 3,
+      linksPerDoc = 5, seed = 7L)
+    engine.run(DocSynth.docs(spark, cfg).toDF(), DocSynth.seeds(cfg), 5)
+    val last = store.currentVersion.get
+    assert(last >= 3, "crawl too short")
+    val BlobWrite = (java.util.regex.Pattern.quote(root) + "/blobs/v(\\d+)/").r.unanchored
+    val written = BlobCountingStorage.paths.collect { case BlobWrite(v) => v.toInt }
+      .groupBy(identity).map { case (v, ws) => v -> ws.size }
+    (0 to last).foreach { v =>
+      val touched = store.readProps(v)("bloom_vers").split(",")
+        .map(BloomLayers.parse(_, base).vers.count(_ == v)).sum
+      assert(touched > 0, s"v$v touched no layer")
+      assert(written.getOrElse(v, 0) === touched, s"v$v: blob writes vs touched layers")
+    }
   }
 
   test("bucket routing agrees: writer partition == probe shard == bucketOf") {
@@ -217,5 +287,22 @@ class BloomSpec extends SparkSuite {
     val c = BloomRegistry.load(BloomDesc(desc.store, v1), touched, 1)
     assert(!(b eq c), "a second layer must not alias the first")
     assert(BloomRegistry.cachedCount === before + 2)
+  }
+}
+
+/** Healthy storage that records the path of every file it writes, JVM-wide:
+  * tasks write through deserialized copies of the store. */
+class BlobCountingStorage extends graft.snapshots.HadoopStorage {
+  override def writeBytes(path: String, bytes: Array[Byte]): Unit = {
+    super.writeBytes(path, bytes)
+    BlobCountingStorage.written.add(path)
+  }
+}
+
+object BlobCountingStorage {
+  private val written = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  def paths: Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    written.asScala.toSeq
   }
 }

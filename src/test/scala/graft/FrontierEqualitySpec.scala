@@ -226,8 +226,9 @@ class FrontierEqualitySpec extends SparkSuite {
 
   test("a round that fails in its commit wave leaks no caches or jobs; resume ≡ oracle") {
     // round 1 fails twice before it succeeds: first its bloom sidecar writes
-    // fail (one attempt, no retry) after the table writes, then its table
-    // writes fail while the seen append and bloom update are still running
+    // fail (one attempt, no retry) inside the seen + bloom job's write
+    // tasks, so the seen append fails with them, then its table writes fail
+    // while the seen + bloom job is still running
     val root = Files.createTempDirectory("graft-fail").toString
     val docs = DocSynth.docs(spark, cfg).toDF().cache()
     docs.count() // the test's own cache, materialized before the baseline

@@ -7,32 +7,39 @@ import scala.collection.mutable
 import org.apache.spark.graft.{CachedPlans, ListenerDrain}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated,
   SparkListenerJobStart, SparkListenerStageSubmitted}
+import org.apache.spark.sql.functions.input_file_name
 import org.apache.spark.storage.RDDBlockId
+import org.apache.spark.util.sketch.BloomFilter
 
+import graft.canon.UrlCanon
 import graft.frontier.{EngineConfig, FrontierEngine}
+import graft.functions.BloomLayers
 import graft.model.DocSynth
 import graft.oracle.OracleCrawler
 import graft.snapshots.SnapshotStore
 
-/** How a round builds its caches, read from Spark's listener events. A
-  * round names every cache it makes (`RoundScope.cache`), so each one's
-  * RDD is "In-memory table <name>" in the stage records. The wave-1 caches
-  * must each be built by one stage, before any stage reads a cache of the
-  * commit wave (those are made from the collect's counts), and no cached
-  * plan may read the seen table while the round runs: the seen append's
-  * write re-caches every such plan, dropping a cache that commit-wave jobs
-  * still read, so with none it rebuilds nothing.
+/** How a round builds its caches and writes its seen buckets, read from
+  * Spark's listener events and the files. A round names every cache it
+  * makes (`RoundScope.cache`), so each one's RDD is "In-memory table
+  * <name>" in the stage records. The wave-1 caches must each be built by
+  * one stage, before the first commit-wave job starts (each job carries
+  * its engine step as its description), and no cached plan may read the
+  * seen table while the round runs: the seen append's write re-caches
+  * every such plan, dropping a cache that commit-wave jobs still read, so
+  * with none it rebuilds nothing.
   *
   * The suite's session shuffles to as many partitions as it has task
   * slots, where narrowing a cache to the slots changes nothing; these
   * tests shuffle (and bucket the seen set) twice as wide, so every wave-1
-  * cache is coalesced below its plan's width.
+  * cache is coalesced below its plan's width, and each seen + bloom task
+  * owns two buckets.
   */
 class RoundCacheSpec extends SparkSuite {
   import spark.implicits._
 
   private val Prefix = "In-memory table "
   private val Wave1 = Seq("scheduled", "fetched", "links", "fresh")
+  private val Wave1Jobs = Set("schedule+discover", "counts")
   private val cfg = DocSynth.Config(nHosts = 12, pagesPerHost = 30, hotFactor = 5,
     linksPerDoc = 6, seed = 42L)
   private val budget = 3
@@ -64,7 +71,8 @@ class RoundCacheSpec extends SparkSuite {
     val widthOf = mutable.Map.empty[Int, Int]            // its partitions
     val submitted = mutable.Map.empty[Int, Vector[Long]] // stages whose lineage holds it
     val lastStored = mutable.Map.empty[Int, Long]        // its last block store
-    var wave2At = Long.MaxValue                          // first stage over a commit cache
+    var wave2At = Long.MaxValue                          // first commit-wave job
+    val seenTasks = mutable.Buffer.empty[Int]            // seen + bloom jobs' last stage
     val overSeen = mutable.Set.empty[String]             // cached plans reading seen
     val listener = new SparkListener {
       override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = {
@@ -74,7 +82,6 @@ class RoundCacheSpec extends SparkSuite {
           nameOf(i.id) = name
           widthOf(i.id) = i.numPartitions
           submitted(i.id) = submitted.getOrElse(i.id, Vector.empty) :+ seq
-          if (!Wave1.contains(name)) wave2At = math.min(wave2At, seq)
         }
       }
       override def onBlockUpdated(e: SparkListenerBlockUpdated): Unit = {
@@ -86,6 +93,9 @@ class RoundCacheSpec extends SparkSuite {
       }
       override def onJobStart(e: SparkListenerJobStart): Unit = {
         seq += 1
+        val step = Option(e.properties).map(_.getProperty("spark.job.description", "")).orNull
+        if (!Wave1Jobs.contains(step)) wave2At = math.min(wave2At, seq)
+        if (step == "seen+bloom") seenTasks += e.stageInfos.maxBy(_.stageId).numTasks
         overSeen ++= CachedPlans(spark).filter(_.treeString.contains("graft_seen_"))
           .map(_.treeString.linesIterator.next())
       }
@@ -107,10 +117,11 @@ class RoundCacheSpec extends SparkSuite {
       s"  $n: rdd ${ids.mkString(",")} of ${ids.map(widthOf).mkString(",")} partitions, " +
         s"${ids.map(builders).mkString(",")} building stage(s), " +
         s"last block at ${ids.map(lastStored.getOrElse(_, 0L)).mkString(",")}"
-    }.mkString("\n") + s"\n  the commit wave's first stage at $wave2At"
+    }.mkString("\n") + s"\n  the commit wave's first job at $wave2At" +
+      s"\n  seen + bloom jobs' write tasks: ${seenTasks.mkString(",")}"
     info(report)
 
-    assert(wave2At < Long.MaxValue, s"no stage read a commit-wave cache:\n$report")
+    assert(wave2At < Long.MaxValue, s"no commit-wave job started:\n$report")
     assert(overSeen.isEmpty,
       s"cached plans read the seen table during the round: ${overSeen.mkString("; ")}")
     byName.foreach { case (n, ids) => assert(ids.size === 1, s"cache $n was rebuilt:\n$report") }
@@ -120,8 +131,9 @@ class RoundCacheSpec extends SparkSuite {
       assert(lastStored(id) < wave2At, s"cache $n was still being built in the commit wave:\n$report")
       assert(widthOf(id) === sc.defaultParallelism, s"cache $n is not one partition per slot:\n$report")
     }
-    // partition id == bucket id == bloom shard: the append's cache stays wide
-    assert(widthOf(byName("freshBuckets").head) === Wide, report)
+    assert(byName.keySet === Wave1.toSet, s"the commit wave cached a frame:\n$report")
+    // one seen + bloom job, one task per slot, each owning whole buckets
+    assert(seenTasks === Seq(sc.defaultParallelism), report)
     docs.unpersist()
   }}
 
@@ -137,6 +149,42 @@ class RoundCacheSpec extends SparkSuite {
       (e.round, e.fetchTime, e.host, e.canon, e.depth, e.seq, e.status)),
       "crawl with narrowed caches diverges from oracle")
     assert(engine.seenSet().select($"canon").as[String].collect().toSet === o.seen)
+
+    // each round's append wrote at most one file per bucket, holding only
+    // that bucket's canons, though every task owned two buckets
+    val Bucket = "_(\\d{5})\\.c\\d{3}".r.unanchored
+    val rows = spark.read.parquet(s"${engine.storeRoot}/seen_bucketed")
+      .select($"round", $"canon", input_file_name().as("file"))
+      .as[(Int, String, String)].collect()
+    assert(rows.map(_._1).distinct.sorted.toSeq === (0 to 8))
+    rows.groupBy(_._1).foreach { case (r, inRound) =>
+      val files = inRound.map(_._3).distinct
+      val buckets = files.map { case Bucket(b) => b.toInt; case f => fail(s"no bucket id: $f") }
+      assert(buckets.distinct.length === files.length, s"round $r wrote a bucket twice")
+    }
+    rows.foreach { case (r, c, Bucket(b)) =>
+      assert(UrlCanon.bucketOf(c, Wide) === b.toInt, s"round $r: $c in bucket file $b")
+    }
+
+    // each shard's layers hold its bucket's canons and no other bucket's:
+    // every own canon probes true, and foreign canons only at the layers'
+    // false-positive rate (a filter grown from two buckets would pass all)
+    val store = new SnapshotStore(engine.storeRoot)
+    val last = store.currentVersion.get
+    val shards = store.readProps(last)("bloom_vers").split(",")
+      .map(BloomLayers.parse(_, EngineConfig().bloomCapacity / Wide))
+    val byBucket = o.seen.toSeq.groupBy(UrlCanon.bucketOf(_, Wide))
+    var foreignHits, foreign = 0L
+    shards.zipWithIndex.foreach { case (s, k) =>
+      val layers = s.vers.indices.map(i =>
+        BloomFilter.readFrom(store.readBlob(s.vers(i), BloomLayers.blobName(k, i))))
+      def hit(c: String) = layers.exists(_.mightContainLong(UrlCanon.urlKey64(c)))
+      byBucket.getOrElse(k, Nil).foreach(c => assert(hit(c), s"shard $k lost $c"))
+      val others = byBucket.filter(_._1 != k).values.flatten
+      foreignHits += others.count(hit)
+      foreign += others.size
+    }
+    assert(foreignHits <= foreign * 0.05, s"$foreignHits of $foreign foreign canons probe true")
     docs.unpersist()
   }}
 }

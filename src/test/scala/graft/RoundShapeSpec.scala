@@ -20,7 +20,8 @@ import graft.snapshots.SnapshotStore
   */
 class RoundShapeSpec extends SparkSuite {
 
-  /** The jobs (each named by its last stage), the completed stages' (name,
+  /** The jobs (each named by the engine step that submitted it, its job
+    * description, and by its last stage), the completed stages' (name,
     * tasks, RDD names), and how many of those stages scanned the seen
     * table's files, of `body`. */
   private def shapeOf(body: => Unit): (Seq[String], Seq[(String, Int, Seq[String])], Int) = {
@@ -30,7 +31,8 @@ class RoundShapeSpec extends SparkSuite {
     val seenScans = new java.util.concurrent.atomic.AtomicInteger()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.add(e.stageInfos.maxBy(_.stageId).name)
+        jobs.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse("-") + " | " + e.stageInfos.maxBy(_.stageId).name)
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
         val si = e.stageInfo
         // a stage lists the narrow lineage of the caches it reads too; only
@@ -65,6 +67,7 @@ class RoundShapeSpec extends SparkSuite {
     val jobs = jobNames.size
     val tasks = stages.map(_._2).sum
     val shape = s"$jobs jobs, ${stages.size} stages, $tasks tasks:\n" +
+      jobNames.map(j => s"  job  $j").mkString("\n") + "\n" +
       stages.map { case (n, t, rdds) => s"  $t  $n  ${rdds.mkString(",")}" }.mkString("\n")
     // a parquet read without a schema lists one footer in a 1-task job over
     // a parallelized file list; the engine names the schema of every table
@@ -72,20 +75,17 @@ class RoundShapeSpec extends SparkSuite {
     val inference = stages.filter { case (_, t, rdds) =>
       t == 1 && rdds.exists(_.startsWith("ParallelCollectionRDD")) }
     assert(inference.isEmpty, s"schema-inference jobs ran:\n$shape")
-    info(shape.linesIterator.next())
-    // pinned at the most this round submitted over eight runs at local[32]
-    // (24/26/592 jobs/stages/tasks six times, 25/27/593 twice) plus one
-    // 1-task job: the wave-1 caches are built before the commit
-    // (RoundCacheSpec), but whether a commit-wave job finds `freshBuckets`
-    // already built, and so skips a stage, depends on timing. One stage
-    // more than before the wave-1 caches were built once: the round's
-    // collect also aggregates `fetched` (its 200/404 split). 31 tasks more
-    // since lineage counts the new entries from `fresh`, one partition per
-    // slot (32 here), not from `newEntries`, which is no longer cached and
-    // has `writeWidth` partitions (1 here); 24/26/623 in five runs
-    assert(jobs <= 26, shape)
-    assert(stages.size <= 28, shape)
-    assert(tasks <= 624, shape)
+    info(shape)
+    // the seen append and the bloom update are one job (`appendSeen`),
+    // whose write stage has a task per slot (32 here, one bucket each)
+    assert(jobNames.count(_.startsWith("seen+bloom ")) === 1, shape)
+    // pinned at the most this round submitted over five runs at local[32]
+    // (20/23/527 jobs/stages/tasks every time) plus one 1-task job. The
+    // seen append reads no cache, so AQE never adds a job to build one, and
+    // its count does not depend on timing
+    assert(jobs <= 21, shape)
+    assert(stages.size <= 24, shape)
+    assert(tasks <= 528, shape)
     docs.unpersist()
   }
 
@@ -93,9 +93,7 @@ class RoundShapeSpec extends SparkSuite {
     // a shard grows inside the task that adds the round's new canons to it,
     // so a round that opens layers submits the same jobs as one that does
     // not, and scans the seen table only where `fresh` is built: no job
-    // rescans the seen set to resize the filters (a capacity rebuild did).
-    // The seen append's own jobs are left out of the count: it runs one or
-    // two `saveAsTable` jobs depending on timing, at any capacity
+    // rescans the seen set to resize the filters (a capacity rebuild did)
     val cfg = DocSynth.Config(nHosts = 12, pagesPerHost = 30, hotFactor = 5,
       linksPerDoc = 6, seed = 42L)
     val docs = DocSynth.docs(spark, cfg).toDF().cache()
@@ -106,10 +104,10 @@ class RoundShapeSpec extends SparkSuite {
         seenShards = shards, bloomCapacity = bloomCapacity))
       engine.run(docs, DocSynth.seeds(cfg), 3)
       val (jobNames, stages, seenScans) = shapeOf(assert(engine.runRound(docs, 4) > 0))
-      val jobs = jobNames.count(!_.contains("SeenTable.scala"))
+      val jobs = jobNames.size
       def layers(v: Int) = store.readProps(v)("bloom_vers").split(",")
         .map(BloomLayers.parse(_, bloomCapacity / shards).vers.length).toSeq
-      (jobs, seenScans, s"$jobs jobs besides the seen append, ${stages.size} stages, " +
+      (jobs, seenScans, s"$jobs jobs, ${stages.size} stages, " +
         s"$seenScans seen scans", layers(3), layers(4))
     }
     val (tinyJobs, tinyScans, tiny, before, after) = round4(16L * shards)

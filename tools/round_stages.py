@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""Print a crawl round's or a catalog query's Spark stage timeline from a crawlbench trace.
+"""Print a crawl round's, set-up's or catalog query's Spark stage timeline from a crawlbench trace.
 
 A traced benchmark run (`python3 crawlbench/run.py --workload frontier-wide
 --trace 1`, or `--workload catalog`) writes
@@ -15,6 +15,13 @@ stage covered (idle) and the stage count.
     python3 tools/round_stages.py crawlbench/out/frontier-wide-seed21-trace1.trace.jsonl
     python3 tools/round_stages.py --round 2 --totals before.trace.jsonl after.trace.jsonl
     python3 tools/round_stages.py --query d4_ngram_jaccard crawlbench/out/catalog-seed1-trace1.trace.jsonl
+    python3 tools/round_stages.py --setup 2 --totals before.trace.jsonl after.trace.jsonl
+
+A frontier run records three set-up spans, and `--setup N` prints the N-th,
+counting from 1 in start order. Each builds the link graph and writes
+snapshot 0. The first is the measured crawl's own; `setup_s` is the median
+of the second and third, on fresh stores after round 1 and after the last
+round.
 
 A catalog run times each query twice (two passes, the second in reverse
 order); `--query` prints both, labelled `NAME#1` and `NAME#2`. With several
@@ -37,9 +44,14 @@ def load(path):
     return spans, stages
 
 
-def ops_of(spans, run, rnd, query):
+def ops_of(spans, run, rnd, query, setup):
     """The (label, span) of each selected operation, in start order: a
-    catalog query's timed passes, or the crawl's rounds (all, or one)."""
+    catalog query's timed passes, the N-th set-up, or the crawl's rounds
+    (all, or one)."""
+    if setup is not None:
+        out = sorted((s for s in spans if s["name"] == "setup" and s["run"] == run),
+                     key=lambda s: s["start_ms"])
+        return [(str(setup), out[setup - 1])] if 1 <= setup <= len(out) else []
     if query is not None:
         out = [s for s in spans if s["name"] == "query" and s["run"] == run
                and s["detail"] == query]
@@ -112,19 +124,21 @@ def main():
                        help="only this crawl round (default: every round)")
     which.add_argument("--query", default=None,
                        help="this catalog query's timed passes instead of rounds")
+    which.add_argument("--setup", type=int, default=None,
+                       help="the N-th set-up (from 1, in start order) instead of rounds")
     ap.add_argument("--run", type=int, default=0,
                     help="span run id (0 = the measured crawl; default 0)")
     ap.add_argument("--totals", action="store_true",
                     help="one totals row per file and round instead of timelines")
     a = ap.parse_args()
-    kind = "round" if a.query is None else "query"
+    kind = "query" if a.query is not None else "setup" if a.setup is not None else "round"
     width = 5 if a.query is None else len(a.query) + 2
     if a.totals:
         print(f"{'trace':<48} {kind:>{width}} " + " ".join(f"{c:>8}" for c in TOTAL_COLS))
     found = False
     for path in a.traces:
         spans, stages = load(path)
-        for label, op in ops_of(spans, a.run, a.round, a.query):
+        for label, op in ops_of(spans, a.run, a.round, a.query, a.setup):
             found = True
             mine = sorted((s for s in stages
                            if op["start_ms"] <= s["submitted_ms"] <= op["end_ms"]),
