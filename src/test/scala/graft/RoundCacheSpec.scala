@@ -74,6 +74,7 @@ class RoundCacheSpec extends SparkSuite {
     var wave2At = Long.MaxValue                          // first commit-wave job
     val seenTasks = mutable.Buffer.empty[Int]            // seen + bloom jobs' last stage
     val overSeen = mutable.Set.empty[String]             // cached plans reading seen
+    val overLinks = mutable.Set.empty[String]            // ... the link-graph table
     val listener = new SparkListener {
       override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = {
         seq += 1
@@ -97,6 +98,8 @@ class RoundCacheSpec extends SparkSuite {
         if (!Wave1Jobs.contains(step)) wave2At = math.min(wave2At, seq)
         if (step == "seen+bloom") seenTasks += e.stageInfos.maxBy(_.stageId).numTasks
         overSeen ++= CachedPlans(spark).filter(_.treeString.contains("graft_seen_"))
+          .map(_.treeString.linesIterator.next())
+        overLinks ++= CachedPlans(spark).filter(_.treeString.contains("graft_links_"))
           .map(_.treeString.linesIterator.next())
       }
     }
@@ -124,6 +127,10 @@ class RoundCacheSpec extends SparkSuite {
     assert(wave2At < Long.MaxValue, s"no commit-wave job started:\n$report")
     assert(overSeen.isEmpty,
       s"cached plans read the seen table during the round: ${overSeen.mkString("; ")}")
+    // the schedule broadcasts here, so fetch and discover read the link
+    // graph's files by splits, not the bucketed table (a task per bucket)
+    assert(overLinks.isEmpty,
+      s"cached plans read the bucketed link graph: ${overLinks.mkString("; ")}")
     byName.foreach { case (n, ids) => assert(ids.size === 1, s"cache $n was rebuilt:\n$report") }
     Wave1.foreach { n =>
       val id = byName.getOrElse(n, fail(s"no cache named $n was built:\n$report")).head
