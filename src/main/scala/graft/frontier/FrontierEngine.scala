@@ -5,7 +5,7 @@ import scala.concurrent.duration.Duration
 
 import org.apache.spark.HashPartitioner
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.types.StructType
@@ -112,8 +112,9 @@ case class EngineConfig(
   *     ≤ partitions×B rows to the exact per-host top-B window
   *     (Schedulers.windowTopB).
   *   - the corpus is projected ONCE PER CRAWL to a (doc_id, links) link
-  *     graph, written as a BUCKETED table CLUSTERED BY doc_id; per-round
-  *     fetch joins touch that slim table — never the 100 TB doc table.
+  *     graph, a BUCKETED table CLUSTERED BY doc_id (write tasks =
+  *     min(buckets, slots), files = buckets); per-round fetch joins touch
+  *     that slim table — never the 100 TB doc table.
   *     Whether the schedule and host_next joins broadcast is Spark's own
   *     rule: size estimate against `spark.sql.autoBroadcastJoinThreshold`
   *     (driver-side, no job). host_next carries no hint, so the planner
@@ -236,33 +237,40 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
     * above the plan's own partition count changes nothing. */
   private def cacheWidth: Int = spark.sparkContext.defaultParallelism
 
+  /** Routes whole buckets to tasks, the layout both bucketed writes take:
+    * every row of bucket b (`bucketOf`) goes to partition b mod n, n =
+    * min(seenShards, slots). The bucketed writer sorts each task's rows by
+    * bucket id, so a write keeps one file per bucket at any n. */
+  private def bucketTasks: Int = math.min(cfg.seenShards, cacheWidth)
+  private def bucketOf(key: Column): Column = pmod(hash(key), lit(cfg.seenShards))
+  private def byBucket(df: DataFrame, bucket: Column): DataFrame =
+    df.repartitionById(bucketTasks, bucket % bucketTasks)
+
   /** The seen append and the bloom update as ONE job (`seen+bloom`) whose
-    * tasks each own whole buckets: `keyed`'s (bshard, canon) rows route by
-    * bucket to min(seenShards, slots) partitions, as `assignSeqs` routes seq
-    * shards. Each task grows each bucket's bloom stack from its sorted keys
-    * (`BloomLayers.grow`, so no layer depends on row order), then hands the
-    * canons to the bucketed writer: one seen file per bucket. The manifest
-    * is planned from the driver's counts (`BloomLayers.after`), and a bucket
-    * holding another count throws, so it never depends on what tasks return
-    * or how often Spark computes them. The canons must be new to the seen
-    * set. Returns every shard's layers. */
+    * tasks each own whole buckets (`byBucket`, planned without adaptive
+    * execution so the route runs inside the write's job). Each task grows
+    * each bucket's bloom stack from its sorted keys (`BloomLayers.grow`, so
+    * no layer depends on row order), then hands the canons to the bucketed
+    * writer: one seen file per bucket. The manifest is planned from the
+    * driver's counts (`BloomLayers.after`), and a bucket holding another
+    * count throws, so it never depends on what tasks return or how often
+    * Spark computes them. The canons must be new to the seen set. Returns
+    * every shard's layers. */
   private def appendSeen(keyed: DataFrame, r: Int, prior: Array[BloomLayers],
                          perBucket: Array[Long]): Array[BloomLayers] = {
-    val (st, base, shards) = (store, layerBase, cfg.seenShards)
-    val owner = new HashPartitioner(math.min(shards, cacheWidth))
-    val canons = keyed.select($"bshard", $"canon").as[(Int, String)].rdd
-      .partitionBy(owner)
-      .mapPartitionsWithIndex { case (pid, it) =>
-        val byBucket = it.toArray.groupBy(_._1)
-        (0 until shards).iterator.filter(owner.getPartition(_) == pid).flatMap { k =>
-          val rows = byBucket.getOrElse(k, Array.empty[(Int, String)]).map(_._2)
-          val keys = rows.map(UrlCanon.urlKey64)
-          java.util.Arrays.sort(keys)
-          BloomLayers.grow(st, r, base, k, prior(k), perBucket(k), keys)
-          rows.iterator
-        }
+    val (st, base, shards, n) = (store, layerBase, cfg.seenShards, bucketTasks)
+    val routed = bridge.detach(byBucket(keyed.select($"bshard", $"canon"), $"bshard"))._1
+    val canons = routed.as[(Int, String)].rdd.mapPartitionsWithIndex { case (pid, it) =>
+      val byBucket = it.toArray.groupBy(_._1)
+      (pid until shards by n).iterator.flatMap { k =>
+        val rows = byBucket.getOrElse(k, Array.empty[(Int, String)]).map(_._2)
+        val keys = rows.map(UrlCanon.urlKey64)
+        java.util.Arrays.sort(keys)
+        BloomLayers.grow(st, r, base, k, prior(k), perBucket(k), keys)
+        rows.iterator
       }
-    described("seen+bloom")(seen.append(canons.toDF("canon"), r, prePartitioned = true))
+    }
+    described("seen+bloom")(seen.append(canons.toDF("canon"), r))
     Array.tabulate(shards)(k => BloomLayers.after(prior(k), perBucket(k), base, r))
   }
 
@@ -284,7 +292,9 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
     * crawl's largest table, twice per round; with the bucketing metadata it
     * scans in place and ONLY the skinny schedule shuffles (`joinSides`).
     * Bucket count = seenShards = shuffle.partitions, so the scan's
-    * HashPartitioning satisfies the join's distribution exactly.
+    * HashPartitioning satisfies the join's distribution exactly. Write
+    * tasks = min(buckets, slots), each owning whole buckets (`byBucket`);
+    * files = buckets, so a read never depends on the writing cluster.
     *
     * MEMOIZED + synchronized per engine: `run()` kicks the build off
     * concurrently with `init` (the two are independent — init writes the
@@ -335,7 +345,7 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
       docs.select($"doc_id",
           filter(zip_with($"spans.kind", $"spans.media_ref",
             (k, m) => when(k === "link", m)), x => x.isNotNull).as("links"))
-        .repartition(cfg.seenShards, $"doc_id")
+        .transform(byBucket(_, bucketOf($"doc_id")))
         .write.format("parquet")
         .option("compression", "zstd")
         .bucketBy(cfg.seenShards, "doc_id")
@@ -378,10 +388,12 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
     val frontier = canonSeeds.zipWithIndex.map { case (c, i) =>
       (c, UrlCanon.hostOf(c), 0, i.toLong, 0)
     }.toDF("canon", "host", "depth", "seq", "discovered_round")
-    val hostNext = canonSeeds.map(UrlCanon.hostOf).distinct.toDF("host")
-      .withColumn("next_time", lit(0L))
+    val hosts = canonSeeds.map(UrlCanon.hostOf).distinct
+    // a local frame spreads over up to a partition per slot; writes follow rows
     val tablesFut = scope.track(Future(store.writeTables(0,
-      Map("frontier" -> frontier, "host_next" -> hostNext,
+      Map("frontier" -> frontier.coalesce(writeWidth(canonSeeds.size)),
+          "host_next" -> hosts.map((_, 0L)).toDF("host", "next_time")
+            .coalesce(writeWidth(hosts.size)),
           "crawl_log" -> spark.emptyDataset[graft.model.CrawlLogEntry].toDF(),
           "lineage" -> emptyLineage)))(ExecutionContext.global))
     val keyed = canonSeeds.toDF("canon").transform(bloomKeyed)
@@ -668,8 +680,7 @@ class FrontierEngine(spark: SparkSession, store: SnapshotStore,
     * Spark's `bucketBy` function), and its bloom key (xxhash64): bloom
     * shards align 1:1 with the buckets. */
   private[graft] def bloomKeyed(df: DataFrame): DataFrame =
-    df.withColumn("key", xxhash64($"canon"))
-      .withColumn("bshard", pmod(hash($"canon"), lit(cfg.seenShards)))
+    df.withColumn("key", xxhash64($"canon")).withColumn("bshard", bucketOf($"canon"))
 
   /** gate — robots (the codegen'd `robots_allows`; its rule source is
     * pluggable behind GateExprHelper). Blocked URLs enter seen, never the

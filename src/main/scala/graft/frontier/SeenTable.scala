@@ -19,8 +19,8 @@ import org.apache.spark.sql.functions._
   *
   * Layout: one table per store root at `<root>/seen_bucketed`, schema
   * (canon STRING, round INT). Each round appends exactly one file per
-  * bucket (the append repartitions by `canon`, or its caller routes whole
-  * buckets to each task, so every bucket's rows are in one task). Readers
+  * bucket: the caller routes whole buckets to each task, so every bucket's
+  * rows are in one task (the writer sorts a task's rows by bucket). Readers
   * filter `round <= v` — this is also the crash story: an append that landed
   * before a failed publish carries round r > committed version and is
   * invisible until round r actually commits; a re-run of round r appends
@@ -77,26 +77,15 @@ class SeenTable(spark: SparkSession, location: String, shards: Int,
     }
   }
 
-  /** Append one round's new canons (one file per bucket).
-    * `prePartitioned = true` skips the repartition when each of the
-    * caller's partitions already holds whole buckets (the engine's seen +
-    * bloom job routes buckets to its task slots and grows their blooms
-    * from the same rows). */
-  def append(canons: DataFrame, round: Int, prePartitioned: Boolean = false): Unit = {
-    val out0 = canons.select(col("canon"), lit(round).as("round"))
-    val out =
-      if (prePartitioned) out0
-      // HashPartitioning(canon, shards) == the bucket function: each task
-      // holds exactly one bucket -> one file per bucket per round
-      else out0.repartition(shards, col("canon"))
+  /** Append one round's new canons, one file per bucket. The caller routes
+    * whole buckets: all of a bucket's rows lie in one of `canons`' partitions. */
+  def append(canons: DataFrame, round: Int): Unit = {
+    val out = canons.select(col("canon"), lit(round).as("round"))
     ensure()
     val mode = if (spark.catalog.tableExists(tableName)) "append" else "overwrite"
-    // bucketed but NOT sorted: the dedup join is a SHUFFLE_HASH build on
-    // the seen bucket, so within-bucket order buys nothing — and the
-    // sorted write's per-task sorter was measured not to scale with cores
-    // (32 concurrent UnsafeExternalSorters contend in the kernel on this
-    // box; see the linkGraph write note). The writer sorts a task's rows
-    // only by bucket id, to write one file per bucket, never by canon.
+    // bucketed but NOT sorted by canon: the dedup join is a SHUFFLE_HASH
+    // build on the seen bucket, so within-bucket order buys nothing, and
+    // the sorted write did not scale with cores (see the linkGraph note)
     out.write.mode(mode).format("parquet")
       .option("compression", "zstd") // faster write + smaller scan (guide §6, A/B'd)
       .bucketBy(shards, "canon")

@@ -1,12 +1,13 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.graft.{CachedPlans, ListenerDrain}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated,
-  SparkListenerJobStart, SparkListenerStageSubmitted}
+  SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerStageSubmitted}
 import org.apache.spark.sql.functions.input_file_name
 import org.apache.spark.storage.RDDBlockId
 import org.apache.spark.util.sketch.BloomFilter
@@ -44,6 +45,8 @@ class RoundCacheSpec extends SparkSuite {
     linksPerDoc = 6, seed = 42L)
   private val budget = 3
   private val Wide = 64
+  /** The bucket id in a bucketed table's file name. */
+  private val Bucket = "_(\\d{5})\\.c\\d{3}".r.unanchored
 
   /** An engine on a new store whose seen buckets match the `Wide` shuffles. */
   private def wideEngine(): FrontierEngine = new FrontierEngine(spark,
@@ -144,6 +147,43 @@ class RoundCacheSpec extends SparkSuite {
     docs.unpersist()
   }}
 
+  test("the link graph is written by a task per slot into one file per bucket") { withWideShuffles {
+    val engine = wideEngine()
+    val docs = DocSynth.docs(spark, cfg).toDF()
+    val linkGraphStages = mutable.Set.empty[Int]
+    val writeTasks = mutable.Buffer.empty[Int]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == "link graph"))
+          linkGraphStages ++= e.stageIds
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        val si = e.stageInfo
+        if (linkGraphStages(si.stageId) && si.taskMetrics.outputMetrics.bytesWritten > 0)
+          writeTasks += si.numTasks
+      }
+    }
+    val sc = spark.sparkContext
+    ListenerDrain(sc)
+    sc.addSparkListener(listener)
+    try engine.run(docs, DocSynth.seeds(cfg), 0)
+    finally {
+      ListenerDrain(sc)
+      sc.removeSparkListener(listener)
+    }
+    assert(writeTasks === Seq(sc.defaultParallelism), "link graph write stages' tasks")
+
+    // each task owned two buckets, and still wrote each to a file of its own
+    val dir = Paths.get(engine.storeRoot, "links")
+    val files = Files.list(dir).iterator.asScala.map(_.getFileName.toString)
+      .filter(_.endsWith(".parquet")).toSeq
+    val buckets = files.map { case Bucket(b) => b.toInt; case f => fail(s"no bucket id: $f") }
+    assert(buckets.sorted === (0 until Wide), s"link graph files: ${files.sorted.mkString(", ")}")
+    spark.read.parquet(dir.toString).select($"doc_id", input_file_name())
+      .as[(String, String)].collect().foreach { case (d, Bucket(b)) =>
+        assert(UrlCanon.bucketOf(d, Wide) === b.toInt, s"$d in bucket file $b")
+      }
+  }}
+
   test("a crawl whose round caches are narrower than its shuffles ≡ oracle") { withWideShuffles {
     val engine = wideEngine()
     val docs = DocSynth.docs(spark, cfg).toDF().cache()
@@ -159,7 +199,6 @@ class RoundCacheSpec extends SparkSuite {
 
     // each round's append wrote at most one file per bucket, holding only
     // that bucket's canons, though every task owned two buckets
-    val Bucket = "_(\\d{5})\\.c\\d{3}".r.unanchored
     val rows = spark.read.parquet(s"${engine.storeRoot}/seen_bucketed")
       .select($"round", $"canon", input_file_name().as("file"))
       .as[(Int, String, String)].collect()

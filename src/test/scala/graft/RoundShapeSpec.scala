@@ -21,18 +21,22 @@ import graft.snapshots.SnapshotStore
 class RoundShapeSpec extends SparkSuite {
 
   /** The jobs (each named by the engine step that submitted it, its job
-    * description, and by its last stage), the completed stages' (name,
-    * tasks, RDD names), and how many of those stages scanned the seen
+    * description, and by its last stage), the completed stages' (step and
+    * name, tasks, RDD names), and how many of those stages scanned the seen
     * table's files, of `body`. */
   private def shapeOf(body: => Unit): (Seq[String], Seq[(String, Int, Seq[String])], Int) = {
     val sc = spark.sparkContext
     val jobs = new ConcurrentLinkedQueue[String]()
     val stages = new ConcurrentLinkedQueue[(String, Int, Seq[String])]()
+    val stepOf = new java.util.concurrent.ConcurrentHashMap[Int, String]()
     val seenScans = new java.util.concurrent.atomic.AtomicInteger()
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse("-") + " | " + e.stageInfos.maxBy(_.stageId).name)
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val step = Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse("-")
+        e.stageIds.foreach(stepOf.putIfAbsent(_, step))
+        jobs.add(step + " | " + e.stageInfos.maxBy(_.stageId).name)
+      }
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
         val si = e.stageInfo
         // a stage lists the narrow lineage of the caches it reads too; only
@@ -41,7 +45,7 @@ class RoundShapeSpec extends SparkSuite {
             i.name == "FileScanRDD" && i.scope.exists(_.name.contains("graft_seen_"))))
           seenScans.incrementAndGet()
         // RDD names of cached plans carry the whole plan: keep the class
-        stages.add((si.name, si.numTasks,
+        stages.add((stepOf.getOrDefault(si.stageId, "-") + " | " + si.name, si.numTasks,
           si.rddInfos.map(i => i.name.takeWhile(c => !c.isWhitespace) +
             i.scope.map(sc => s"[${sc.name}]").getOrElse(""))))
       }
@@ -87,6 +91,36 @@ class RoundShapeSpec extends SparkSuite {
     assert(stages.size <= 24, shape)
     assert(tasks <= 528, shape)
     docs.unpersist()
+  }
+
+  test("the set-up writes the link graph with a task per slot and init's tables with one") {
+    val cfg = DocSynth.Config(nHosts = 12, pagesPerHost = 30, hotFactor = 5,
+      linksPerDoc = 6, seed = 42L)
+    val store = new SnapshotStore(Files.createTempDirectory("graft-setup").toString)
+    val engineCfg = EngineConfig(perHostBudget = 3)
+    val engine = new FrontierEngine(spark, store, engineCfg)
+    val docs = DocSynth.docs(spark, cfg).toDF()
+    val (jobNames, stages, _) = shapeOf(engine.run(docs, DocSynth.seeds(cfg), 0))
+    val jobs = jobNames.size
+    val tasks = stages.map(_._2).sum
+    val shape = s"$jobs jobs, ${stages.size} stages, $tasks tasks:\n" +
+      jobNames.map(j => s"  job  $j").mkString("\n") + "\n" +
+      stages.map { case (n, t, _) => s"  $t  $n" }.mkString("\n")
+    info(shape)
+    def writeTasks(step: String): Seq[Int] = stages.collect {
+      case (n, t, rdds) if n.startsWith(s"$step | ") && rdds.exists(_.contains("[WriteFiles]")) => t
+    }
+    // the link graph's write runs a task per slot, each owning whole buckets;
+    // init's seed tables follow their rows (one task for a small seed list)
+    val slots = spark.sparkContext.defaultParallelism
+    assert(writeTasks("link graph") === Seq(math.min(engineCfg.seenShards, slots)), shape)
+    assert(writeTasks("write frontier") === Seq(1), shape)
+    assert(writeTasks("write host_next") === Seq(1), shape)
+    // pinned at the most the set-up submitted over five runs at local[32]
+    // (7/8/104 jobs/stages/tasks every time)
+    assert(jobs <= 7, shape)
+    assert(stages.size <= 8, shape)
+    assert(tasks <= 104, shape)
   }
 
   test("a round that opens bloom layers runs no more jobs than at the default capacity") {

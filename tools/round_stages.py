@@ -23,6 +23,24 @@ snapshot 0. The first is the measured crawl's own; `setup_s` is the median
 of the second and third, on fresh stores after round 1 and after the last
 round.
 
+With `--events`, each stage row also names the engine step that ran it:
+the Spark job description of the first job listing the stage (`link
+graph`, `seen+bloom`, `write <table>`, `counts`, `schedule+discover`),
+matched on stage id from a Spark event log of the same run. Record one by
+passing Spark's event-log settings to the benchmark's JVM, into an empty
+directory that exists before the run:
+
+    rm -rf /tmp/ev && mkdir -p /tmp/ev
+    JAVA_TOOL_OPTIONS="-Dspark.eventLog.enabled=true -Dspark.eventLog.compress=false \\
+      -Dspark.eventLog.dir=file:///tmp/ev" \\
+      python3 crawlbench/run.py --workload frontier-wide --seed 1001 --trace 1
+    python3 tools/round_stages.py --setup 2 --events /tmp/ev/eventlog_v2_local-* \\
+      crawlbench/out/frontier-wide-seed1001-trace1.trace.jsonl
+
+`--events` takes the log file, or the directory Spark writes when it rolls
+the log (`eventlog_v2_<app id>`, whose `events_<n>_*` files it reads in
+order).
+
 A catalog run times each query twice (two passes, the second in reverse
 order); `--query` prints both, labelled `NAME#1` and `NAME#2`. With several
 files, `--totals` prints one totals row per file and operation, so two
@@ -30,6 +48,7 @@ commits' runs on the same seed compare side by side.
 """
 import argparse
 import json
+import os
 import sys
 
 MB = 1e6
@@ -42,6 +61,28 @@ def load(path):
             rec = json.loads(line)
             (stages if "stage" in rec else spans).append(rec)
     return spans, stages
+
+
+def job_steps(path):
+    """Stage id -> the description of the first job that lists the stage,
+    from a Spark event log (a file, or a rolled log's directory)."""
+    if os.path.isdir(path):
+        parts = [f for f in os.listdir(path) if f.startswith("events_")]
+        files = [os.path.join(path, f)
+                 for f in sorted(parts, key=lambda f: int(f.split("_")[1]))]
+    else:
+        files = [path]
+    steps = {}
+    for f in files:
+        with open(f) as fh:
+            for line in fh:
+                if '"SparkListenerJobStart"' not in line:
+                    continue
+                ev = json.loads(line)
+                what = (ev.get("Properties") or {}).get("spark.job.description", "-")
+                for sid in ev["Stage IDs"]:
+                    steps.setdefault(sid, what)
+    return steps
 
 
 def ops_of(spans, run, rnd, query, setup):
@@ -100,18 +141,20 @@ def fmt(v):
     return f"{v:d}" if isinstance(v, int) else f"{v:.3f}"
 
 
-def timeline(what, op, stages):
+def timeline(what, op, stages, steps=None):
     t0 = op["start_ms"]
     print(f"{what}  wall {op['dur_ms'] / 1e3:.3f} s")
     head = ["stage", "submit_s", "done_s", "dur_s", "tasks", "task_s", "cpu_s",
             "in_mb", "shw_mb", "shr_mb", "out_mb"]
-    print("  " + " ".join(f"{h:>8}" for h in head))
+    job = "  job" if steps is not None else ""
+    print("  " + " ".join(f"{h:>8}" for h in head) + job)
     for s in stages:
         row = [s["stage"], (s["submitted_ms"] - t0) / 1e3, (s["completed_ms"] - t0) / 1e3,
                (s["completed_ms"] - s["submitted_ms"]) / 1e3, s["tasks"], s["task_s"],
                s["cpu_s"], s["input_b"] / MB, s["shuffle_write_b"] / MB,
                s["shuffle_read_b"] / MB, s["output_b"] / MB]
-        print("  " + " ".join(f"{fmt(v):>8}" for v in row))
+        job = f"  {steps.get(s['stage'], '?')}" if steps is not None else ""
+        print("  " + " ".join(f"{fmt(v):>8}" for v in row) + job)
     t = totals(op, stages)
     print("  total: " + ", ".join(f"{k} {fmt(t[k])}" for k in TOTAL_COLS))
 
@@ -130,7 +173,11 @@ def main():
                     help="span run id (0 = the measured crawl; default 0)")
     ap.add_argument("--totals", action="store_true",
                     help="one totals row per file and round instead of timelines")
+    ap.add_argument("--events", default=None,
+                    help="Spark event log of the same run (file or rolled-log directory): "
+                         "adds each stage's job description")
     a = ap.parse_args()
+    steps = job_steps(a.events) if a.events else None
     kind = "query" if a.query is not None else "setup" if a.setup is not None else "round"
     width = 5 if a.query is None else len(a.query) + 2
     if a.totals:
@@ -150,7 +197,7 @@ def main():
                       " ".join(f"{fmt(t[c]):>8}" for c in TOTAL_COLS))
             else:
                 print(f"== {path}")
-                timeline(f"{kind} {label}", op, mine)
+                timeline(f"{kind} {label}", op, mine, steps)
     if not found:
         sys.exit(f"no matching {kind} span in " + ", ".join(a.traces))
 
